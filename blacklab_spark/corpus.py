@@ -308,7 +308,11 @@ class Corpus:
         return [desensitize_py(t) for t in re.findall(pat, text)]
 
     def topk(self, query: str, k: int = 10, filter_expr: str | None = None) -> DataFrame:
-        """Top-k BM25 over the postings (segment-parallel kernel).
+        """Top-k BM25 over the postings: a batch of one through the
+        per-segment scorer batch_topk runs. The plan follows the input:
+        with a filter or tombstones, each segment's doc set (the
+        filter's allowed docs, else the tombstones) cogroups into its
+        scoring task; otherwise a plain per-segment groupBy.
 
         For display-sized k (≤ bm25.DRIVER_HYDRATE_MAX_K) the result is
         hydrated eagerly — the returned DataFrame wraps k local rows and
@@ -328,7 +332,9 @@ class Corpus:
 
     def batch_topk(self, queries: list[str], k: int = 10) -> DataFrame:
         """Top-k BM25 for many queries in one job (reference
-        tools/.../performance/BatchQuery.java analogue)."""
+        tools/.../performance/BatchQuery.java analogue): the same
+        per-segment scorer and plan choice as topk, every query scored
+        against each segment's blocks, decoded once and shared."""
         from blacklab_spark.search.bm25 import batch_topk
 
         return batch_topk(self, queries, k=k)

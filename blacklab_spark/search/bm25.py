@@ -8,15 +8,20 @@ reference search/BlackLabIndexAbstract.java:496,619). Our execution:
    table that is tiny relative to the corpus),
 2. prune the postings scan to the query term_ids — parquet predicate
    pushdown means only those blocks' bytes are read,
-3. one vectorized numpy kernel per *segment* (Spark's analogue of
-   Lucene's one-SpansReader-per-segment parallelism,
-   HitsFromQuery.java:109-194): MaxScore-style term-at-a-time scoring
-   with block-max skipping — terms in desc max-contribution order, θ =
-   running k-th best, blocks skipped when their stored max impact
-   cannot reach/tie θ or when their [min_doc,max_doc] range holds no
-   remaining candidate — then a per-segment exact top-k,
+3. one per-segment scorer (_segment_topk; Spark's analogue of Lucene's
+   one-SpansReader-per-segment parallelism, HitsFromQuery.java:109-194)
+   for topk_bm25 (a batch of one) and batch_topk alike: per query, a
+   vectorized MaxScore-style term-at-a-time kernel with block-max
+   skipping — terms in desc max-contribution order, θ = running k-th
+   best, blocks skipped when their stored max impact cannot reach/tie
+   θ or when their [min_doc,max_doc] range holds no remaining
+   candidate — over memoized block decodes, then a per-segment exact
+   top-k. Two plans, chosen from the input: a cogroup with one
+   per-segment doc set (a metadata filter's allowed docs, else the
+   tombstones), or the plain segment-partitioned groupBy,
 4. global top-k merge: orderBy(desc(score), doc_id).limit(k) over the
-   tiny union of per-segment candidates (TakeOrderedAndProject).
+   tiny union of per-segment candidates (TakeOrderedAndProject;
+   batch_topk takes a row_number window per query instead).
 
 Scale: step 3's input shuffle moves only the query terms' postings
 (KBs..MBs, not the index); step 4 moves ≤ k rows per segment.
@@ -28,6 +33,8 @@ doc_id — the exact-arithmetic oracle contract (SURVEY.md §2.5).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -38,6 +45,14 @@ from blacklab_spark.index import codec
 # instead of materializing k full-text rows on the driver — maxretrieve-
 # scale requests must not shift O(k·doc_text) onto the driver
 DRIVER_HYDRATE_MAX_K = 1024
+
+# _segment_topk's output: every segment's top-k rows per query
+_SEG_SCHEMA = "query_id int, doc_id long, score double"
+_EMPTY_SEG = pd.DataFrame(
+    {"query_id": pd.Series([], dtype=np.int32),
+     "doc_id": pd.Series([], dtype=np.int64),
+     "score": pd.Series([], dtype=np.float64)}
+)
 
 
 def _maxscore_query(
@@ -72,8 +87,8 @@ def _maxscore_query(
 
     ``blocks_by_term`` maps term -> (block rows, max block_max_wtf_raw);
     ``decode_block(term, block_idx, row) -> (local_doc_ids, w_base)``
-    returns idf-independent weights (batch memoizes it so shared blocks
-    decode once across queries). Tombstoned docs (``seg_dead_arr``,
+    returns idf-independent weights (memoized per segment, so a block
+    a batch's queries share decodes once). Tombstoned docs (``seg_dead_arr``,
     local ids) are zeroed as we go so they never contribute to θ
     (they'd cause over-pruning of live candidates)."""
     items = []
@@ -153,6 +168,135 @@ def _seg_partitioned(corpus, posts: DataFrame) -> DataFrame:
     return posts.repartition(min(n_segments, 8 * par), "segment_id")
 
 
+def _idf_maps(corpus, term_lists: list[list[str]]) -> list[dict[str, float]]:
+    """Per query {term: weighted idf} over the terms the dict knows.
+    Repeated query terms accumulate idf weight, like Lucene's
+    BooleanQuery with duplicate clauses; idf comes from LIVE stats
+    (appends/compactions change N and df — stored per-block maxima are
+    idf-independent for this reason)."""
+    n_docs = corpus.meta["n_docs"]
+    counts = [Counter(terms) for terms in term_lists]
+    all_terms = sorted({t for c in counts for t in c})
+    tinfo = corpus.term_stats(all_terms) if all_terms else {}
+    return [
+        {
+            t: qtf * float(np.log(1.0 + (n_docs - tinfo[t] + 0.5) / (tinfo[t] + 0.5)))
+            for t, qtf in c.items()
+            if t in tinfo
+        }
+        for c in counts
+    ]
+
+
+def _segment_topk(corpus, idf_maps: list[dict], k: int,
+                  allowed_df: DataFrame | None = None) -> DataFrame:
+    """(query_id, doc_id, score): every segment's exact top-k for every
+    query in ``idf_maps``, scored by ONE per-segment function.
+
+    The scorer runs the MaxScore/block-max kernel (_maxscore_query) per
+    query over shared block state: blocks are decoded lazily and
+    memoized, so a block several queries need decodes once and a block
+    no query's θ bound reaches is never decoded. One dense seg_size
+    accumulator serves every query and is reset candidate-
+    proportionally (scores[nz] = 0) between queries — no per-query
+    memset.
+
+    Plan, chosen from the input: with a per-segment doc set — the
+    filter's allowed docs (``allowed_df``, segment_id/doc_id; doc_stats
+    already excludes tombstones), else the tombstones (liveDocs
+    analogue) — the postings cogroup with it, so the set ships straight
+    into its segment's scoring task and never visits the driver
+    (reference SpansFiltered.java:17-60 builds an acceptedDocs bitset
+    per segment). Without one, the plain segment-partitioned groupBy.
+    Tombstones are zeroed before per-segment selection so dead docs
+    can't crowd out live candidates."""
+    meta = corpus.meta
+    seg_size = meta["segment_size"]
+    k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
+    posts = corpus.postings.filter(
+        F.col("term").isin(sorted({t for m in idf_maps for t in m}))
+    ).select(
+        "segment_id", "term", "min_doc", "max_doc",
+        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
+    )
+    filtered = allowed_df is not None
+    doc_set = allowed_df
+    if not filtered:
+        # read once: each access of corpus.deletes is a parquet read job
+        dels = corpus.deletes
+        if dels is not None:
+            doc_set = dels.select(
+                F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
+            )
+    b_q = corpus.spark.sparkContext.broadcast(idf_maps)
+
+    def score_segment(pdf: pd.DataFrame, docs: np.ndarray | None) -> pd.DataFrame:
+        base = int(pdf["segment_id"].iloc[0]) * seg_size
+        blocks_by_term = {
+            term: (rows := list(grp.itertuples(index=False)),
+                   max(r.block_max_wtf_raw for r in rows))
+            for term, grp in pdf.groupby("term")
+        }
+        allow_arr = docs if filtered else None
+        seg_dead_arr = (
+            docs[(docs >= base) & (docs < base + seg_size)] - base
+            if docs is not None and not filtered
+            else np.asarray([], dtype=np.int64)
+        )
+        decoded: dict[tuple, tuple] = {}
+
+        def decode_block(t, bi, r):
+            got = decoded.get((t, bi))
+            if got is None:
+                dids = codec.decode_doc_ids(r.doc_ids)
+                tf = codec.decode_freqs(r.freqs)
+                dl = codec.decode_freqs(r.dls)
+                got = (dids - base,
+                       tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl)))
+                decoded[(t, bi)] = got
+            return got
+
+        scores = np.zeros(seg_size, dtype=np.float64)
+        out_q, out_d, out_s = [], [], []
+        for qid, idf_map in enumerate(b_q.value):
+            _maxscore_query(scores, blocks_by_term, idf_map, k, base,
+                            seg_size, allow_arr, seg_dead_arr, decode_block)
+            sel = _topk_select(scores, k)
+            if sel.size:
+                out_q.append(np.full(sel.size, qid, dtype=np.int32))
+                out_d.append((sel + base).astype(np.int64))
+                out_s.append(scores[sel].copy())
+            nz = np.flatnonzero(scores)
+            if nz.size:
+                scores[nz] = 0.0
+        if not out_q:
+            return _EMPTY_SEG
+        return pd.DataFrame(
+            {"query_id": np.concatenate(out_q),
+             "doc_id": np.concatenate(out_d),
+             "score": np.concatenate(out_s)}
+        )
+
+    if doc_set is None:
+        # single-arg lambda: a two-arg function would be called with
+        # (key, pdf)
+        return _seg_partitioned(corpus, posts).groupBy("segment_id").applyInPandas(
+            lambda pdf: score_segment(pdf, None), schema=_SEG_SCHEMA
+        )
+
+    def score_with_docs(posts_pdf: pd.DataFrame,
+                        docs_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(posts_pdf) == 0 or (filtered and len(docs_pdf) == 0):
+            return _EMPTY_SEG
+        return score_segment(posts_pdf, docs_pdf["doc_id"].to_numpy(np.int64))
+
+    return (
+        posts.groupBy("segment_id")
+        .cogroup(doc_set.groupBy("segment_id"))
+        .applyInPandas(score_with_docs, schema=_SEG_SCHEMA)
+    )
+
+
 def topk_bm25(
     corpus,
     query: str,
@@ -160,161 +304,29 @@ def topk_bm25(
     filter_expr: str | None = None,
 ) -> DataFrame:
     """Returns DataFrame (doc_id, score, conv_id, turn_idx, role, tool,
-    text) — top-k by (score desc, doc_id asc)."""
+    text) — top-k by (score desc, doc_id asc): a batch of one through
+    _segment_topk, then a global top-k merge and hydration."""
     spark = corpus.spark
-    meta = corpus.meta
-    qterms = corpus.tokenize_query(query)
-    out_schema = "doc_id long, score double"
-
-    def empty():
-        # no-match results carry the SAME hydrated schema as hits
-        hyd = corpus.tokenized.select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
-        )
-        sch = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-            + [f for f in hyd.schema.fields if f.name != "doc_id"]
-        )
-        return spark.createDataFrame([], sch)
-
-    if not qterms:
-        return empty()
-
-    tinfo = corpus.term_stats(qterms)
-    if not tinfo:
-        return empty()
-    n_docs = meta["n_docs"]
-    # repeated query terms accumulate idf weight, like Lucene's
-    # BooleanQuery with duplicate clauses; idf comes from LIVE stats
-    # (appends/compactions change N and df — stored per-block maxima
-    # are idf-independent for this reason)
-    from collections import Counter
-
-    qcount = Counter(qterms)
-    idf_by_term = {
-        t: qcount[t]
-        * float(np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5)))
-        for t, df_ in tinfo.items()
-    }
-
-    posts = corpus.postings.filter(
-        F.col("term").isin(list(idf_by_term))
-    ).select(
-        "segment_id", "term", "min_doc", "max_doc",
-        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
+    hyd_src = corpus.tokenized.select(
+        "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
     )
-
-    allowed_df = None
-    if filter_expr:
-        # metadata filter -> DISTRIBUTED per-segment doc set (reference
-        # SpanQueryFiltered builds an acceptedDocs bitset per segment,
-        # SpansFiltered.java:17-60 — never a driver-global set). The
-        # cogroup below ships each segment's allowed doc_ids straight
-        # into that segment's scoring task; the filter never visits the
-        # driver, so there is no size cliff. doc_stats already excludes
-        # tombstoned docs, so deletes need no separate handling here.
-        allowed_df = corpus.doc_stats.filter(filter_expr).select(
-            "segment_id", "doc_id"
-        )
-
-    # tombstones (liveDocs analogue): excluded before per-segment top-k
-    # selection so tombstoned docs can't crowd out live candidates.
-    # DISTRIBUTED: each segment's tombstones cogroup into that segment's
-    # scoring task (same pattern as the metadata filter) — the delete
-    # set never visits the driver, so a large tombstone table cannot
-    # bloat a broadcast. When a metadata filter is present, doc_stats
-    # already excludes tombstoned docs, so deletes need no handling.
-    dels = corpus.deletes
-    dead_df = None
-    if dels is not None and allowed_df is None:
-        dead_df = dels.select(
-            F.expr(f"doc_id DIV {meta['segment_size']}").alias("segment_id"),
-            "doc_id",
-        )
-
-    k1, b_ = meta["k1"], meta["b"]
-    avgdl = meta["avgdl"]
-    seg_size = meta["segment_size"]
-    b_idf = spark.sparkContext.broadcast(idf_by_term)
-
-    def _score_segment(pdf: pd.DataFrame, allow_arr, dead_arr=None) -> pd.DataFrame:
-        idf = b_idf.value
-        seg = int(pdf["segment_id"].iloc[0])
-        base = seg * seg_size
-        scores = np.zeros(seg_size, dtype=np.float64)
-        blocks_by_term = {
-            term: (rows := list(grp.itertuples(index=False)),
-                   max(r.block_max_wtf_raw for r in rows))
-            for term, grp in pdf.groupby("term")
-        }
-        seg_dead_arr = (
-            np.asarray([], dtype=np.int64)
-            if dead_arr is None
-            else (dead_arr[(dead_arr >= base) & (dead_arr < base + seg_size)] - base)
-        )
-
-        def decode_block(t, bi, r):
-            dids = codec.decode_doc_ids(r.doc_ids)
-            tf = codec.decode_freqs(r.freqs)
-            dl = codec.decode_freqs(r.dls)
-            return dids - base, tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl))
-
-        _maxscore_query(scores, blocks_by_term, idf, k, base, seg_size,
-                        allow_arr, seg_dead_arr, decode_block)
-        sel = _topk_select(scores, k)
-        if sel.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({"doc_id": (sel + base).astype(np.int64),
-                             "score": scores[sel]})
-
-    if allowed_df is not None:
-        _empty = pd.DataFrame(
-            {"doc_id": pd.Series([], dtype=np.int64),
-             "score": pd.Series([], dtype=np.float64)}
-        )
-
-        def score_cogrouped(posts_pdf: pd.DataFrame,
-                            allowed_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0 or len(allowed_pdf) == 0:
-                return _empty
-            allow = allowed_pdf["doc_id"].to_numpy(np.int64)
-            return _score_segment(posts_pdf, allow)
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(allowed_df.groupBy("segment_id"))
-            .applyInPandas(score_cogrouped, schema=out_schema)
-        )
-    elif dead_df is not None:
-
-        def score_with_dead(posts_pdf: pd.DataFrame,
-                            dead_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype=np.int64),
-                     "score": pd.Series([], dtype=np.float64)}
-                )
-            dead_arr = dead_pdf["doc_id"].to_numpy(np.int64)
-            return _score_segment(posts_pdf, None, dead_arr)
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(dead_df.groupBy("segment_id"))
-            .applyInPandas(score_with_dead, schema=out_schema)
-        )
-    else:
-        # single-arg wrapper: applyInPandas treats a two-arg function
-        # as (key, pdf)
-        def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_segment(pdf, None)
-
-        per_seg = _seg_partitioned(corpus, posts).groupBy(
-            "segment_id"
-        ).applyInPandas(score_segment, schema=out_schema)
+    # no-match results carry the SAME hydrated schema as hits
+    full_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("score", T.DoubleType()),
+        ]
+        + [f for f in hyd_src.schema.fields if f.name != "doc_id"]
+    )
+    meta_cols = [f.name for f in full_schema.fields[2:]]
+    idf = _idf_maps(corpus, [corpus.tokenize_query(query)])[0]
+    if not idf:
+        return spark.createDataFrame([], full_schema)
+    allowed_df = (
+        corpus.doc_stats.filter(filter_expr).select("segment_id", "doc_id")
+        if filter_expr
+        else None
+    )
     # global top-k merge (TakeOrderedAndProject over <=k rows/segment),
     # then hydrate metadata for just those k docs: the isin filter is
     # pushed into the tokenized parquet scan (row-group pruning), so
@@ -324,30 +336,23 @@ def topk_bm25(
     # scan job instead of a broadcast-join+sort plan — per-query latency
     # is floor-bound by Spark job count, and display decoration of k
     # rows is O(k).
-    hyd_src = corpus.tokenized.select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
+    top = (
+        _segment_topk(corpus, [idf], k, allowed_df)
+        .select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
     if k > DRIVER_HYDRATE_MAX_K:
         # maxretrieve-scale k: stay lazy and distributed — broadcast the
         # ≤k score rows into the tokenized scan so no full-text row ever
         # lands on the driver, and callers keep pushdown/projection on
         # the returned plan
-        top = per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        meta_cols = [f.name for f in hyd_src.schema.fields
-                     if f.name != "doc_id"]
         return (
             hyd_src.join(F.broadcast(top), "doc_id")
             .select("doc_id", "score", *meta_cols)
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-    top_rows = per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    full_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-        + [f for f in hyd_src.schema.fields if f.name != "doc_id"]
-    )
+    top_rows = top.collect()
     if not top_rows:
         return spark.createDataFrame([], full_schema)
     ids = [int(r["doc_id"]) for r in top_rows]
@@ -355,7 +360,6 @@ def topk_bm25(
         r["doc_id"]: r
         for r in hyd_src.filter(F.col("doc_id").isin(ids)).collect()
     }
-    meta_cols = [f.name for f in full_schema.fields[2:]]
     rows = [
         tuple(
             [int(r["doc_id"]), float(r["score"])]
@@ -414,151 +418,24 @@ def batch_topk(corpus, queries: list[str], k: int = 10) -> "DataFrame":
     same idea as a perf harness: tools/.../performance/BatchQuery.java).
 
     One postings scan covers the union of all query terms (parquet
-    pushdown on the term column), one per-segment kernel scores every
-    query against its blocks, and one window takes global top-k per
-    query. Amortizes per-job overhead across the whole batch — the
-    honest way to measure query THROUGHPUT at scale.
+    pushdown on the term column), the per-segment scorer topk_bm25 runs
+    too (_segment_topk) scores every query against its blocks, and one
+    window takes global top-k per query. Amortizes per-job overhead
+    across the whole batch — the honest way to measure query THROUGHPUT
+    at scale.
 
     Returns (query_id, doc_id, score) with k rows per query, ordered
     (score desc, doc_id asc) within each query.
     """
     from pyspark.sql import Window
 
-    spark = corpus.spark
-    meta = corpus.meta
-    n_docs = meta["n_docs"]
-    out_schema = "query_id int, doc_id long, score double"
-
-    from collections import Counter
-
-    qterm_counts = [Counter(corpus.tokenize_query(q)) for q in queries]
-    all_terms = sorted({t for qc in qterm_counts for t in qc})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema)
-    tinfo = corpus.term_stats(all_terms)
-    # per-query {term: weighted idf}
-    idf_by_query: list[dict[str, float]] = []
-    for qc in qterm_counts:
-        m = {}
-        for t, qtf in qc.items():
-            if t in tinfo:
-                df_ = tinfo[t]
-                m[t] = qtf * float(
-                    np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
-                )
-        idf_by_query.append(m)
-    live_terms = sorted({t for m in idf_by_query for t in m})
-    if not live_terms:
-        return spark.createDataFrame([], out_schema)
-
-    posts = corpus.postings.filter(F.col("term").isin(live_terms)).select(
-        "segment_id", "term", "min_doc", "max_doc",
-        "doc_ids", "freqs", "dls", "block_max_wtf_raw",
-    )
-    k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
-    seg_size = meta["segment_size"]
-    # tombstones cogroup per segment (no driver collect / broadcast)
-    dels = corpus.deletes
-    dead_df = (
-        dels.select(
-            F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
-        )
-        if dels is not None
-        else None
-    )
-    b_q = spark.sparkContext.broadcast(idf_by_query)
-
-    def score_segment(pdf: pd.DataFrame, dead_arr=None) -> pd.DataFrame:
-        """Batch scorer = the SAME MaxScore/block-max kernel as the
-        single-query path (_maxscore_query), run per query over shared
-        block state: blocks are decoded lazily and memoized, so a block
-        several queries need decodes ONCE, and a block no query's θ
-        bound ever reaches is never decoded at all. The former batch
-        kernel decoded every block of every query term — fine for small
-        batches, but a head-term-heavy batch at 100x decodes whole
-        head-term posting lists; the θ/candidate-range skips prune them.
-        One dense seg_size accumulator is shared by all queries and
-        reset candidate-proportionally (scores[nz] = 0) between queries
-        — no per-query memset."""
-        seg = int(pdf["segment_id"].iloc[0])
-        base = seg * seg_size
-        blocks_by_term = {
-            term: (rows := list(grp.itertuples(index=False)),
-                   max(r.block_max_wtf_raw for r in rows))
-            for term, grp in pdf.groupby("term")
-        }
-        seg_dead_arr = (
-            np.asarray([], dtype=np.int64)
-            if dead_arr is None
-            else (dead_arr[(dead_arr >= base) & (dead_arr < base + seg_size)] - base)
-        )
-        decoded: dict[tuple, tuple] = {}
-
-        def decode_block(t, bi, r):
-            got = decoded.get((t, bi))
-            if got is None:
-                dids = codec.decode_doc_ids(r.doc_ids)
-                tf = codec.decode_freqs(r.freqs)
-                dl = codec.decode_freqs(r.dls)
-                got = (dids - base,
-                       tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl)))
-                decoded[(t, bi)] = got
-            return got
-
-        scores = np.zeros(seg_size, dtype=np.float64)
-        out_q, out_d, out_s = [], [], []
-        for qid, idf_map in enumerate(b_q.value):
-            _maxscore_query(scores, blocks_by_term, idf_map, k, base,
-                            seg_size, None, seg_dead_arr, decode_block)
-            sel = _topk_select(scores, k)
-            if sel.size:
-                out_q.append(np.full(sel.size, qid, dtype=np.int32))
-                out_d.append((sel + base).astype(np.int64))
-                out_s.append(scores[sel].copy())
-            nz = np.flatnonzero(scores)
-            if nz.size:
-                scores[nz] = 0.0
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype=np.int32),
-                 "doc_id": pd.Series([], dtype=np.int64),
-                 "score": pd.Series([], dtype=np.float64)}
-            )
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q),
-             "doc_id": np.concatenate(out_d),
-             "score": np.concatenate(out_s)}
-        )
-
-    if dead_df is not None:
-        _empty_b = pd.DataFrame(
-            {"query_id": pd.Series([], dtype=np.int32),
-             "doc_id": pd.Series([], dtype=np.int64),
-             "score": pd.Series([], dtype=np.float64)}
-        )
-
-        def score_with_dead(posts_pdf: pd.DataFrame,
-                            dead_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(posts_pdf) == 0:
-                return _empty_b
-            return score_segment(
-                posts_pdf, dead_pdf["doc_id"].to_numpy(np.int64)
-            )
-
-        per_seg = (
-            posts.groupBy("segment_id")
-            .cogroup(dead_df.groupBy("segment_id"))
-            .applyInPandas(score_with_dead, schema=out_schema)
-        )
-    else:
-        # single-arg wrapper: applyInPandas treats a two-arg function
-        # as (key, pdf)
-        per_seg = _seg_partitioned(corpus, posts).groupBy(
-            "segment_id"
-        ).applyInPandas(lambda pdf: score_segment(pdf), schema=out_schema)
+    idf_maps = _idf_maps(corpus, [corpus.tokenize_query(q) for q in queries])
+    if not any(idf_maps):
+        return corpus.spark.createDataFrame([], _SEG_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        per_seg.withColumn("_rn", F.row_number().over(w))
+        _segment_topk(corpus, idf_maps, k)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
         .orderBy("query_id", F.desc("score"), F.asc("doc_id"))

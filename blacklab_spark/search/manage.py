@@ -82,7 +82,9 @@ FORMAT_INFO: dict[str, tuple[str, str]] = {
                    "The reference's own test corpus format."),
 }
 
-_NAME_RE = re.compile(r"^[\w.:@-]+$")
+# a name made only of dots ('.', '..') would address the user area or
+# its parent as a corpus directory
+_NAME_RE = re.compile(r"^(?!\.+$)[\w.:@-]+$")
 
 
 def formats_response(user_formats: dict | None = None,
@@ -396,8 +398,11 @@ class IndexManager:
                     self.spark, os.path.join(self.user_dir, d)
                 )
 
-    def _dirname(self, name: str) -> str:
-        return os.path.join(self.user_dir, name.replace(":", "__"))
+    def _dirname(self, name: str) -> str | None:
+        """The corpus directory of ``name``: a direct child of
+        ``user_dir`` once symlinks and dots resolve, else None."""
+        d = os.path.realpath(os.path.join(self.user_dir, name.replace(":", "__")))
+        return d if os.path.dirname(d) == os.path.realpath(self.user_dir) else None
 
     # ---- access control ---------------------------------------------------
     def _owner(self, name: str) -> str | None:
@@ -447,7 +452,8 @@ class IndexManager:
         from blacklab_spark.search.webservice import RESERVED_NAMES
 
         name = q.get("name") or ""
-        if not name or not _NAME_RE.match(name) or name in RESERVED_NAMES:
+        d = self._dirname(name) if _NAME_RE.match(name) else None
+        if d is None or name in RESERVED_NAMES:
             return 400, error_response(
                 "ILLEGAL_INDEX_NAME",
                 "You didn't specify a valid name parameter.",
@@ -461,7 +467,6 @@ class IndexManager:
             return 400, error_response(
                 "FORMAT_NOT_FOUND", f"Unknown input format '{fmt}'."
             )
-        d = self._dirname(name)
         os.makedirs(d, exist_ok=True)
         desc = {"name": name, "format": fmt,
                 "display": q.get("display") or name}

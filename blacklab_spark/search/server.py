@@ -134,6 +134,12 @@ def _summary_common(search_param: dict, first: int, number: int,
     }
 
 
+def _sum0(col: str):
+    """Sum of a group-count column that reads 0, not null, over zero
+    groups: a pattern without hits reports numberOfHits = 0."""
+    return F.coalesce(F.sum(col), F.lit(0))
+
+
 def _num_hits(hits_df) -> tuple[int, int]:
     """(numberOfHits, numberOfDocs) in ONE aggregation job."""
     row = hits_df.agg(
@@ -201,9 +207,12 @@ def hits_response(
         # doc total, largest group
         totals = gdf.agg(
             F.count(F.lit(1)).alias("g"),
-            F.sum(size_col).alias("h"),
+            _sum0(size_col).alias("h"),
             F.max(size_col).alias("mx"),
-            (F.sum("n_docs") if "n_docs" in cols else F.lit(None)).alias("d"),
+            # without an n_docs column the doc total is unknown, except
+            # that zero groups hold zero docs
+            (_sum0("n_docs") if "n_docs" in cols
+             else F.when(F.count(F.lit(1)) == 0, 0)).alias("d"),
         ).collect()[0]
         groups = []
         for r in page:
@@ -357,8 +366,8 @@ def _hits_grouped_with_contents(corpus, patt, group, echo, first, number,
     page = gdf.offset(first).limit(number).collect() \
         if first else gdf.limit(number).collect()
     totals = gdf.agg(
-        F.count(F.lit(1)).alias("g"), F.sum("size").alias("h"),
-        F.max("size").alias("mx"), F.sum("n_docs").alias("d"),
+        F.count(F.lit(1)).alias("g"), _sum0("size").alias("h"),
+        F.max("size").alias("mx"), _sum0("n_docs").alias("d"),
     ).collect()[0]
 
     # stored hits: restrict to the PAGE's groups first (a corpus can
@@ -596,8 +605,8 @@ def _docs_grouped(corpus, patt, group, echo, first, number, t0,
     page = gdf.offset(first).limit(number).collect() \
         if first else gdf.limit(number).collect()
     totals = gdf.agg(
-        F.count(F.lit(1)).alias("g"), F.sum("size").alias("d"),
-        F.max("size").alias("mx"), F.sum("hits").alias("h"),
+        F.count(F.lit(1)).alias("g"), _sum0("size").alias("d"),
+        F.max("size").alias("mx"), _sum0("hits").alias("h"),
     ).collect()[0]
     groups = []
     for r in page:

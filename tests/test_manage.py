@@ -8,6 +8,7 @@ user input formats."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.error
 import urllib.request
 
@@ -157,10 +158,19 @@ def test_upload_without_create(mgd):
 
 
 def test_bad_corpus_name(mgd):
-    status, body = mgd("POST", "/", b"name=bad%20name&format=txt",
-                       "application/x-www-form-urlencoded")
-    assert status == 400
-    assert body["error"]["code"] == "ILLEGAL_INDEX_NAME"
+    # names made only of dots would address the user area or its parent
+    for name in (b"bad%20name", b"..", b"."):
+        status, body = mgd("POST", "/", b"name=" + name + b"&format=txt",
+                           "application/x-www-form-urlencoded")
+        assert status == 400, name
+        assert body["error"]["code"] == "ILLEGAL_INDEX_NAME"
+    # ... and deleting one removes nothing
+    parent = os.path.dirname(mgd.user_dir)
+    before = sorted(os.listdir(parent)), sorted(os.listdir(mgd.user_dir))
+    status, _ = mgd("DELETE", "/..")
+    assert status in (403, 404)
+    assert (sorted(os.listdir(parent)), sorted(os.listdir(mgd.user_dir))) \
+        == before
     status, body = mgd("POST", "/", b"name=ok&format=nosuch",
                        "application/x-www-form-urlencoded")
     assert status == 400

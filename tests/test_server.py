@@ -122,6 +122,25 @@ def test_hits_grouped_envelope(small_corpus):
     assert resp["summary"]["largestGroupSize"] == sizes[0]
 
 
+def test_grouped_envelopes_without_hits(small_corpus):
+    """A pattern without hits has zero groups, and its totals read 0,
+    not null (a SQL sum over zero rows is null)."""
+    corpus, _ = small_corpus
+    patt = '"zzzznotaword"'
+    for resp, key in (
+        (hits_response(corpus, patt, group="field:role"), "hitGroups"),
+        (hits_response(corpus, patt, group="field:role",
+                       includegroupcontents=True), "hitGroups"),
+        (docs_response(corpus, patt, group="field:role"), "docGroups"),
+    ):
+        assert resp[key] == []
+        s = resp["summary"]
+        assert s["numberOfGroups"] == 0 and s["largestGroupSize"] == 0
+        for n in ("numberOfHits", "numberOfHitsRetrieved",
+                  "numberOfDocs", "numberOfDocsRetrieved"):
+            assert s[n] == 0, (key, n, s[n])
+
+
 def test_colloc_envelope(small_corpus):
     corpus, _ = small_corpus
     resp = hits_response(corpus, '"word00001"', calc="colloc",
