@@ -156,41 +156,3 @@ def py_tokenize(text: str, pattern: str = TOKEN_PATTERN) -> list[str]:
 
 def py_tokenize_insensitive(text: str, pattern: str = TOKEN_PATTERN) -> list[str]:
     return [desensitize_py(t) for t in py_tokenize(text, pattern)]
-
-
-def icu_available() -> bool:
-    """True when PyICU is importable (optional dependency, never
-    required: every collation path keeps a deterministic fallback)."""
-    try:
-        import icu  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def icu_sort_key_col(col: Column | str) -> Column | None:
-    """ICU TERTIARY sort keys as a binary Column (reference
-    Collators.java:28-33: the sensitive collator is the default-locale
-    collator at TERTIARY strength), or None when PyICU is absent —
-    callers fall back to the documented two-strength fold scheme.
-
-    Arrow-batched pandas UDF; ICU sort keys are unsigned byte strings
-    and Spark orders BinaryType lexicographically unsigned, so
-    orderBy(key) reproduces the collator's compare() order exactly."""
-    if not icu_available():
-        return None
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _key(s):
-        import icu
-
-        coll = icu.Collator.createInstance(icu.Locale("en"))
-        coll.setStrength(icu.Collator.TERTIARY)
-        return s.map(
-            lambda x: bytes(coll.getSortKey(x)) if x is not None else b""
-        )
-
-    return _key(F.col(col) if isinstance(col, str) else col)

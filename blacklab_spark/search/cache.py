@@ -21,9 +21,11 @@ Eviction policy (performLoadManagement's order, run on every access):
    BlsCache.java:433);
 4. the entry-count LRU cap (maxNumberOfJobs) backstops everything.
 
-Entry sizes come from Spark's own cached-relation statistics
-(InMemoryRelation.computeStats — actual batch bytes once materialized,
-the optimizer's estimate before that), read driver-side with zero jobs.
+Entry sizes are the bytes of the batches an entry's cache has actually
+built (the cached relation's batch-size accumulator), read driver-side
+with zero jobs. An entry that has not materialized counts 0: its
+Catalyst estimate (huge for join-bearing plans) would otherwise evict
+every other entry.
 
 Keys include the index GENERATION (bumped by incremental add/delete/
 compact), so a cache never serves stale results across index updates.
@@ -50,13 +52,16 @@ class _Entry:
 
 
 def _entry_bytes(df: DataFrame) -> int:
-    """Persisted size of a cached DataFrame from the plan statistics —
-    InMemoryRelation reports the real accumulated batch bytes once the
-    cache is materialized. Driver-side metadata only; no Spark job."""
+    """Bytes of the cached batches a persisted DataFrame has built so
+    far — 0 until its cache materializes, and 0 once unpersisted.
+    Driver-side metadata only; no Spark job."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        cached = (df.sparkSession._jsparkSession.sharedState()
+                  .cacheManager().lookupCachedData(df._jdf))
+        if not cached.isDefined():
+            return 0
+        return int(cached.get().cachedRepresentation().cacheBuilder()
+                   .sizeInBytesStats().value())
     except Exception:
         return 0
 

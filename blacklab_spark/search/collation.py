@@ -4,13 +4,13 @@ The reference sorts hits/terms with the JDK default-locale collator at
 TERTIARY strength (engine forwardindex/Collators.java:14-33 wraps
 java.text.Collator.getInstance(); the terms dict stores its sort
 positions, Terms.java:69-95). This module reproduces that order
-EXACTLY with no native Python dependency: a vendored table of the JDK
-collator's per-codepoint collation elements (_jdk_collation.py,
-generated by tools/gen_collation.py against the same JDK Spark runs
-on) feeds a three-level sort key whose unsigned-byte order equals the
-collator's compare() — e.g. 'é' (secondary 19) before 'è' (secondary
-20), the multi-accent case the former codepoint-order fallback got
-wrong.
+EXACTLY with no native Python dependency: the collation-element table
+is read on the driver from the session JVM's own collator
+(jdk_collation_table — the live java.text.Collator.getInstance(), so
+the table follows the JVM's version and default locale) and feeds a
+three-level sort key whose unsigned-byte order equals the collator's
+compare() — e.g. 'é' (secondary 19) before 'è' (secondary 20), the
+multi-accent case codepoint order gets wrong.
 
 Key layout (linearizing RuleBasedCollator.compare's pairwise element
 walk so Spark's lexicographic unsigned BinaryType order reproduces it;
@@ -42,27 +42,78 @@ marker element, then one primary per UTF-16 code unit — verified
 against CollationElementIterator on unmapped CJK/emoji input).
 
 The key is computed in an Arrow-batched pandas UDF with a per-batch
-memo (hit text repeats heavily); everything else in the sort remains
-JVM-side codegen.
+memo (hit text repeats heavily); the table travels to the Python
+workers inside the UDF closure, so workers never talk to the JVM.
+Everything else in the sort remains JVM-side codegen.
 """
 
 from __future__ import annotations
 
 import struct
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from blacklab_spark.search._jdk_collation import ELEMENTS
+Table = dict[int, tuple[tuple[int, int, int], ...]]
 
 _SEP = b"\x00\x00"
 _PACK = struct.Struct(">H").pack
 _UNMAPPED = 0x7FFF
+_NULLORDER = -1  # CollationElementIterator.NULLORDER
+# Scripts the engine serves: Latin (+ extended, additional), combining
+# diacritics, Greek, Cyrillic, general punctuation, currency, number
+# forms and Latin ligatures. Codepoints outside take the unmapped form.
+_RANGES = (
+    (0x0000, 0x009F), (0x00A0, 0x024F), (0x0300, 0x036F),
+    (0x0370, 0x03FF), (0x0400, 0x04FF), (0x1E00, 0x1EFF),
+    (0x2000, 0x206F), (0x20A0, 0x20BF), (0x2150, 0x218B),
+    (0xFB00, 0xFB06),
+)
+_TABLES: dict[tuple[str, str], Table] = {}
 
 
-def jdk_sort_key(s: str) -> bytes:
+def jdk_collation_table() -> Table:
+    """Codepoint -> (primary, secondary, tertiary) collation elements of
+    the session JVM's default-locale collator at TERTIARY strength.
+    Read over py4j on first use and cached per process, keyed on
+    (java.version, Locale.getDefault()); codepoints without elements
+    are absent."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError(
+            "JDK collation keys need an active SparkContext: the collation "
+            "table is read from the session JVM's java.text.Collator"
+        )
+    jvm = sc._jvm
+    key = (
+        jvm.java.lang.System.getProperty("java.version"),
+        jvm.java.util.Locale.getDefault().toString(),
+    )
+    table = _TABLES.get(key)
+    if table is None:
+        coll = jvm.java.text.Collator.getInstance()
+        coll.setStrength(jvm.java.text.Collator.TERTIARY)
+        table = {}
+        for lo, hi in _RANGES:
+            for cp in range(lo, hi + 1):
+                it = coll.getCollationElementIterator(chr(cp))
+                els = []
+                while (o := it.next()) != _NULLORDER:
+                    o &= 0xFFFFFFFF
+                    els.append((o >> 16, (o >> 8) & 0xFF, o & 0xFF))
+                if els:
+                    table[cp] = tuple(els)
+        _TABLES[key] = table
+    return table
+
+
+def jdk_sort_key(s: str, table: Table | None = None) -> bytes:
     """TERTIARY sort key for one string — byte order == the reference
-    collator's compare() order (Collators.java sensitive collator)."""
+    collator's compare() order (Collators.java sensitive collator).
+    ``table`` defaults to the active session's jdk_collation_table()."""
+    if table is None:
+        table = jdk_collation_table()
     prim: list[bytes] = []
     sec: list[bytes] = []
     ter: list[bytes] = []
@@ -76,7 +127,7 @@ def jdk_sort_key(s: str) -> bytes:
         gap.clear()
 
     for ch in s:
-        els = ELEMENTS.get(ord(ch))
+        els = table.get(ord(ch))
         if els is None:
             # JDK unmapped-char form: marker + UTF-16 code units
             units = ch.encode("utf-16-be")
@@ -97,9 +148,12 @@ def jdk_sort_key(s: str) -> bytes:
 
 def jdk_sort_key_col(col: Column | str) -> Column:
     """Sort-key Column (binary; Spark orders BinaryType lexicographically
-    unsigned, so orderBy(key) == collator order)."""
+    unsigned, so orderBy(key) == collator order). The collation table is
+    read here, on the driver, and shipped in the UDF closure."""
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
+
+    table = jdk_collation_table()
 
     @pandas_udf("binary")
     def _key(s):
@@ -110,7 +164,7 @@ def jdk_sort_key_col(col: Column | str) -> Column:
                 return b""
             k = memo.get(x)
             if k is None:
-                k = memo[x] = jdk_sort_key(x)
+                k = memo[x] = jdk_sort_key(x, table)
             return k
 
         return s.map(one)
@@ -118,18 +172,9 @@ def jdk_sort_key_col(col: Column | str) -> Column:
     return _key(F.col(col) if isinstance(col, str) else col)
 
 
-def case_mask_col(col: Column | str) -> Column:
-    """Per-character case pattern ('0' = lowercase letter, '1' =
-    uppercase/titlecase). Retained for callers that want a cheap
-    codegen-only tertiary approximation; the exact path is
-    jdk_sort_key_col."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.regexp_replace(c, r"\p{Lu}|\p{Lt}", "1"), r"\p{Ll}", "0")
-
-
 def collation_keys(col: Column | str) -> list[Column]:
     """Collator-correct sort key chain for a text Column: the exact
-    JDK-table binary key, with the raw string as a deterministic
+    JDK-collator binary key, with the raw string as a deterministic
     total-order tie-break (the collator deems some distinct strings
     equal; the reference's sort is stable so ties keep a stable
     order)."""

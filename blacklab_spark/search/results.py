@@ -462,10 +462,9 @@ class Hits:
         insensitive/sensitive collator pair (Collators.java:14-82,
         forwardindex/Terms.java:69-95): 'Apple apple applesauce Banana'
         sorts as one apple-group before banana, NOT ASCIIbetically with
-        all capitals first. Key chain = search.collation.collation_keys: exact
-        ICU tertiary when PyICU is installed, else a deterministic
-        three-strength (letters, accents, lowercase-first case) scheme
-        matching ICU en order on Latin corpora."""
+        all capitals first. Key chain = search.collation.collation_keys:
+        the session JVM's java.text.Collator order at TERTIARY strength,
+        then the raw text as a deterministic tie-break."""
         from blacklab_spark.search.collation import collation_keys
 
         ctx = self.with_context(0, annotation, sensitive=True)

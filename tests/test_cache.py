@@ -69,3 +69,21 @@ def test_entry_bytes_is_metadata_only(small_corpus):
     after = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
     assert len(list(after)) == n_before
     df.unpersist()
+
+
+def test_unmaterialized_entry_does_not_evict(small_corpus):
+    """A fresh persisted entry that has not run holds no memory: its
+    Catalyst estimate (inflated by a join) must not push materialized
+    entries out of the size budget."""
+    corpus, _ = small_corpus
+    t = corpus.tokenized.select("doc_id")
+    cache = SearchCache(max_size_mb=1.0)
+    for i in range(2):
+        cache.get_or_compute(f"k{i}", lambda i=i: t.limit(10 + i)).count()
+    joined = cache.get_or_compute("join", lambda: t.join(t, "doc_id"))
+    estimate = joined._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(estimate) > cache.max_size_mb * (1 << 20)
+    assert list(cache._lru) == ["k0", "k1", "join"]
+    assert _entry_bytes(joined) == 0
+    assert all(_entry_bytes(cache._lru[k].df) > 0 for k in ("k0", "k1"))
+    cache.clear()

@@ -1,41 +1,22 @@
 """Exact JDK-collator sort keys (reference Collators.java:14-33 wraps
-java.text.Collator.getInstance() at TERTIARY; our vendored element
-table + key builder must reproduce its compare() order exactly —
-closing the r4 'ICU collation is dormant / fallback diverges' gap)."""
+java.text.Collator.getInstance() at TERTIARY; the element table read
+from the session JVM + key builder must reproduce its compare() order
+exactly, under whatever default locale the JVM runs)."""
 
 from __future__ import annotations
 
-import os
 import random
-import shutil
-import subprocess
-import tempfile
 
 import pytest
 
-from blacklab_spark.search.collation import jdk_sort_key
-
-JAVA_HOME = os.environ.get("JAVA_HOME", "")
-JAVAC = os.path.join(JAVA_HOME, "bin", "javac")
-
-SORTER_SRC = """
-import java.text.*;
-import java.util.*;
-import java.nio.file.*;
-import java.nio.charset.StandardCharsets;
-public class SortList {
-    public static void main(String[] a) throws Exception {
-        Collator c = Collator.getInstance();
-        c.setStrength(Collator.TERTIARY);
-        List<String> ws = Files.readAllLines(Paths.get(a[0]), StandardCharsets.UTF_8);
-        ws.sort((x, y) -> { int r = c.compare(x, y); return r != 0 ? r : x.compareTo(y); });
-        Files.write(Paths.get(a[1]), String.join("\\n", ws).getBytes(StandardCharsets.UTF_8));
-    }
-}
-"""
+from blacklab_spark.search.collation import (
+    collation_keys,
+    jdk_collation_table,
+    jdk_sort_key,
+)
 
 
-def test_known_orders():
+def test_known_orders(spark):
     """Hand-checked orders incl. the cases the former three-strength
     fallback got wrong (multi-accent secondary weights, ß tertiary
     expansion, ignorable space/dash, unmapped chars)."""
@@ -59,11 +40,13 @@ def test_known_orders():
     assert key("z") < key("一") < key("\U0001f600")
 
 
-@pytest.mark.skipif(not os.path.exists(JAVAC), reason="no JDK toolchain")
-def test_order_identical_to_java_collator():
+def test_order_identical_to_java_collator(spark):
     """Differential golden: sort 2.5k adversarial strings with the REAL
-    java.text.Collator (the object the reference wraps) and with our
-    key; orders must be identical."""
+    java.text.Collator of the session JVM (the object the reference
+    wraps) and with our key; orders must be identical. The words are
+    pre-sorted in String.compareTo order (UTF-16 code units) and
+    Collections.sort is stable, so the JVM side is compare() with a
+    compareTo tie-break."""
     random.seed(20260821)
     bases = ["apple", "Apple", "APPLE", "ápple", "àpple", "âpple", "äpple",
              "zebra", "Zebra", "cote", "coté", "côte", "côté",
@@ -79,45 +62,45 @@ def test_order_identical_to_java_collator():
     words = bases + ["".join(random.choice(alpha)
                              for _ in range(random.randint(1, 6)))
                      for _ in range(2500)]
-    words = [w for w in dict.fromkeys(words) if "\n" not in w]
-    random.shuffle(words)
-    d = tempfile.mkdtemp(prefix="jdkcoll_")
-    try:
-        src = os.path.join(d, "SortList.java")
-        with open(src, "w") as f:
-            f.write(SORTER_SRC)
-        subprocess.run([JAVAC, "-encoding", "UTF-8", src], check=True, cwd=d)
-        win, wout = os.path.join(d, "in.txt"), os.path.join(d, "out.txt")
-        with open(win, "w") as f:
-            f.write("\n".join(words))
-        subprocess.run(
-            [os.path.join(JAVA_HOME, "bin", "java"), "-cp", d, "SortList",
-             win, wout], check=True)
-        with open(wout) as f:
-            java_sorted = f.read().split("\n")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    py_sorted = sorted(words, key=lambda w: (jdk_sort_key(w), w))
+    words = sorted({w for w in words if "\n" not in w},
+                   key=lambda w: w.encode("utf-16-be"))
+    jvm = spark._jvm
+    coll = jvm.java.text.Collator.getInstance()
+    coll.setStrength(jvm.java.text.Collator.TERTIARY)
+    lst = jvm.java.util.ArrayList(words)
+    jvm.java.util.Collections.sort(lst, coll)
+    java_sorted = jvm.java.lang.String.join("\n", lst).split("\n")
+    table = jdk_collation_table()
+    py_sorted = sorted(words, key=lambda w: (jdk_sort_key(w, table),
+                                             w.encode("utf-16-be")))
     assert py_sorted == java_sorted
 
 
-def test_table_regeneration_is_stable():
-    """The vendored table matches what tools/gen_collation.py would
-    produce against this JDK (guards accidental edits / JDK drift)."""
-    if not os.path.exists(JAVAC):
-        pytest.skip("no JDK toolchain")
-    import importlib
+def test_table_follows_jvm_default_locale(spark):
+    """The table is the live JVM's default-locale collator, not a frozen
+    one: Swedish sorts 'ä' after 'z' (JVM compare("z", "ä") is -1 under
+    sv_SE, +1 under en_US), and restoring the locale restores the order
+    — for driver-side keys and for the sort column's UDF alike."""
+    Locale = spark._jvm.java.util.Locale
+    before = Locale.getDefault()
+    df = spark.createDataFrame([("ä",), ("z",), ("a",)], "w string")
 
-    import tools.gen_collation as gen
+    def sorted_col():
+        return [r.w for r in df.orderBy(*collation_keys("w")).collect()]
 
-    mod_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(gen.__file__))),
-        "blacklab_spark", "search", "_jdk_collation.py",
-    )
-    with open(mod_path) as f:
-        before = f.read()
-    gen.main()
-    with open(mod_path) as f:
-        after = f.read()
-    assert before == after
-    importlib.invalidate_caches()
+    try:
+        Locale.setDefault(Locale("sv", "SE"))
+        assert jdk_sort_key("z") < jdk_sort_key("ä")
+        assert sorted_col() == ["a", "z", "ä"]
+    finally:
+        Locale.setDefault(before)
+    assert jdk_sort_key("ä") < jdk_sort_key("z")
+    assert sorted_col() == ["a", "ä", "z"]
+
+
+def test_no_spark_context_names_the_cause(monkeypatch):
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    with pytest.raises(RuntimeError, match="active SparkContext"):
+        jdk_sort_key("a")

@@ -151,8 +151,8 @@ def test_collated_sort_diverges_from_codepoint(spark, tmp_path_factory):
     Terms.java:69-95 RuleBasedCollator orders): sorting hits by text
     groups case/accent variants together — 'apple' family before
     'Zebra' — where raw codepoint order would put every capital first.
-    The key scheme (search.collation.jdk_sort_key_col, the vendored
-    JDK-collator element table — exact, no native deps; differential
+    The key scheme (search.collation.jdk_sort_key_col, the session
+    JVM's collation-element table — exact, no native deps; differential
     golden in tests/test_collation.py) must produce the JDK tertiary
     order on this Latin corpus: accentless before accented inside a
     letter group, lowercase before uppercase inside an accent group."""
@@ -168,11 +168,10 @@ def test_collated_sort_diverges_from_codepoint(spark, tmp_path_factory):
     toks = "Zebra ápple apple Apple zebra Ärger anger".split()
     rows = c.find('".*"').sort_by_hit_text().df.collect()
     texts = [toks[r["start"]] for r in rows]
-    # ICU en tertiary order (reference Collators.java sensitive
-    # collator), reproduced by BOTH key schemes: letter groups first
-    # (anger < apple* < arger < zebra*), accentless before accented
-    # inside a group (secondary), lowercase before uppercase at equal
-    # accents (tertiary)
+    # JDK en_US tertiary order (reference Collators.java sensitive
+    # collator): letter groups first (anger < apple* < arger < zebra*),
+    # accentless before accented inside a group (secondary), lowercase
+    # before uppercase at equal accents (tertiary)
     assert [t.lower().replace("á", "a").replace("ä", "a") for t in texts] == [
         "anger", "apple", "apple", "apple", "arger", "zebra", "zebra",
     ], texts

@@ -148,7 +148,7 @@ def test_collator_sort_case_mixed(spark, tmp_path):
     texts = [toks[r["start"]] for r in rows]
     # collator: apple-group, banana-group, caf\u00e8, zebra \u2014 NOT
     # Apple/Banana first as byte order would give; lowercase before
-    # uppercase within a group (ICU tertiary, analysis.collation_keys)
+    # uppercase within a group (JDK collator tertiary order)
     assert texts == ["apple", "Apple", "banana", "Banana", "caf\u00e8", "zebra"]
 
 
