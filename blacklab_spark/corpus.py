@@ -312,12 +312,14 @@ class Corpus:
         per-segment scorer batch_topk runs. The plan follows the input:
         with a filter or tombstones, each segment's doc set (the
         filter's allowed docs, else the tombstones) cogroups into its
-        scoring task; otherwise a plain per-segment groupBy.
+        scoring task; otherwise a plain per-segment groupBy. Either way
+        the segments are hashed into at most one scoring task per core.
 
         For display-sized k (≤ bm25.DRIVER_HYDRATE_MAX_K) the result is
-        hydrated eagerly — the returned DataFrame wraps k local rows and
-        the search has already run. Larger k returns a lazy distributed
-        plan (broadcast-join hydration) that preserves
+        hydrated eagerly — the search has already run, and the returned
+        DataFrame is an Arrow-backed local relation of the k rows, so
+        collecting it runs no Spark job. Larger k returns a lazy
+        distributed plan (broadcast-join hydration) that preserves
         pushdown/projection for callers that filter before collecting."""
         from blacklab_spark.search.bm25 import topk_bm25
 

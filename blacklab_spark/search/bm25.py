@@ -18,10 +18,16 @@ reference search/BlackLabIndexAbstract.java:496,619). Our execution:
    candidate — over memoized block decodes, then a per-segment exact
    top-k. Two plans, chosen from the input: a cogroup with one
    per-segment doc set (a metadata filter's allowed docs, else the
-   tombstones), or the plain segment-partitioned groupBy,
+   tombstones), or the plain segment-partitioned groupBy. Both hash
+   the segments into tasks (_seg_partitioned): one per core for a
+   single query, so it scores in one wave of tasks that each score
+   several segments; up to eight per core for a batch,
 4. global top-k merge: orderBy(desc(score), doc_id).limit(k) over the
    tiny union of per-segment candidates (TakeOrderedAndProject;
-   batch_topk takes a row_number window per query instead).
+   batch_topk takes a row_number window per query instead). For
+   display-sized k, topk_bm25 joins the k winners to their metadata
+   on the driver and returns them as an Arrow-backed local relation
+   (_local_frame), which collects without a Spark job.
 
 Scale: step 3's input shuffle moves only the query terms' postings
 (KBs..MBs, not the index); step 4 moves ≤ k rows per segment.
@@ -37,7 +43,9 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from blacklab_spark.index import codec
 
@@ -47,7 +55,11 @@ from blacklab_spark.index import codec
 DRIVER_HYDRATE_MAX_K = 1024
 
 # _segment_topk's output: every segment's top-k rows per query
-_SEG_SCHEMA = "query_id int, doc_id long, score double"
+_SEG_SCHEMA = T.StructType([
+    T.StructField("query_id", T.IntegerType()),
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("score", T.DoubleType()),
+])
 _EMPTY_SEG = pd.DataFrame(
     {"query_id": pd.Series([], dtype=np.int32),
      "doc_id": pd.Series([], dtype=np.int64),
@@ -153,19 +165,41 @@ def _topk_select(scores: np.ndarray, k: int) -> np.ndarray:
     return nz[order]
 
 
-def _seg_partitioned(corpus, posts: DataFrame) -> DataFrame:
-    """Explicit hash repartition on segment_id for the scoring kernel:
-    it is CPU-bound per byte, so AQE's byte-based coalescing (advisory
-    sizes tuned for scans) would fuse the small posting blocks into too
-    few Python tasks and serialize the scoring wave. Sized to
-    min(n_segments, 8 x cluster parallelism) — enough waves to absorb
-    stragglers without over-fragmenting small clusters. A
-    user-specified partition count is exempt from AQE coalescing;
-    groupBy reuses the partitioning (no second exchange)."""
+def _seg_partitioned(corpus, df: DataFrame, n_queries: int) -> DataFrame:
+    """Hash-repartition ``df`` on segment_id for the scoring kernel.
+
+    A single query spends 1-20 ms per segment in the kernel, while every
+    wave of Python tasks costs a fixed 0.1-0.2 s (on local[4], a no-op
+    applyInPandas over 13 groups took 0.55-0.83 s in 13 tasks, 0.27-0.42
+    s in 4), so it scores in one task per core: min(n_segments,
+    defaultParallelism) partitions, each task scoring its segments one
+    after another. A batch multiplies the kernel time per segment by its
+    query count, and then the hash's uneven share of segments per task
+    costs more than the extra waves (256 queries over 13 segments of 32k
+    docs on local[4]: 28.5 q/s in 4 tasks, 34.9 q/s in 13), so a batch
+    keeps min(n_segments, 8 x defaultParallelism) tasks, which the
+    scheduler hands to cores as they free up. Both scoring plans
+    partition through here — the cogroup's two sides alike, so they
+    meet without another exchange. A user-specified partition count is
+    exempt from AQE's byte-based coalescing, which would fuse the small
+    posting blocks into fewer tasks than cores; groupBy reuses the
+    partitioning."""
     meta = corpus.meta
     n_segments = max(1, -(-meta["n_docs"] // meta["segment_size"]))
     par = corpus.spark.sparkContext.defaultParallelism
-    return posts.repartition(min(n_segments, 8 * par), "segment_id")
+    waves = 1 if n_queries == 1 else 8
+    return df.repartition(min(n_segments, waves * par), "segment_id")
+
+
+def _local_frame(spark, schema: T.StructType, rows: list[tuple] | tuple = ()) -> DataFrame:
+    """``rows`` as an Arrow-backed local relation (LocalTableScan): its
+    collect runs no Spark job. createDataFrame over a Python list builds
+    a Python RDD instead, whose collect is a job of Python tasks even
+    when the list is empty."""
+    names = schema.names
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def _idf_maps(corpus, term_lists: list[list[str]]) -> list[dict[str, float]]:
@@ -228,7 +262,6 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
             doc_set = dels.select(
                 F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
             )
-    b_q = corpus.spark.sparkContext.broadcast(idf_maps)
 
     def score_segment(pdf: pd.DataFrame, docs: np.ndarray | None) -> pd.DataFrame:
         base = int(pdf["segment_id"].iloc[0]) * seg_size
@@ -258,7 +291,7 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
 
         scores = np.zeros(seg_size, dtype=np.float64)
         out_q, out_d, out_s = [], [], []
-        for qid, idf_map in enumerate(b_q.value):
+        for qid, idf_map in enumerate(idf_maps):
             _maxscore_query(scores, blocks_by_term, idf_map, k, base,
                             seg_size, allow_arr, seg_dead_arr, decode_block)
             sel = _topk_select(scores, k)
@@ -277,10 +310,11 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
              "score": np.concatenate(out_s)}
         )
 
+    posts = _seg_partitioned(corpus, posts, len(idf_maps))
     if doc_set is None:
         # single-arg lambda: a two-arg function would be called with
         # (key, pdf)
-        return _seg_partitioned(corpus, posts).groupBy("segment_id").applyInPandas(
+        return posts.groupBy("segment_id").applyInPandas(
             lambda pdf: score_segment(pdf, None), schema=_SEG_SCHEMA
         )
 
@@ -292,7 +326,8 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
 
     return (
         posts.groupBy("segment_id")
-        .cogroup(doc_set.groupBy("segment_id"))
+        .cogroup(_seg_partitioned(corpus, doc_set, len(idf_maps))
+                 .groupBy("segment_id"))
         .applyInPandas(score_with_docs, schema=_SEG_SCHEMA)
     )
 
@@ -321,7 +356,7 @@ def topk_bm25(
     meta_cols = [f.name for f in full_schema.fields[2:]]
     idf = _idf_maps(corpus, [corpus.tokenize_query(query)])[0]
     if not idf:
-        return spark.createDataFrame([], full_schema)
+        return _local_frame(spark, full_schema)
     allowed_df = (
         corpus.doc_stats.filter(filter_expr).select("segment_id", "doc_id")
         if filter_expr
@@ -354,7 +389,7 @@ def topk_bm25(
         )
     top_rows = top.collect()
     if not top_rows:
-        return spark.createDataFrame([], full_schema)
+        return _local_frame(spark, full_schema)
     ids = [int(r["doc_id"]) for r in top_rows]
     by_id = {
         r["doc_id"]: r
@@ -368,7 +403,7 @@ def topk_bm25(
         )
         for r in top_rows
     ]
-    return spark.createDataFrame(rows, full_schema)
+    return _local_frame(spark, full_schema, rows)
 
 
 def topk_bm25_phrase(corpus, phrase: str, k: int = 10) -> DataFrame:
@@ -388,16 +423,19 @@ def topk_bm25_phrase(corpus, phrase: str, k: int = 10) -> DataFrame:
     reference reads from its term dictionary."""
     spark = corpus.spark
     meta = corpus.meta
-    out_schema = "doc_id long, score double"
+    out_schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ])
     qterms = corpus.tokenize_query(phrase)
     if not qterms:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, out_schema)
     cql = " ".join(f'"{t}"' for t in qterms)
     hits = corpus.find(cql).df.select("doc_id")
     tf_df = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf_df.count()  # phrase document frequency (one scalar)
     if df_ == 0:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, out_schema)
     n_docs = meta["n_docs"]
     idf = float(np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5)))
     k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
@@ -431,7 +469,7 @@ def batch_topk(corpus, queries: list[str], k: int = 10) -> "DataFrame":
 
     idf_maps = _idf_maps(corpus, [corpus.tokenize_query(q) for q in queries])
     if not any(idf_maps):
-        return corpus.spark.createDataFrame([], _SEG_SCHEMA)
+        return _local_frame(corpus.spark, _SEG_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         _segment_topk(corpus, idf_maps, k)

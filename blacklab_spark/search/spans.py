@@ -393,10 +393,6 @@ def any_token(corpus, min_len: int = 1, max_len: int | None = 1) -> DataFrame:
     ).select("doc_id", "start", (F.col("start") + F.col("n")).alias("end"))
 
 
-def no_hits(spark) -> DataFrame:
-    return spark.createDataFrame([], "doc_id long, start int, end int")
-
-
 def tag_spans(corpus, tag: str, attrs: dict[str, str] | None = None) -> DataFrame:
     """Spans of an inline tag, optional attribute filters (reference
     SpanQueryTags.java:252; attrs ANDed, AnnotatedFieldNameUtil.java:96-107)."""

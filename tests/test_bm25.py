@@ -12,27 +12,96 @@ def oracle(small_corpus):
     return OracleIndex.from_rows(pdf.to_dict("records"))
 
 
-@pytest.fixture(scope="module")
-def tombstoned(small_corpus, oracle, tmp_path_factory):
-    """A copy of the shared index with tombstones: every 7th doc plus
-    the top-2 docs of every _query_set query, so deletes reach into
-    the rankings. Not compacted, so N and df still count the dead docs
-    (Lucene's stats until a merge). Returns (corpus, live doc ids)."""
+def _tombstone(corpus, oracle, n_docs, dest):
+    """A copy of ``corpus``'s index at ``dest`` with tombstones: every
+    7th doc plus the top-2 docs of every _query_set query, so deletes
+    reach into the rankings. Not compacted, so N and df still count the
+    dead docs (Lucene's stats until a merge). Returns (corpus, live doc
+    ids)."""
     import shutil
 
     from blacklab_spark.corpus import Corpus
     from blacklab_spark.index.incremental import delete_documents
 
-    corpus, pdf = small_corpus
-    d = str(tmp_path_factory.mktemp("tomb") / "idx")
+    d = str(dest / "idx")
     shutil.copytree(corpus.index_dir, d)
-    dead = set(range(0, len(pdf), 7))
+    dead = set(range(0, n_docs, 7))
     for q in _query_set(oracle):
         dead |= {did for did, _ in oracle.bm25_topk(q, k=2)}
     spark = corpus.spark
     delete_documents(spark, d, spark.createDataFrame(
         [(int(i),) for i in sorted(dead)], "doc_id long"))
-    return Corpus.open(spark, d), set(range(len(pdf))) - dead
+    return Corpus.open(spark, d), set(range(n_docs)) - dead
+
+
+@pytest.fixture(scope="module")
+def tombstoned(small_corpus, oracle, tmp_path_factory):
+    corpus, pdf = small_corpus
+    return _tombstone(corpus, oracle, len(pdf), tmp_path_factory.mktemp("tomb"))
+
+
+@pytest.fixture(scope="module")
+def fine_corpus(small_corpus, tmp_path_factory):
+    """The shared turns indexed in 32-doc segments: 32 segments, more
+    than the test session's 8 cores, so each scoring task takes several
+    segments."""
+    from blacklab_spark.config import EngineConfig
+    from blacklab_spark.corpus import Corpus
+
+    corpus, pdf = small_corpus
+    spark = corpus.spark
+    return Corpus.build(spark, spark.createDataFrame(pdf),
+                        str(tmp_path_factory.mktemp("fine") / "idx"),
+                        EngineConfig(segment_size=32, block_size=16))
+
+
+@pytest.fixture(scope="module")
+def fine_tombstoned(small_corpus, fine_corpus, oracle, tmp_path_factory):
+    _, pdf = small_corpus
+    return _tombstone(fine_corpus, oracle, len(pdf),
+                      tmp_path_factory.mktemp("fine_tomb"))
+
+
+def _spark_jobs(sc, fn):
+    """(fn(), ids of the Spark jobs it ran). The listener bus is drained
+    on both sides, so no job is missed or counted late."""
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty(30_000)
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    out = fn()
+    bus.waitUntilEmpty(30_000)
+    return out, sorted(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def _scoring_tasks(sc, jobs) -> list[int]:
+    """Task counts of the stages of ``jobs`` that ran the scoring UDF:
+    those whose plan nodes include a FlatMap(Co)GroupsInPandas.
+
+    Reads Spark internals over py4j: the listener bus's waitUntilEmpty
+    (in _spark_jobs), the status store's operationGraphForStage, and
+    the plan node names in its RDD-scope clusters. The store keeps
+    these with spark.ui.enabled=false. A Spark upgrade that renames the
+    node or changes these private APIs makes this return [], which the
+    callers report as "no scoring stage found", not as a regression."""
+    store = sc._jsc.sc().statusStore()
+
+    def names(cluster):
+        yield cluster.name()
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            yield from names(it.next())
+
+    tasks = []
+    for j in jobs:
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            stage = store.lastStageAttempt(sid)
+            if stage.status().toString() == "SKIPPED":
+                continue
+            graph = store.operationGraphForStage(sid)
+            if any("InPandas" in n for n in names(graph.rootCluster())):
+                tasks.append(stage.numTasks())
+    return tasks
 
 
 def _assistant_ids(pdf) -> set[int]:
@@ -63,18 +132,20 @@ def _query_set(oracle, n_single=8, n_or=6, seed=42):
     return queries
 
 
-def test_rank_identity(small_corpus, oracle):
-    corpus, _ = small_corpus
-    for q in _query_set(oracle):
-        want = oracle.bm25_topk(q, k=10)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in corpus.topk(q, k=10).select("doc_id", "score").collect()
-        ]
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        np.testing.assert_allclose(
-            [s for _, s in got], [s for _, s in want], rtol=1e-6
-        )
+def test_rank_identity(small_corpus, fine_corpus, oracle):
+    """On the shared index, and on the same turns in more segments than
+    cores (each scoring task then scores several segments)."""
+    for corpus in (small_corpus[0], fine_corpus):
+        for q in _query_set(oracle):
+            want = oracle.bm25_topk(q, k=10)
+            got = [
+                (r["doc_id"], r["score"])
+                for r in corpus.topk(q, k=10).select("doc_id", "score").collect()
+            ]
+            assert [d for d, _ in got] == [d for d, _ in want], q
+            np.testing.assert_allclose(
+                [s for _, s in got], [s for _, s in want], rtol=1e-6
+            )
 
 
 def test_topk_with_metadata_filter(small_corpus, oracle):
@@ -138,8 +209,10 @@ def _by_query(rows) -> dict[int, list]:
     return by_q
 
 
-def test_batch_topk_rank_identical(small_corpus):
-    corpus, pdf = small_corpus
+def test_batch_topk_rank_identical(small_corpus, fine_corpus):
+    """On the shared index, and on the same turns in more segments than
+    cores (a batch then scores in several tasks per core)."""
+    _, pdf = small_corpus
     from blacklab_spark.oracle import OracleIndex
 
     oracle = OracleIndex.from_rows(pdf.to_dict("records"))
@@ -149,13 +222,14 @@ def test_batch_topk_rank_identical(small_corpus):
         "zzz_not_a_term",
         "word00003 word00007 word00100",
     ]
-    by_q = _by_query(corpus.batch_topk(queries, k=5).collect())
-    for qid, q in enumerate(queries):
-        exp = oracle.bm25_topk(q, k=5)
-        have = by_q.get(qid, [])
-        assert [d for d, _ in have] == [d for d, _ in exp], q
-        for (_, s1), (_, s2) in zip(have, exp):
-            assert abs(s1 - s2) < 1e-9
+    for corpus in (small_corpus[0], fine_corpus):
+        by_q = _by_query(corpus.batch_topk(queries, k=5).collect())
+        for qid, q in enumerate(queries):
+            exp = oracle.bm25_topk(q, k=5)
+            have = by_q.get(qid, [])
+            assert [d for d, _ in have] == [d for d, _ in exp], q
+            for (_, s1), (_, s2) in zip(have, exp):
+                assert abs(s1 - s2) < 1e-9
 
 
 def test_batch_topk_matches_single_query(small_corpus, oracle):
@@ -273,36 +347,73 @@ def test_filtered_topk_after_deletes(small_corpus, tombstoned, oracle):
 
 # Spark jobs per warm call on the 1000-turn test corpus, one row per
 # plan the top-k paths can take. Single-query latency is floor-bound by
-# job count: the scoring kernel runs 1-2 jobs (AQE) and the k-row
-# metadata decoration is one scan plus a driver-side join, never a join
-# plan (bm25.py topk_bm25 tail).
+# job count: the scoring kernel runs 1-2 jobs (AQE), the k-row metadata
+# decoration is one scan plus a driver-side join, never a join plan, and
+# the eager result is a local relation whose collect runs no job
+# (bm25.py topk_bm25 tail). A query with no dictionary term runs none.
 TOPK_JOB_BUDGET = {
-    "plain": 4,
-    "filtered": 5,
-    "tombstoned": 9,
+    "plain": 3,
+    "filtered": 4,
+    "tombstoned": 8,
     "batch": 5,
+    "no_match": 0,
 }
 
 
 def test_topk_job_count_floor(small_corpus, tombstoned):
-    """Job budget per top-k path: a regression guard for a plan
-    re-growing extra jobs (a second tombstone read, a hydration join)."""
+    """Job budget per top-k path, call and collect together: a
+    regression guard for a plan re-growing extra jobs (a second
+    tombstone read, a hydration join). Collecting the DataFrame an
+    eager topk returns must run no job at all."""
     corpus, _ = small_corpus
     dead_corpus, _ = tombstoned
+    sc = corpus.spark.sparkContext
     role = "role = 'assistant'"
     paths = {
-        "plain": lambda q: corpus.topk(q, k=5).collect(),
-        "filtered": lambda q: corpus.topk(q, k=5, filter_expr=role).collect(),
-        "tombstoned": lambda q: dead_corpus.topk(q, k=5).collect(),
+        "plain": lambda q: corpus.topk(q, k=5),
+        "filtered": lambda q: corpus.topk(q, k=5, filter_expr=role),
+        "tombstoned": lambda q: dead_corpus.topk(q, k=5),
         "batch": lambda q: corpus.batch_topk(
-            [q, "word00004", "word00005 word00006"], k=5).collect(),
+            [q, "word00004", "word00005 word00006"], k=5),
+        "no_match": lambda q: corpus.topk("zzzznotaword qqqqnotaword", k=5),
     }
-    tracker = corpus.spark.sparkContext.statusTracker()
-    used = {}
+    used, collect_jobs = {}, {}
     for path, run in paths.items():
-        run("word00001 word00002")  # warm
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        run("word00003 word00007")
-        used[path] = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        run("word00001 word00002").collect()  # warm
+        df, call = _spark_jobs(sc, lambda: run("word00003 word00007"))
+        _, coll = _spark_jobs(sc, df.collect)
+        used[path] = len(call) + len(coll)
+        collect_jobs[path] = len(coll)
     over = {p: n for p, n in used.items() if n > TOPK_JOB_BUDGET[p]}
     assert not over, f"Spark jobs {used} over budget {TOPK_JOB_BUDGET}"
+    eager = {p: n for p, n in collect_jobs.items() if p != "batch" and n}
+    assert not eager, f"collecting an eager topk result ran jobs: {eager}"
+
+
+def test_scoring_runs_one_task_per_core(small_corpus, fine_corpus,
+                                        fine_tombstoned, oracle):
+    """With more segments (32) than cores (8), every top-k plan scores
+    in one wave: its scoring stage runs at most defaultParallelism
+    Python tasks, each scoring several segments, and the ranking is
+    still the oracle's."""
+    _, pdf = small_corpus
+    dead_corpus, live = fine_tombstoned
+    sc = fine_corpus.spark.sparkContext
+    vocab = sorted(oracle.postings, key=lambda t: -len(oracle.postings[t]))
+    q = f"{vocab[0]} {vocab[40]}"
+    paths = {
+        "plain": (fine_corpus, None, None),
+        "filtered": (fine_corpus, "role = 'assistant'", _assistant_ids(pdf)),
+        "tombstoned": (dead_corpus, None, live),
+    }
+    for path, (corpus, filter_expr, allowed) in paths.items():
+        rows, jobs = _spark_jobs(
+            sc, lambda: corpus.topk(q, k=10, filter_expr=filter_expr).collect())
+        tasks = _scoring_tasks(sc, jobs)
+        assert tasks, (f"{path}: no scoring stage found in jobs {jobs} "
+                       "(see _scoring_tasks for the Spark internals it reads)")
+        assert max(tasks) <= sc.defaultParallelism, (path, tasks)
+        want = oracle.bm25_topk(q, k=10, allowed=allowed)
+        assert [r["doc_id"] for r in rows] == [d for d, _ in want], path
+        np.testing.assert_allclose([r["score"] for r in rows],
+                                   [s for _, s in want], rtol=1e-6)
