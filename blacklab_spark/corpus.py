@@ -11,27 +11,113 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
+from functools import cached_property
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from blacklab_spark.config import EngineConfig
+
+
+class _Generation:
+    """Everything a handle derives from one index generation: meta, the
+    raw table handles, the term and field dicts, the planner's
+    df-estimate views and memo, FI validity, the search cache and the
+    tombstones — the analogue of one open Lucene reader (reference
+    SURVEY §2 step 7 checks per-segment liveDocs against it). Every
+    write commits through meta.json (index/incremental.py _save_meta),
+    so one stat of that file tells whether this state is current.
+    Built lazily: only ``meta`` is read up front."""
+
+    def __init__(self, spark: SparkSession, index_dir: str, stamp: tuple,
+                 meta: dict):
+        from blacklab_spark.search.cache import SearchCache
+
+        self.spark = spark
+        self.index_dir = index_dir
+        self.stamp = stamp
+        self.meta = meta
+        self.tables: dict[str, DataFrame] = {}
+        # word@i {term: df}; None = not in the dict (cached too)
+        self.terms: dict[str, int | None] = {}
+        self.terms_full = False
+        self.fields: dict[str, tuple[dict, int] | None] = {}
+        self.df_est_views: dict[str, dict] = {}
+        self.df_est_memo: dict[tuple, int | None] = {}
+        self.cache = SearchCache()
+        self.fi_valid = (
+            bool(meta.get("fi_buckets"))
+            and os.path.exists(os.path.join(index_dir, "fi"))
+            and meta.get("generation", 0) == meta.get("fi_generation", 0)
+        )
+
+    @cached_property
+    def dead(self) -> np.ndarray:
+        """Tombstoned doc ids, sorted int64 — collected once."""
+        from blacklab_spark.index.incremental import load_deletes
+
+        dels = load_deletes(self.spark, self.index_dir)
+        if dels is None:
+            return np.zeros(0, dtype=np.int64)
+        return np.unique(dels.toPandas()["doc_id"].to_numpy(np.int64))
+
+    @cached_property
+    def deletes(self) -> DataFrame | None:
+        """``dead`` as an Arrow-backed local relation for anti-joins."""
+        if not self.dead.size:
+            return None
+        return self.spark.createDataFrame(
+            pa.table({"doc_id": pa.array(self.dead, pa.int64())}),
+            "doc_id long",
+        )
 
 
 class Corpus:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            self.meta = json.load(f)
+        self._lock = threading.Lock()
+        self._gen: _Generation | None = None
+        meta = self.meta
         self.cfg = EngineConfig(
-            k1=self.meta["k1"],
-            b=self.meta["b"],
-            segment_size=self.meta["segment_size"],
-            block_size=self.meta["block_size"],
-            token_pattern=self.meta["token_pattern"],
-            segments_per_dir=self.meta.get("segments_per_dir", 64),
-            index_fields=tuple(self.meta.get("index_fields", ("word@i",))),
+            k1=meta["k1"],
+            b=meta["b"],
+            segment_size=meta["segment_size"],
+            block_size=meta["block_size"],
+            token_pattern=meta["token_pattern"],
+            segments_per_dir=meta.get("segments_per_dir", 64),
+            index_fields=tuple(meta.get("index_fields", ("word@i",))),
         )
+
+    @property
+    def state(self) -> _Generation:
+        """The current generation's state: meta.json is stat'ed on every
+        access and a changed (inode, mtime_ns, size) swaps in a new
+        state; the replaced one's search cache is unpersisted."""
+        path = os.path.join(self.index_dir, "meta.json")
+        st = os.stat(path)
+        gen = self._gen
+        if gen is not None and gen.stamp == (st.st_ino, st.st_mtime_ns, st.st_size):
+            return gen
+        with self._lock:
+            with open(path) as f:
+                fst = os.fstat(f.fileno())
+                stamp = (fst.st_ino, fst.st_mtime_ns, fst.st_size)
+                old = self._gen
+                if old is not None and old.stamp == stamp:
+                    return old
+                meta = json.load(f)
+            gen = self._gen = _Generation(self.spark, self.index_dir, stamp, meta)
+        if old is not None:
+            old.cache.clear()
+        return gen
+
+    @property
+    def meta(self) -> dict:
+        """meta.json of the current generation."""
+        return self.state.meta
 
     # ---- build/open ---------------------------------------------------
     @staticmethod
@@ -61,12 +147,12 @@ class Corpus:
     )
 
     def _raw(self, name: str) -> DataFrame:
-        """Unfiltered DataFrame handle per index table, memoized.
-        doc_stats and the implicit per-turn spans are DERIVED (column-
-        pruned projections of the tokenized table — Catalyst pruning
-        makes a stored copy pointless) unless a stored directory exists
-        (legacy indexes, incremental appends)."""
-        cache = self.__dict__.setdefault("_tables", {})
+        """Unfiltered DataFrame handle per index table, memoized per
+        generation. doc_stats and the implicit per-turn spans are
+        DERIVED (column-pruned projections of the tokenized table —
+        Catalyst pruning makes a stored copy pointless) unless a stored
+        directory exists (legacy indexes, incremental appends)."""
+        cache = self.state.tables
         if name in cache:
             return cache[name]
         path = os.path.join(self.index_dir, name)
@@ -96,34 +182,23 @@ class Corpus:
 
     def term_stats(self, terms: list[str]) -> dict[str, int]:
         """Driver-side {term: df} for a query's terms, cached across
-        queries on this handle (the reference holds the whole terms
+        queries for the generation (the reference holds the whole terms
         dict in memory per index reader, forwardindex/Terms.java). A
         per-query collect job was ~1s of fixed floor on EVERY
         topk/batch_topk call; the cache amortizes it to one tiny job
-        per unseen term set. Invalidated when the terms table is
-        rewritten (incremental add/compact bumps the directory
-        mtime)."""
-        tdir = os.path.join(self.index_dir, "terms")
-        token = os.path.getmtime(tdir) if os.path.exists(tdir) else 0.0
-        # term entries live in a NESTED dict so corpus vocabulary can
-        # never collide with the cache's own bookkeeping keys (a corpus
-        # term literally named '_token' or '_full' must stay a term)
-        state = self.__dict__.setdefault(
-            "_term_stats", {"token": None, "full": False, "terms": {}}
-        )
-        if state["token"] != token:
-            state.update(token=token, full=False, terms={})
-        cache = state["terms"]
+        per unseen term set."""
+        st = self.state
+        cache = st.terms
         missing = [t for t in set(terms) if t not in cache]
-        if missing and not state["full"]:
-            if int(self.meta.get("n_terms") or 0) <= 5_000_000:
+        if missing and not st.terms_full:
+            if int(st.meta.get("n_terms") or 0) <= 5_000_000:
                 # small vocab (the overwhelmingly common case): load the
                 # whole (term, df) dict ONCE — zero further Spark jobs
                 # on any query, exactly the reference's in-memory Terms
                 # dict per reader. Arrow-collected: ~10 MB per 1M terms.
                 pdf = self.terms.select("term", "df").toPandas()
                 cache.update(zip(pdf["term"], (int(x) for x in pdf["df"])))
-                state["full"] = True
+                st.terms_full = True
             else:
                 rows = (
                     self.terms.filter(F.col("term").isin(missing))
@@ -137,28 +212,21 @@ class Corpus:
 
     def field_stats(self, field: str) -> tuple[dict, int] | None:
         """In-memory (term -> df) dict + total df for one postings
-        field, loaded ONCE per handle and reused by the sequence
+        field, loaded ONCE per generation and reused by the sequence
         planner's cost model (the reference holds the whole Terms dict
         in memory per index reader, forwardindex/Terms.java) — repeated
         queries run ZERO terms-dict Spark jobs. None when the vocab
         exceeds the in-memory guard; callers fall back to a distributed
-        agg. Invalidated when the terms table is rewritten (incremental
-        add/compact bumps the directory mtime)."""
-        tdir = os.path.join(self.index_dir, "terms")
-        token = os.path.getmtime(tdir) if os.path.exists(tdir) else 0.0
-        state = self.__dict__.setdefault(
-            "_field_stats", {"token": None, "fields": {}}
-        )
-        if state["token"] != token:
-            state.update(token=token, fields={})
-        if field not in state["fields"]:
-            if int(self.meta.get("n_terms") or 0) > 5_000_000:
-                state["fields"][field] = None
+        agg."""
+        st = self.state
+        if field not in st.fields:
+            if int(st.meta.get("n_terms") or 0) > 5_000_000:
+                st.fields[field] = None
             else:
                 pdf = self.terms_for(field).select("term", "df").toPandas()
                 d = dict(zip(pdf["term"], (int(x) for x in pdf["df"])))
-                state["fields"][field] = (d, sum(d.values()))
-        return state["fields"][field]
+                st.fields[field] = (d, sum(d.values()))
+        return st.fields[field]
 
     def _t(self, name: str) -> DataFrame:
         """Table handle with tombstones applied (the liveDocs analogue,
@@ -172,11 +240,10 @@ class Corpus:
 
     @property
     def deletes(self) -> DataFrame | None:
-        """Live tombstones, or None (re-checked per access: deletions
-        may land while this Corpus handle is open)."""
-        from blacklab_spark.index.incremental import load_deletes
-
-        return load_deletes(self.spark, self.index_dir)
+        """The generation's tombstones as a local relation of doc_ids,
+        or None. Collected once per generation: a delete commits a new
+        generation, so an open handle sees it on its next access."""
+        return self.state.deletes
 
     @property
     def tokenized(self) -> DataFrame:
@@ -190,25 +257,23 @@ class Corpus:
         the reference's separate random-access forward index next to
         the content store, forwardindex/FieldForwardIndex.java), or
         None when the index wasn't built with fi_buckets or has been
-        incrementally appended past the FI's generation.
+        appended to or compacted past the FI's generation (a delete
+        keeps it: tombstones are anti-joined here at read time).
 
         The bucketed scan reports HashPartitioning(doc_id, n), so
         hit->context joins insert NO Exchange on this (large) side —
         only the hit side shuffles into the bucket partitioning. The
         catalog entry is session-scoped and re-registered here from the
         durable artifacts (files + meta['fi_buckets'])."""
-        nb = int(self.meta.get("fi_buckets") or 0)
-        fi_path = os.path.join(self.index_dir, "fi")
-        if (
-            not nb
-            or not os.path.exists(fi_path)
-            or self.meta.get("generation", 0) != self.meta.get("fi_generation", 0)
-        ):
+        st = self.state
+        if not st.fi_valid:
             return None
-        cache = self.__dict__.setdefault("_tables", {})
+        cache = st.tables
         if "fi" not in cache:
             from blacklab_spark.index.build import fi_table_name
 
+            nb = int(st.meta["fi_buckets"])
+            fi_path = os.path.join(self.index_dir, "fi")
             tbl = fi_table_name(self.index_dir)
             if not self.spark.catalog.tableExists(tbl):
                 schema = self.spark.read.parquet(fi_path).schema
@@ -227,7 +292,7 @@ class Corpus:
                 df = df.withColumn("tokens_i", insensitive_tokens_col("tokens"))
             cache["fi"] = df
         df = cache["fi"]
-        dels = self.deletes
+        dels = st.deletes
         if dels is not None:
             df = df.join(dels, "doc_id", "leftanti")
         return df
@@ -310,10 +375,11 @@ class Corpus:
     def topk(self, query: str, k: int = 10, filter_expr: str | None = None) -> DataFrame:
         """Top-k BM25 over the postings: a batch of one through the
         per-segment scorer batch_topk runs. The plan follows the input:
-        with a filter or tombstones, each segment's doc set (the
-        filter's allowed docs, else the tombstones) cogroups into its
-        scoring task; otherwise a plain per-segment groupBy. Either way
-        the segments are hashed into at most one scoring task per core.
+        with a filter, each segment's allowed docs cogroup into its
+        scoring task; otherwise a plain per-segment groupBy. The
+        generation's tombstones ride in the scorer's closure. Either
+        way the segments are hashed into at most one scoring task per
+        core.
 
         For display-sized k (≤ bm25.DRIVER_HYDRATE_MAX_K) the result is
         hydrated eagerly — the search has already run, and the returned
@@ -354,37 +420,29 @@ class Corpus:
         filter/filterlang, sort, group, viewgroup, sample/samplenum/
         sampleseed, first/number, wordsaroundhit, calc='colloc',
         maxretrieve, outputformat. With ``usecache`` the materialized
-        result persists in the BlsCache analogue, keyed by the full
-        parameter fingerprint + index generation (search/cache.py)."""
+        result persists in the BlsCache analogue of the current
+        generation, keyed by the full parameter fingerprint
+        (search/cache.py)."""
         from blacklab_spark.search.facade import search as _search
 
         if not usecache or params.get("outputformat"):
             # non-DataFrame results (csv strings) bypass the cache
             return _search(self, **params)
-        import json as _json
-
-        key = _json.dumps(
-            {"params": params, "gen": self.meta.get("generation", 0)},
-            sort_keys=True,
-            default=str,
-        )
+        key = json.dumps({"params": params}, sort_keys=True, default=str)
         # subtree_cache: the hit SET is cached separately from its
         # sort/group/window decoration, so a request differing only in
         # decoration reuses the persisted hits (reference BlsCache
         # shares subtree results across requests)
-        out = self.cache.get_or_compute(
-            key, lambda: _search(self, subtree_cache=self.cache, **params)
+        cache = self.cache
+        return cache.get_or_compute(
+            key, lambda: _search(self, subtree_cache=cache, **params)
         )
-        return out
 
     @property
     def cache(self):
-        """Per-corpus search cache (reference BlsCache.java)."""
-        from blacklab_spark.search.cache import SearchCache
-
-        if "_cache" not in self.__dict__:
-            self._cache = SearchCache()
-        return self._cache
+        """The current generation's search cache (reference
+        BlsCache.java)."""
+        return self.state.cache
 
     def cache_info(self) -> dict:
         """cache-info endpoint (reference RequestHandlerCacheInfo)."""
@@ -393,15 +451,16 @@ class Corpus:
     def status(self) -> dict:
         """Server status endpoint (reference RequestHandlerServerInfo /
         corpus status): index identity, sizes, generation."""
+        st = self.state
         return {
             "index_dir": self.index_dir,
             "status": "available",
-            "n_docs": self.meta["n_docs"],
-            "total_tokens": self.meta["total_tokens"],
-            "n_terms": self.meta.get("n_terms"),
-            "generation": self.meta.get("generation", 0),
+            "n_docs": st.meta["n_docs"],
+            "total_tokens": st.meta["total_tokens"],
+            "n_terms": st.meta.get("n_terms"),
+            "generation": st.meta.get("generation", 0),
             "token_pattern": self.cfg.token_pattern,
-            "cache": self.cache.info(),
+            "cache": st.cache.info(),
         }
 
     def doc_info(self, doc_id: int) -> dict | None:

@@ -646,7 +646,7 @@ def _fi_seq(corpus, node: P.FISeq) -> DataFrame:
     return _sequence(corpus, [node.left, node.right])
 
 
-def _df_est_view(corpus, field: str, d: dict) -> dict:
+def _df_est_view(views: dict, field: str, d: dict) -> dict:
     """Vocab views for VECTORIZED df estimation over the cached terms
     dict: a newline-joined blob + line-start offsets + a df array, so a
     novel regex estimates its df with ONE C-level ``finditer`` scan
@@ -655,13 +655,13 @@ def _df_est_view(corpus, field: str, d: dict) -> dict:
     the loop cost seconds of driver time per first-touch regex).
     Desensitized views for the rare sensitive-field-queried-
     insensitively route are built lazily, once, with pandas str ops.
-    Cached on the corpus handle alongside field_stats (same lifetime:
-    both key off the terms dict object)."""
+    ``views`` is the corpus generation's df_est_views dict, which lives
+    next to field_stats, so a write that commits a new generation drops
+    both together."""
     import numpy as np
 
-    cache = corpus.__dict__.setdefault("_df_est_views", {})
-    view = cache.get(field)
-    if view is None or view["src"] is not d:
+    view = views.get(field)
+    if view is None:
         terms = list(d)
         dfs = np.fromiter(d.values(), dtype=np.int64, count=len(d))
         lens = np.fromiter(
@@ -670,10 +670,10 @@ def _df_est_view(corpus, field: str, d: dict) -> dict:
         starts = np.zeros(len(terms), dtype=np.int64)
         if len(terms) > 1:
             np.cumsum(lens[:-1], out=starts[1:])
-        view = {"src": d, "terms": terms, "blob": "\n".join(terms),
+        view = {"terms": terms, "blob": "\n".join(terms),
                 "starts": starts, "dfs": dfs,
                 "desens": None, "desens_sum": None}
-        cache[field] = view
+        views[field] = view
     return view
 
 
@@ -710,7 +710,7 @@ def _regex_df_scan(blob: str, starts, dfs, pattern: str) -> int | None:
     return int(dfs[np.searchsorted(starts, ms)].sum())
 
 
-def _py_match_df(corpus, field: str, d: dict, kind_r: str, kind: str,
+def _py_match_df(views: dict, field: str, d: dict, kind_r: str, kind: str,
                  val) -> int | None:
     """Matching-df sum over the cached in-memory terms dict, mirroring
     the distributed agg's semantics exactly: term/set compare under
@@ -721,7 +721,7 @@ def _py_match_df(corpus, field: str, d: dict, kind_r: str, kind: str,
     results), so Python `re` standing in for the JVM rlike on the regex
     kind is acceptable; unsupported syntax degrades to None (unknown),
     the same as a dictionary miss. All O(vocab) work is vectorized
-    (blob scan / pandas fold) and cached per field."""
+    (blob scan / pandas fold) and cached per field in ``views``."""
     import numpy as np
 
     from blacklab_spark.analysis import desensitize_py, fold_py
@@ -732,7 +732,7 @@ def _py_match_df(corpus, field: str, d: dict, kind_r: str, kind: str,
     if kind == "set" and kind_r == "direct":
         s = [d[w] for w in {desensitize_py(v) for v in val} if w in d]
         return sum(s) if s else None
-    view = _df_est_view(corpus, field, d)
+    view = _df_est_view(views, field, d)
     if kind in ("term", "set"):
         if view["desens_sum"] is None:
             import pandas as pd
@@ -818,7 +818,8 @@ def _seq_part_dfs(corpus, parts: list) -> dict[int, int]:
             # per-query agg was a sub-second fixed floor on every
             # planned sequence)
             d, total = fs
-            memo = corpus.__dict__.setdefault("_df_est_memo", {})
+            st = corpus.state
+            memo = st.df_est_memo
             for i, j, kind_r, base_kind, val, negated in items:
                 key = (
                     field, kind_r, base_kind,
@@ -826,7 +827,7 @@ def _seq_part_dfs(corpus, parts: list) -> dict[int, int]:
                 )
                 if key not in memo:
                     memo[key] = _py_match_df(
-                        corpus, field, d, kind_r, base_kind, val
+                        st.df_est_views, field, d, kind_r, base_kind, val
                     )
                 v = memo[key]
                 ests[(i, j)] = (

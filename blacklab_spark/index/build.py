@@ -757,11 +757,12 @@ def build_index(
         "n_posting_blocks": n_blocks,
         "fi_buckets": cfg.fi_buckets,
         # the bucketed FI mirrors generation-0 contents; incremental
-        # appends invalidate it (Corpus.fi checks this)
+        # appends and compactions invalidate it (Corpus.fi checks this)
         "fi_generation": 0,
     }
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+    from blacklab_spark.index.incremental import _save_meta
+
+    _save_meta(index_dir, meta)
 
     # per-partition lineage: rows+tokens+checksum per segment (cheap
     # algebraic checksum — count/sum/min/max of doc ids — instead of

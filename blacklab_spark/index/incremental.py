@@ -14,11 +14,14 @@ analogue over parquet tables:
   same way Lucene keeps deleted docs in stats until merge.
 - delete_documents: tombstone table (doc_id rows), honored at query
   time like Lucene liveDocs; stats keep counting tombstoned docs until
-  compaction (Lucene parity).
+  compaction (Lucene parity). It bumps the generation like the others.
 - compact: rewrites only segments that have tombstones (re-encoding
   from the forward index minus deleted docs), refreshes terms df/cf
   and global stats, clears tombstones. Untouched segments' files are
   not rewritten.
+
+Every operation commits by replacing meta.json (_save_meta), the one
+file an open Corpus stats to see a new generation.
 
 Each operation appends lineage rows to segments_meta (stage name,
 partition, rows, tokens, checksum) so a resumed/audited build can
@@ -30,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -51,8 +55,21 @@ def _load_meta(index_dir: str) -> dict:
 
 
 def _save_meta(index_dir: str, meta: dict) -> None:
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+    """The only meta.json writer: a synced temp file renamed over the
+    old one, so a reader that stats and opens it (Corpus.state) never
+    reads a half-written file."""
+    fd, tmp = tempfile.mkstemp(prefix=".meta.", suffix=".tmp", dir=index_dir)
+    try:
+        os.fchmod(fd, 0o644)  # mkstemp's 0600 would hide it from other readers
+        with os.fdopen(fd, "w") as f:
+            json.dump(meta, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(index_dir, "meta.json"))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def _append_lineage(spark: SparkSession, index_dir: str, stage: str,
@@ -253,12 +270,21 @@ def add_documents(
 
 def delete_documents(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> int:
     """Tombstone docs (liveDocs analogue). Takes a (doc_id) DataFrame;
-    returns the number of live tombstones after the append."""
+    returns the number of live tombstones after the append. Commits a
+    new generation; the bucketed FI stays valid, because readers
+    anti-join the tombstones against it (Corpus.fi)."""
+    meta = _load_meta(index_dir)
     path = _stage_dir(index_dir, "deletes")
     doc_ids.select(F.col("doc_id").cast("long")).distinct().write.mode(
         "append"
     ).parquet(path)
-    return spark.read.parquet(path).distinct().count()
+    n = spark.read.parquet(path).distinct().count()
+    gen = meta.get("generation", 0)
+    if meta.get("fi_generation", 0) == gen:
+        meta["fi_generation"] = gen + 1
+    meta["generation"] = gen + 1
+    _save_meta(index_dir, meta)
+    return n
 
 
 def load_deletes(spark: SparkSession, index_dir: str) -> DataFrame | None:

@@ -16,9 +16,9 @@ reference search/BlackLabIndexAbstract.java:496,619). Our execution:
    best, blocks skipped when their stored max impact cannot reach/tie
    θ or when their [min_doc,max_doc] range holds no remaining
    candidate — over memoized block decodes, then a per-segment exact
-   top-k. Two plans, chosen from the input: a cogroup with one
-   per-segment doc set (a metadata filter's allowed docs, else the
-   tombstones), or the plain segment-partitioned groupBy. Both hash
+   top-k. Two plans, chosen from the input: a cogroup with a metadata
+   filter's allowed docs per segment, or the plain segment-partitioned
+   groupBy; the tombstones ride in the scorer's closure. Both hash
    the segments into tasks (_seg_partitioned): one per core for a
    single query, so it scores in one wave of tasks that each score
    several segments; up to eight per core for a batch,
@@ -235,16 +235,17 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
     proportionally (scores[nz] = 0) between queries — no per-query
     memset.
 
-    Plan, chosen from the input: with a per-segment doc set — the
-    filter's allowed docs (``allowed_df``, segment_id/doc_id; doc_stats
-    already excludes tombstones), else the tombstones (liveDocs
-    analogue) — the postings cogroup with it, so the set ships straight
-    into its segment's scoring task and never visits the driver
-    (reference SpansFiltered.java:17-60 builds an acceptedDocs bitset
-    per segment). Without one, the plain segment-partitioned groupBy.
-    Tombstones are zeroed before per-segment selection so dead docs
-    can't crowd out live candidates."""
-    meta = corpus.meta
+    Plan, chosen from the input: with a filter, the postings cogroup
+    with its allowed docs (``allowed_df``, segment_id/doc_id), so each
+    segment's set ships straight into its scoring task and never visits
+    the driver (reference SpansFiltered.java:17-60 builds an
+    acceptedDocs bitset per segment); without one, the plain
+    segment-partitioned groupBy. The generation's tombstones (liveDocs
+    analogue, collected once per generation) ride in the scorer's
+    closure like the idf maps, and are zeroed before per-segment
+    selection so dead docs can't crowd out live candidates."""
+    st = corpus.state
+    meta, dead = st.meta, st.dead
     seg_size = meta["segment_size"]
     k1, b_, avgdl = meta["k1"], meta["b"], meta["avgdl"]
     posts = corpus.postings.filter(
@@ -253,29 +254,16 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
         "segment_id", "term", "min_doc", "max_doc",
         "doc_ids", "freqs", "dls", "block_max_wtf_raw",
     )
-    filtered = allowed_df is not None
-    doc_set = allowed_df
-    if not filtered:
-        # read once: each access of corpus.deletes is a parquet read job
-        dels = corpus.deletes
-        if dels is not None:
-            doc_set = dels.select(
-                F.expr(f"doc_id DIV {seg_size}").alias("segment_id"), "doc_id"
-            )
 
-    def score_segment(pdf: pd.DataFrame, docs: np.ndarray | None) -> pd.DataFrame:
+    def score_segment(pdf: pd.DataFrame, allow_arr: np.ndarray | None) -> pd.DataFrame:
         base = int(pdf["segment_id"].iloc[0]) * seg_size
         blocks_by_term = {
             term: (rows := list(grp.itertuples(index=False)),
                    max(r.block_max_wtf_raw for r in rows))
             for term, grp in pdf.groupby("term")
         }
-        allow_arr = docs if filtered else None
-        seg_dead_arr = (
-            docs[(docs >= base) & (docs < base + seg_size)] - base
-            if docs is not None and not filtered
-            else np.asarray([], dtype=np.int64)
-        )
+        lo, hi = np.searchsorted(dead, (base, base + seg_size))
+        seg_dead_arr = dead[lo:hi] - base
         decoded: dict[tuple, tuple] = {}
 
         def decode_block(t, bi, r):
@@ -311,7 +299,7 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
         )
 
     posts = _seg_partitioned(corpus, posts, len(idf_maps))
-    if doc_set is None:
+    if allowed_df is None:
         # single-arg lambda: a two-arg function would be called with
         # (key, pdf)
         return posts.groupBy("segment_id").applyInPandas(
@@ -320,13 +308,13 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
 
     def score_with_docs(posts_pdf: pd.DataFrame,
                         docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(posts_pdf) == 0 or (filtered and len(docs_pdf) == 0):
+        if len(posts_pdf) == 0 or len(docs_pdf) == 0:
             return _EMPTY_SEG
         return score_segment(posts_pdf, docs_pdf["doc_id"].to_numpy(np.int64))
 
     return (
         posts.groupBy("segment_id")
-        .cogroup(_seg_partitioned(corpus, doc_set, len(idf_maps))
+        .cogroup(_seg_partitioned(corpus, allowed_df, len(idf_maps))
                  .groupBy("segment_id"))
         .applyInPandas(score_with_docs, schema=_SEG_SCHEMA)
     )
@@ -340,9 +328,11 @@ def topk_bm25(
 ) -> DataFrame:
     """Returns DataFrame (doc_id, score, conv_id, turn_idx, role, tool,
     text) — top-k by (score desc, doc_id asc): a batch of one through
-    _segment_topk, then a global top-k merge and hydration."""
+    _segment_topk, then a global top-k merge and hydration. Both the
+    filter's doc set and hydration read the un-tombstoned tables: the
+    scorer zeroes dead docs itself, so every id it returns is live."""
     spark = corpus.spark
-    hyd_src = corpus.tokenized.select(
+    hyd_src = corpus._raw("tokenized").select(
         "doc_id", "conv_id", "turn_idx", "role", "tool", "text"
     )
     # no-match results carry the SAME hydrated schema as hits
@@ -358,7 +348,7 @@ def topk_bm25(
     if not idf:
         return _local_frame(spark, full_schema)
     allowed_df = (
-        corpus.doc_stats.filter(filter_expr).select("segment_id", "doc_id")
+        corpus._raw("doc_stats").filter(filter_expr).select("segment_id", "doc_id")
         if filter_expr
         else None
     )

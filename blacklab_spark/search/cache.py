@@ -27,8 +27,10 @@ with zero jobs. An entry that has not materialized counts 0: its
 Catalyst estimate (huge for join-bearing plans) would otherwise evict
 every other entry.
 
-Keys include the index GENERATION (bumped by incremental add/delete/
-compact), so a cache never serves stale results across index updates.
+A Corpus keeps one cache per index generation (every add, delete and
+compact commits a new one through meta.json): a handle that sees a new
+generation starts an empty cache and clears the old one, so a cache
+never serves stale results across index updates.
 Eviction unpersists the evicted DataFrame — executor memory cannot
 leak past the configured budgets.
 """

@@ -386,7 +386,6 @@ def search(
                 "hfc": hitfiltercrit, "hfv": hitfilterval,
                 "maxretrieve": maxretrieve,
                 "fimatch": corpus.cfg.fi_probe_ratio,
-                "gen": corpus.meta.get("generation", 0),
             },
             sort_keys=True,
         )

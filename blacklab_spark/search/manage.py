@@ -509,22 +509,21 @@ class IndexManager:
                 )
             transcripts, extra_spans = self._parse_dir(tmp, info["format"])
             idx = info["dir"]
-            from blacklab_spark.corpus import Corpus
-
             if os.path.exists(os.path.join(idx, "meta.json")):
                 from blacklab_spark.index.incremental import add_documents
 
+                # the served Corpus sees the append as a new generation
                 add_documents(self.spark, idx, transcripts,
                               extra_spans=extra_spans)
             else:
                 from blacklab_spark.config import EngineConfig
+                from blacklab_spark.corpus import Corpus
 
-                Corpus.build(
+                self.corpora[name] = Corpus.build(
                     self.spark, transcripts, idx,
                     EngineConfig(segment_size=1 << 12),
                     extra_spans=extra_spans,
                 )
-            self.corpora[name] = Corpus.open(self.spark, idx)
             return 200, {"code": "SUCCESS", "message": "Data added succesfully."}
         finally:
             shutil.rmtree(tmp, ignore_errors=True)

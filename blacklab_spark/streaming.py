@@ -10,9 +10,10 @@ Streaming query:
 
     readStream(transcript source) -> foreachBatch(add_documents)
 
-Each micro-batch appends whole segments and bumps the index
-generation; searches on an open Corpus see new docs as soon as the
-batch commits (table handles re-read parquet listings lazily).
+Each micro-batch appends whole segments and commits a new index
+generation through meta.json; an open Corpus sees the new docs on its
+next access after the batch commits (it stats meta.json on every
+access and rebuilds its per-generation state, table handles included).
 Exactly-once at the segment level comes from the streaming
 checkpoint: a replayed batch re-runs add_documents with the same rows,
 and doc ids are re-derived from (conv_id, turn_idx), so re-appended

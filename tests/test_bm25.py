@@ -299,10 +299,10 @@ def test_phrase_scored_topk(small_corpus, oracle):
 
 
 def test_batch_topk_matches_single_query_after_deletes(tombstoned, oracle):
-    """On a tombstoned index batch_topk runs the doc-set plan with the
-    tombstones as each segment's doc set; it must still equal per-query
-    topk rank- and score-exact, and both must equal the oracle over the
-    live docs."""
+    """On a tombstoned index the scorer zeroes each segment's dead docs
+    from its closure; batch_topk must still equal per-query topk rank-
+    and score-exact, and both must equal the oracle over the live
+    docs."""
     corpus, live = tombstoned
     queries = _query_set(oracle, n_single=4, n_or=3)
     by_q = _by_query(corpus.batch_topk(queries, k=7).collect())
@@ -324,9 +324,9 @@ def test_batch_topk_matches_single_query_after_deletes(tombstoned, oracle):
 
 def test_filtered_topk_after_deletes(small_corpus, tombstoned, oracle):
     """A metadata filter on a tombstoned index: the filter's allowed
-    docs are the segment doc set, and they already exclude the
-    tombstones — no dead doc may come back, and the ranking is the
-    oracle's over filter ∩ live."""
+    docs are the segment doc set and the scorer zeroes the tombstones —
+    no dead doc may come back, and the ranking is the oracle's over
+    filter ∩ live."""
     _, pdf = small_corpus
     corpus, live = tombstoned
     allowed = _assistant_ids(pdf) & live
@@ -351,19 +351,29 @@ def test_filtered_topk_after_deletes(small_corpus, tombstoned, oracle):
 # decoration is one scan plus a driver-side join, never a join plan, and
 # the eager result is a local relation whose collect runs no job
 # (bm25.py topk_bm25 tail). A query with no dictionary term runs none.
+# Tombstones are collected once per index generation and ride in the
+# scorer's closure, so a tombstoned index runs the plain plans.
 TOPK_JOB_BUDGET = {
     "plain": 3,
     "filtered": 4,
-    "tombstoned": 8,
+    "tombstoned": 3,
+    "filtered_tombstoned": 4,
     "batch": 5,
     "no_match": 0,
+}
+
+# Spark jobs per warm find(...).count() on the same corpus: the span
+# query anti-joins the generation's tombstones as a local relation.
+FIND_COUNT_JOB_BUDGET = {
+    "plain": 2,
+    "tombstoned": 3,
 }
 
 
 def test_topk_job_count_floor(small_corpus, tombstoned):
     """Job budget per top-k path, call and collect together: a
-    regression guard for a plan re-growing extra jobs (a second
-    tombstone read, a hydration join). Collecting the DataFrame an
+    regression guard for a plan re-growing extra jobs (a tombstone
+    read, a hydration join). Collecting the DataFrame an
     eager topk returns must run no job at all."""
     corpus, _ = small_corpus
     dead_corpus, _ = tombstoned
@@ -373,6 +383,8 @@ def test_topk_job_count_floor(small_corpus, tombstoned):
         "plain": lambda q: corpus.topk(q, k=5),
         "filtered": lambda q: corpus.topk(q, k=5, filter_expr=role),
         "tombstoned": lambda q: dead_corpus.topk(q, k=5),
+        "filtered_tombstoned": lambda q: dead_corpus.topk(
+            q, k=5, filter_expr=role),
         "batch": lambda q: corpus.batch_topk(
             [q, "word00004", "word00005 word00006"], k=5),
         "no_match": lambda q: corpus.topk("zzzznotaword qqqqnotaword", k=5),
@@ -388,6 +400,22 @@ def test_topk_job_count_floor(small_corpus, tombstoned):
     assert not over, f"Spark jobs {used} over budget {TOPK_JOB_BUDGET}"
     eager = {p: n for p, n in collect_jobs.items() if p != "batch" and n}
     assert not eager, f"collecting an eager topk result ran jobs: {eager}"
+
+
+def test_find_count_job_budget(small_corpus, tombstoned):
+    """Job budget of a warm single-term count, with and without
+    tombstones: a regression guard for the tombstones being read again
+    per query (6 jobs against 2 when every access re-read them)."""
+    corpus, _ = small_corpus
+    dead_corpus, _ = tombstoned
+    sc = corpus.spark.sparkContext
+    used = {}
+    for path, c in (("plain", corpus), ("tombstoned", dead_corpus)):
+        c.find('"word00001"').count()  # warm
+        _, jobs = _spark_jobs(sc, lambda: c.find('"word00003"').count())
+        used[path] = len(jobs)
+    over = {p: n for p, n in used.items() if n > FIND_COUNT_JOB_BUDGET[p]}
+    assert not over, f"Spark jobs {used} over budget {FIND_COUNT_JOB_BUDGET}"
 
 
 def test_scoring_runs_one_task_per_core(small_corpus, fine_corpus,

@@ -97,8 +97,11 @@ def test_fi_resume_skips_rebuild(spark, corpora):
 def test_fi_invalidated_after_append(spark, tmp_path):
     """Incremental appends outrun the generation-0 FI: context joins
     must fall back to the range-layout table (correctness over the
-    exchange saving) until a rebuild refreshes it."""
-    from blacklab_spark.index.incremental import add_documents
+    exchange saving) until a rebuild refreshes it. A delete keeps the
+    FI: its tombstones are anti-joined at read time."""
+    from pyspark.sql import functions as F
+
+    from blacklab_spark.index.incremental import add_documents, delete_documents
 
     pdf = generate_pandas(300, seed=3)
     idx = str(tmp_path / "fi_gen")
@@ -107,6 +110,15 @@ def test_fi_invalidated_after_append(spark, tmp_path):
         EngineConfig(segment_size=256, block_size=32, fi_buckets=2),
     )
     assert c.fi is not None
+    hit_docs = sorted({r["doc_id"] for r in c.find('"word00001"').df.collect()})
+    dead = hit_docs[::2]
+    delete_documents(spark, idx, spark.createDataFrame(
+        [(int(i),) for i in dead], "doc_id long"))
+    assert c.fi is not None
+    assert c.fi.filter(F.col("doc_id").isin(dead)).count() == 0
+    kw = c.find('"word00001"').kwic(1)
+    assert kw.count() > 0
+    assert kw.filter(F.col("doc_id").isin(dead)).count() == 0
     extra = generate_pandas(50, seed=4)
     extra["conv_id"] = extra["conv_id"] + "x"
     add_documents(spark, idx, spark.createDataFrame(extra))

@@ -212,3 +212,56 @@ def test_incremental_equals_fresh_rebuild(spark, tmp_path_factory):
         for r in term_frequencies(c).collect()
     }
     assert tf(inc) == tf(fresh)
+
+
+def _handle_view(corpus, q: str, patt: str) -> dict:
+    """What a reader sees through one handle: ranked BM25 scores, a
+    span count, the forward index's size, status and a cached search."""
+    return {
+        "topk": [
+            (r["doc_id"], round(r["score"], 9))
+            for r in corpus.topk(q, k=10).collect()
+        ],
+        "find": corpus.find(patt).count(),
+        "tokenized": corpus.tokenized.count(),
+        "n_docs": corpus.status()["n_docs"],
+        "search": sorted(
+            (r["doc_id"], r["start"])
+            for r in corpus.search(patt=patt, usecache=True)
+            .select("doc_id", "start").collect()
+        ),
+    }
+
+
+@pytest.mark.parametrize("write", ["delete", "append", "compact"])
+def test_open_handle_sees_write(spark, small_corpus, tmp_path, write):
+    """A handle opened before a write answers like a fresh handle after
+    it: each write commits a new generation through meta.json, and the
+    handle rebuilds its table handles, term dicts, tombstones and
+    search cache from it (the reference reopens one reader per
+    commit)."""
+    import shutil
+
+    src, _ = small_corpus
+    d = str(tmp_path / "idx")
+    shutil.copytree(src.index_dir, d)
+    q, patt = "word00001 word00050", '"word00001"'
+    if write == "compact":
+        delete_documents(spark, d, spark.createDataFrame(
+            [(i,) for i in range(0, 1000, 9)], "doc_id long"))
+    corpus = Corpus.open(spark, d)
+    before = _handle_view(corpus, q, patt)  # warms every memo and the cache
+    dead = set()
+    if write == "delete":
+        dead = {doc for doc, _ in before["topk"][:5]}
+        delete_documents(spark, d, spark.createDataFrame(
+            [(int(i),) for i in sorted(dead)], "doc_id long"))
+    elif write == "append":
+        extra = generate_pandas(300, seed=8, start_conv=50_000)
+        add_documents(spark, d, spark.createDataFrame(extra))
+    else:
+        compact(spark, d)
+    got = _handle_view(corpus, q, patt)
+    assert got == _handle_view(Corpus.open(spark, d), q, patt)
+    assert got != before
+    assert not dead & {doc for doc, _ in got["search"]}

@@ -52,6 +52,9 @@ def test_stream_indexes_new_files(spark, tmp_path):
     assert corpus2.meta["n_docs"] == 32
     assert corpus2.find('"bravo"').count() == 12
     assert corpus2.find('"alpha"').count() == 20
+    # the handle opened before the stream sees the appended generation
+    assert corpus.meta["n_docs"] == 32
+    assert corpus.find('"bravo"').count() == 12
 
     # wave 2: checkpoint must skip already-processed files
     _wave(spark, 200, 5, "charlie").write.mode("append").parquet(src)
@@ -64,3 +67,6 @@ def test_stream_indexes_new_files(spark, tmp_path):
     # BM25 sees streamed docs
     top = corpus3.topk("charlie stream", k=3)
     assert top.count() == 3
+    assert corpus.status()["n_docs"] == 37
+    assert corpus.find('"charlie"').count() == 5
+    assert corpus.topk("charlie stream", k=3).collect() == top.collect()
