@@ -17,7 +17,7 @@ engine) as an idiomatic Spark DataFrame engine:
   (cf. reference search/results/)
 
 Everything is DataFrame-first; per-row Python is banned — the only
-Python kernels are vectorized numpy inside Arrow `applyInPandas` /
+Python kernels are vectorized numpy inside Arrow `applyInArrow` /
 `mapInArrow` (posting codec, WAND scoring).
 """
 

@@ -327,14 +327,14 @@ def make_encoder(cfg: EngineConfig, avgdl: float, fields: list[str] | None = Non
         block_lens = np.diff(np.append(block_starts, len(g_tid)))
         block_ends = block_starts + block_lens
 
-        # per-block payloads via the grouped codec
-        did_deltas = codec.delta_encode_grouped(g_did, block_starts)
-        doc_bytes = codec.varint_encode_grouped_arrow(did_deltas, block_lens)
-        tf_bytes = codec.varint_encode_grouped_arrow(tf, block_lens)
-        dl_bytes = codec.varint_encode_grouped_arrow(g_dl, block_lens)
-        pos_deltas = codec.delta_encode_grouped(pos, td_starts)
+        # per-block payloads: one codec pass per column over the segment
+        did_deltas = codec.delta_encode(g_did, block_starts)
+        doc_bytes = codec.varint_encode(did_deltas, block_lens)
+        tf_bytes = codec.varint_encode(tf, block_lens)
+        dl_bytes = codec.varint_encode(g_dl, block_lens)
+        pos_deltas = codec.delta_encode(pos, td_starts)
         flat_block_lens = np.add.reduceat(tf, block_starts)
-        pos_bytes = codec.varint_encode_grouped_arrow(pos_deltas, flat_block_lens)
+        pos_bytes = codec.varint_encode(pos_deltas, flat_block_lens)
 
         n_blocks = len(block_starts)
         return pa.table(

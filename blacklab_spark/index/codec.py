@@ -1,244 +1,127 @@
-"""Vectorized posting-block codec: delta + LEB128 varint, pure numpy.
+"""Posting-block codec: delta + LEB128 varint over Arrow binary columns.
 
 The reference delegates posting compression to Lucene's codec and adds
 its own files on top (reference codec/BlackLab40PostingsWriter.java:57,
 doc/index-formats/integrated.md:17-103). We implement the classic
-delta+varint scheme ourselves, but vectorized: both encode and decode
-are O(total_bytes) numpy array programs with no per-value Python loop
-(the encode loop below is over *byte positions within a varint*, max 10
-iterations, each fully vectorized).
+delta+varint scheme ourselves, one column at a time: the encoder turns
+a whole segment's values into one binary column of per-block payloads,
+and the decoder turns a whole binary column back into flat values plus
+per-row value offsets, both as numpy array programs with no Python call
+per value or per block (the encode loop below is over *byte positions
+within a varint*, max 10 iterations, each fully vectorized).
 
-Layout per posting block (one block = up to `block_size` docs of one
+Layout per posting block (one row = up to `block_size` docs of one
 (segment, term) posting list):
-- doc_ids:  varint(delta(doc_ids)), first doc absolute
-- freqs:    varint(tf per doc), same order
+- doc_ids:   varint(delta(doc_ids)), the delta chain restarting at the
+  block's first doc (stored absolute)
+- freqs:     varint(tf per doc), same order
+- dls:       varint(doc length per doc), same order
 - positions: varint of per-doc delta-encoded token positions,
-  concatenated in doc order; per-doc boundaries reconstructed from freqs
+  concatenated in doc order, the chain restarting at each doc's first
+  position; per-doc boundaries come from freqs
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _U64 = np.uint64
 _SEVEN = _U64(7)
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a non-negative int array. Vectorized."""
-    v = np.ascontiguousarray(values, dtype=_U64)
+def delta_encode(sorted_vals: np.ndarray, run_starts: np.ndarray) -> np.ndarray:
+    """Deltas of ``sorted_vals`` with the chain restarting at each index
+    of ``run_starts`` (the first value of each run stays absolute)."""
+    v = np.asarray(sorted_vals, dtype=np.int64)
     if v.size == 0:
-        return b""
+        return v
+    out = np.empty_like(v)
+    out[0] = v[0]
+    np.subtract(v[1:], v[:-1], out=out[1:])
+    rs = np.asarray(run_starts, dtype=np.int64)
+    out[rs] = v[rs]
+    return out
+
+
+def varint_encode(values: np.ndarray, group_lens: np.ndarray) -> pa.BinaryArray:
+    """LEB128-encode non-negative ``values`` into a BinaryArray with one
+    row per group of ``group_lens`` values (a group may be empty), built
+    zero-copy from (offsets, data) buffers."""
+    gl = np.asarray(group_lens, dtype=np.int64)
+    v = np.ascontiguousarray(values, dtype=_U64)
     # bytes needed per value: ceil(bitlength/7), min 1
     nbytes = np.ones(v.size, dtype=np.int64)
     x = v >> _SEVEN
     while x.any():
         nbytes += (x > 0).astype(np.int64)
         x >>= _SEVEN
-    offsets = np.zeros(v.size, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=offsets[1:])
-    total = int(offsets[-1] + nbytes[-1])
-    out = np.zeros(total, dtype=np.uint8)
-    cur = v.copy()
-    max_b = int(nbytes.max())
-    for b in range(max_b):  # loop over byte slots, not values
-        mask = nbytes > b
-        idx = offsets[mask] + b
-        byte = (cur[mask] & _U64(0x7F)).astype(np.uint8)
-        more = (nbytes[mask] > (b + 1)).astype(np.uint8) << 7
-        out[idx] = byte | more
-        cur >>= _SEVEN
-    return out.tobytes()
-
-
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes to a uint64 array. Vectorized via reduceat."""
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return np.empty(0, dtype=np.int64)
-    ends = np.flatnonzero((raw & 0x80) == 0)
-    starts = np.empty(ends.size, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # position of each byte within its value
-    byte_pos = np.arange(raw.size, dtype=np.int64) - np.repeat(
-        starts, np.diff(np.append(starts, raw.size))
-    )
-    contrib = (raw & 0x7F).astype(_U64) << (byte_pos.astype(_U64) * _SEVEN)
-    vals = np.add.reduceat(contrib, starts)
-    return vals.astype(np.int64)
-
-
-def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
-    """First value absolute, rest deltas. Input must be sorted ascending."""
-    v = np.asarray(sorted_vals, dtype=np.int64)
-    if v.size == 0:
-        return v
-    out = np.empty_like(v)
-    out[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=out[1:])
-    return out
-
-
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    return np.cumsum(np.asarray(deltas, dtype=np.int64))
-
-
-def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
-    return varint_encode(delta_encode(doc_ids))
-
-
-def decode_doc_ids(buf: bytes) -> np.ndarray:
-    return delta_decode(varint_decode(buf))
-
-
-def encode_freqs(freqs: np.ndarray) -> bytes:
-    return varint_encode(np.asarray(freqs, dtype=np.int64))
-
-
-def decode_freqs(buf: bytes) -> np.ndarray:
-    return varint_decode(buf)
-
-
-def encode_positions(flat_positions: np.ndarray, freqs: np.ndarray) -> bytes:
-    """Encode concatenated per-doc sorted position lists.
-
-    Within each doc the first position is absolute and the rest are
-    deltas; doc boundaries come from ``freqs`` (tf per doc).
-    """
-    p = np.asarray(flat_positions, dtype=np.int64)
-    f = np.asarray(freqs, dtype=np.int64)
-    if p.size == 0:
-        return b""
-    deltas = np.empty_like(p)
-    deltas[0] = p[0]
-    np.subtract(p[1:], p[:-1], out=deltas[1:])
-    starts = np.zeros(f.size, dtype=np.int64)
-    np.cumsum(f[:-1], out=starts[1:])
-    deltas[starts] = p[starts]  # reset delta chain at each doc boundary
-    return varint_encode(deltas)
-
-
-def decode_positions(buf: bytes, freqs: np.ndarray) -> np.ndarray:
-    """Inverse of encode_positions; returns the flat positions array."""
-    d = varint_decode(buf)
-    f = np.asarray(freqs, dtype=np.int64)
-    if d.size == 0:
-        return d
-    starts = np.zeros(f.size, dtype=np.int64)
-    np.cumsum(f[:-1], out=starts[1:])
-    # segmented cumsum: cumsum all, then subtract running total at starts
-    c = np.cumsum(d)
-    base = np.zeros(d.size, dtype=np.int64)
-    base[starts[1:]] = c[starts[1:] - 1]
-    return c - np.repeat(np.maximum.accumulate(base[starts]), f)
-
-
-# ---------------------------------------------------------------------------
-# grouped (batch) encoders: one vectorized pass over a whole segment,
-# returning per-group bytes — replaces per-block encode calls whose
-# numpy dispatch overhead dominates at ~100k tiny blocks per segment.
-# ---------------------------------------------------------------------------
-
-def varint_encode_grouped(values: np.ndarray, group_lens: np.ndarray) -> list[bytes]:
-    """LEB128-encode ``values`` and split the byte stream into one
-    bytes object per group of ``group_lens`` values. Semantically equal
-    to [varint_encode(g) for g in split(values)], one numpy pass."""
-    v = np.ascontiguousarray(values, dtype=_U64)
-    gl = np.asarray(group_lens, dtype=np.int64)
-    if v.size == 0:
-        return [b""] * gl.size
-    nbytes = np.ones(v.size, dtype=np.int64)
-    x = v >> _SEVEN
-    while x.any():
-        nbytes += (x > 0).astype(np.int64)
-        x >>= _SEVEN
-    offsets = np.zeros(v.size, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=offsets[1:])
-    total = int(offsets[-1] + nbytes[-1])
-    out = np.zeros(total, dtype=np.uint8)
-    cur = v.copy()
-    for b in range(int(nbytes.max())):
-        mask = nbytes > b
-        idx = offsets[mask] + b
-        byte = (cur[mask] & _U64(0x7F)).astype(np.uint8)
-        more = (nbytes[mask] > (b + 1)).astype(np.uint8) << 7
-        out[idx] = byte | more
-        cur >>= _SEVEN
-    raw = out.tobytes()
-    # byte ranges per group
-    val_bounds = np.zeros(gl.size + 1, dtype=np.int64)
-    np.cumsum(gl, out=val_bounds[1:])
-    byte_bounds = np.zeros(gl.size + 1, dtype=np.int64)
-    cum_bytes = np.cumsum(nbytes)
-    # `ends == 0` guards leading empty groups (cum_bytes[-1] would wrap
-    # to the total); empty groups inherit the previous group's end
-    ends = val_bounds[1:]
-    byte_bounds[1:] = np.where(ends == 0, 0, cum_bytes[np.maximum(ends, 1) - 1])
-    return [raw[byte_bounds[i]: byte_bounds[i + 1]] for i in range(gl.size)]
-
-
-def delta_encode_grouped(sorted_vals: np.ndarray, group_starts: np.ndarray) -> np.ndarray:
-    """Delta-encode with the delta chain reset at each group start
-    (first value of each group stays absolute)."""
-    v = np.asarray(sorted_vals, dtype=np.int64)
-    if v.size == 0:
-        return v
-    out = np.empty_like(v)
-    out[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=out[1:])
-    gs = np.asarray(group_starts, dtype=np.int64)
-    out[gs] = v[gs]
-    return out
-
-
-def varint_encode_grouped_arrow(values: np.ndarray, group_lens: np.ndarray):
-    """`varint_encode_grouped` returning an Arrow BinaryArray built
-    zero-copy from (offsets, data) buffers — at ~100k blocks per
-    segment the per-group Python `bytes` slices (and pyarrow's
-    list-of-bytes conversion) were ~25% of encoder core-time."""
-    import pyarrow as pa
-
-    gl = np.asarray(group_lens, dtype=np.int64)
-    v = np.ascontiguousarray(values, dtype=_U64)
-    if v.size == 0:
-        offs = np.zeros(gl.size + 1, dtype=np.int32)
-        return pa.BinaryArray.from_buffers(
-            pa.binary(), gl.size, [None, pa.py_buffer(offs), pa.py_buffer(b"")]
-        )
-    nbytes = np.ones(v.size, dtype=np.int64)
-    x = v >> _SEVEN
-    while x.any():
-        nbytes += (x > 0).astype(np.int64)
-        x >>= _SEVEN
-    offsets = np.zeros(v.size, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=offsets[1:])
-    total = int(offsets[-1] + nbytes[-1])
-    out = np.zeros(total, dtype=np.uint8)
-    cur = v.copy()
-    for b in range(int(nbytes.max())):
-        mask = nbytes > b
-        idx = offsets[mask] + b
-        byte = (cur[mask] & _U64(0x7F)).astype(np.uint8)
-        more = (nbytes[mask] > (b + 1)).astype(np.uint8) << 7
-        out[idx] = byte | more
-        cur >>= _SEVEN
+    ends = np.cumsum(nbytes)
+    total = int(ends[-1]) if v.size else 0
     if total > np.iinfo(np.int32).max:
         raise ValueError(
             f"varint stream of {total} bytes exceeds BinaryArray's int32 "
             f"offsets; split the segment"
         )
-    val_bounds = np.zeros(gl.size + 1, dtype=np.int64)
-    np.cumsum(gl, out=val_bounds[1:])
-    byte_bounds = np.zeros(gl.size + 1, dtype=np.int64)
-    cum_bytes = np.cumsum(nbytes)
-    # a group's end offset is the cumulative byte count at its last
-    # value; a group with NO values (possibly several in a row, possibly
-    # leading) ends where the previous group ended — `ends == 0` handles
-    # leading empties (cum_bytes[-1] would wrap to the total otherwise)
-    ends = val_bounds[1:]
-    byte_bounds[1:] = np.where(ends == 0, 0, cum_bytes[np.maximum(ends, 1) - 1])
-    offs32 = byte_bounds.astype(np.int32)
+    out = np.zeros(total, dtype=np.uint8)
+    starts = ends - nbytes
+    cur = v.copy()
+    for b in range(int(nbytes.max(initial=0))):  # byte slots, not values
+        mask = nbytes > b
+        byte = (cur[mask] & _U64(0x7F)).astype(np.uint8)
+        more = (nbytes[mask] > (b + 1)).astype(np.uint8) << 7
+        out[starts[mask] + b] = byte | more
+        cur >>= _SEVEN
+    # a group ends at the byte end of its last value; an empty group
+    # (leading, inner or trailing, several in a row) ends where the
+    # previous one did
+    byte_bounds = np.concatenate([[0], ends])[np.concatenate([[0], np.cumsum(gl)])]
     return pa.BinaryArray.from_buffers(
-        pa.binary(), gl.size, [None, pa.py_buffer(offs32), pa.py_buffer(out)]
+        pa.binary(), gl.size,
+        [None, pa.py_buffer(byte_bounds.astype(np.int32)), pa.py_buffer(out)],
     )
+
+
+def varint_decode(column, delta=None) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a whole binary column of varint payloads in one pass over
+    its offset and data buffers.
+
+    ``column`` is a (Large)BinaryArray, possibly sliced, or a
+    ChunkedArray of them. Returns ``(values, offsets)``: the int64
+    values of every row concatenated, and row i's values at
+    ``values[offsets[i]:offsets[i + 1]]``. ``delta`` undoes a delta
+    chain with a segmented cumsum: None keeps the values as stored,
+    ``"row"`` restarts the chain at each row (doc_ids), and an int
+    array of run lengths summing to the value count restarts it at each
+    run (positions, whose runs are the docs' freqs)."""
+    if isinstance(column, pa.ChunkedArray):
+        column = column.combine_chunks()
+    n_rows = len(column)
+    bufs = column.buffers()
+    offs = np.zeros(1, dtype=np.int64)
+    if n_rows:
+        off_type = np.int64 if pa.types.is_large_binary(column.type) else np.int32
+        offs = np.frombuffer(bufs[1], dtype=off_type,
+                             count=column.offset + n_rows + 1)[column.offset:]
+        offs = offs.astype(np.int64)
+    data = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+            else np.zeros(0, dtype=np.uint8))
+    raw = data[offs[0]: offs[-1]]
+    # every value ends at a byte without the continuation bit
+    last = raw < 0x80
+    ends = np.flatnonzero(last)
+    n_vals_before = np.concatenate([[0], np.cumsum(last)])
+    row_offs = n_vals_before[offs - offs[0]]
+    if ends.size == 0:
+        return np.zeros(0, dtype=np.int64), row_offs
+    starts = np.concatenate([[0], ends[:-1] + 1])
+    shift = (np.arange(raw.size) - np.repeat(starts, ends - starts + 1)) * 7
+    vals = np.add.reduceat(
+        (raw & 0x7F).astype(_U64) << shift.astype(_U64), starts
+    ).astype(np.int64)
+    if delta is None:
+        return vals, row_offs
+    runs = np.diff(row_offs) if isinstance(delta, str) else np.asarray(delta, np.int64)
+    csum = np.cumsum(vals)
+    run_base = np.concatenate([[0], csum])[np.cumsum(runs) - runs]
+    return csum - np.repeat(run_base, runs), row_offs

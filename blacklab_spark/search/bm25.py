@@ -15,10 +15,11 @@ reference search/BlackLabIndexAbstract.java:496,619). Our execution:
    skipping — terms in desc max-contribution order, θ = running k-th
    best, blocks skipped when their stored max impact cannot reach/tie
    θ or when their [min_doc,max_doc] range holds no remaining
-   candidate — over memoized block decodes, then a per-segment exact
-   top-k. Two plans, chosen from the input: a cogroup with a metadata
-   filter's allowed docs per segment, or the plain segment-partitioned
-   groupBy; the tombstones ride in the scorer's closure. Both hash
+   candidate — over the segment's blocks decoded up front, one codec
+   pass per column, then a per-segment exact top-k. Two plans, chosen
+   from the input: a cogroup with a metadata filter's allowed docs per
+   segment, or the plain segment-partitioned groupBy, both through
+   applyInArrow; the tombstones ride in the scorer's closure. Both hash
    the segments into tasks (_seg_partitioned): one per core for a
    single query, so it scores in one wave of tasks that each score
    several segments; up to eight per core for a batch,
@@ -42,7 +43,6 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -60,23 +60,15 @@ _SEG_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("score", T.DoubleType()),
 ])
-_EMPTY_SEG = pd.DataFrame(
-    {"query_id": pd.Series([], dtype=np.int32),
-     "doc_id": pd.Series([], dtype=np.int64),
-     "score": pd.Series([], dtype=np.float64)}
-)
+_SEG_ARROW = to_arrow_schema(_SEG_SCHEMA)
 
 
 def _maxscore_query(
     scores: np.ndarray,
-    blocks_by_term: dict,
     qidf_map: dict,
     k: int,
-    base: int,
-    seg_size: int,
-    allow_arr,
-    seg_dead_arr: np.ndarray,
-    decode_block,
+    term_rows: dict,
+    blocks: tuple,
 ) -> None:
     """MaxScore / block-max scoring of ONE query into ``scores`` — the
     single kernel shared by topk_bm25 and batch_topk (the analogue of
@@ -90,29 +82,32 @@ def _maxscore_query(
     remaining terms:
      * if U_t + R <= θ, no unseen doc can reach the top-k, so only docs
        with score > θ - (U_t + R) (candidates) matter — blocks whose
-       [min_doc, max_doc] range holds no candidate are skipped without
-       decoding;
+       [min_doc, max_doc] range holds no candidate are skipped;
      * any block with idf_t*bmax + M + R <= θ (M = current max segment
        score) cannot change the top-k and is skipped.
     Strict comparisons everywhere: a doc that can still TIE the k-th
     score may win on the ascending-doc_id tie-break.
 
-    ``blocks_by_term`` maps term -> (block rows, max block_max_wtf_raw);
-    ``decode_block(term, block_idx, row) -> (local_doc_ids, w_base)``
-    returns idf-independent weights (memoized per segment, so a block
-    a batch's queries share decodes once). Tombstoned docs (``seg_dead_arr``,
-    local ids) are zeroed as we go so they never contribute to θ
-    (they'd cause over-pruning of live candidates)."""
+    ``term_rows`` maps term -> (first block row, end block row, max
+    block_max_wtf_raw) over the segment's block rows, grouped by term.
+    ``blocks`` is (lo, hi, bmax, offs, local, w): per block row the
+    local doc range [lo, hi) its [min_doc, max_doc] covers, its stored
+    block_max_wtf_raw and its value offsets into the segment's decoded
+    local doc ids and idf-independent weights. Weights of tombstoned
+    docs and of docs a filter excludes are zero, so they never score
+    and never contribute to θ (they'd cause over-pruning of live
+    candidates)."""
     items = []
     for t, qidf in qidf_map.items():
-        got = blocks_by_term.get(t)
+        got = term_rows.get(t)
         if got is not None:
-            items.append((t, qidf, qidf * got[1]))
+            items.append((t, qidf, qidf * got[2]))
     if not items:
         return
     items.sort(key=lambda x: (-x[2], x[0]))
     u = np.array([it[2] for it in items])
     suffix_r = np.concatenate([np.cumsum(u[::-1])[::-1][1:], [0.0]])
+    lo, hi, bmax, offs, local, w = blocks
     theta = 0.0
     for i, (t, qidf, u_t) in enumerate(items):
         rem = float(suffix_r[i])
@@ -123,27 +118,18 @@ def _maxscore_query(
                 continue
             cand_cum = np.concatenate([[0], np.cumsum(cand)])
         m_cur = float(scores.max()) if theta > 0.0 else np.inf
-        for bi, r in enumerate(blocks_by_term[t][0]):
-            if qidf * r.block_max_wtf_raw + m_cur + rem < theta:
+        r0, r1, _ = term_rows[t]
+        for r in range(r0, r1):
+            if qidf * bmax[r] + m_cur + rem < theta:
                 continue  # block-max skip: can't reach or tie top-k
-            if cand_cum is not None:
-                lo = max(int(r.min_doc) - base, 0)
-                hi = min(int(r.max_doc) - base + 1, seg_size)
-                if cand_cum[hi] - cand_cum[lo] == 0:
-                    continue  # no candidate doc in this block's range
-            local, w = decode_block(t, bi, r)
-            if allow_arr is not None:
-                keep = np.isin(local + base, allow_arr)
-                local, w = local[keep], w[keep]
-            np.add.at(scores, local, qidf * w)
-        if seg_dead_arr.size:
-            scores[seg_dead_arr] = 0.0
+            if cand_cum is not None and cand_cum[hi[r]] - cand_cum[lo[r]] == 0:
+                continue  # no candidate doc in this block's range
+            sl = slice(offs[r], offs[r + 1])
+            np.add.at(scores, local[sl], qidf * w[sl])
         nz_now = np.flatnonzero(scores)
         if nz_now.size >= k:
             s = scores[nz_now]
             theta = float(np.partition(s, nz_now.size - k)[nz_now.size - k])
-    if seg_dead_arr.size:
-        scores[seg_dead_arr] = 0.0
 
 
 def _topk_select(scores: np.ndarray, k: int) -> np.ndarray:
@@ -227,13 +213,12 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
     """(query_id, doc_id, score): every segment's exact top-k for every
     query in ``idf_maps``, scored by ONE per-segment function.
 
-    The scorer runs the MaxScore/block-max kernel (_maxscore_query) per
-    query over shared block state: blocks are decoded lazily and
-    memoized, so a block several queries need decodes once and a block
-    no query's θ bound reaches is never decoded. One dense seg_size
-    accumulator serves every query and is reset candidate-
-    proportionally (scores[nz] = 0) between queries — no per-query
-    memset.
+    The scorer decodes the segment's blocks of every query term once,
+    one codec pass per column (codec.varint_decode), and runs the
+    MaxScore/block-max kernel (_maxscore_query) per query over that
+    shared state. One dense seg_size accumulator serves every query and
+    is reset candidate-proportionally (scores[nz] = 0) between queries —
+    no per-query memset.
 
     Plan, chosen from the input: with a filter, the postings cogroup
     with its allowed docs (``allowed_df``, segment_id/doc_id), so each
@@ -242,8 +227,9 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
     acceptedDocs bitset per segment); without one, the plain
     segment-partitioned groupBy. The generation's tombstones (liveDocs
     analogue, collected once per generation) ride in the scorer's
-    closure like the idf maps, and are zeroed before per-segment
-    selection so dead docs can't crowd out live candidates."""
+    closure like the idf maps; their weights, like those of docs the
+    filter excludes, are zeroed before scoring, so dead docs can't
+    crowd out live candidates."""
     st = corpus.state
     meta, dead = st.meta, st.dead
     seg_size = meta["segment_size"]
@@ -255,33 +241,37 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
         "doc_ids", "freqs", "dls", "block_max_wtf_raw",
     )
 
-    def score_segment(pdf: pd.DataFrame, allow_arr: np.ndarray | None) -> pd.DataFrame:
-        base = int(pdf["segment_id"].iloc[0]) * seg_size
-        blocks_by_term = {
-            term: (rows := list(grp.itertuples(index=False)),
-                   max(r.block_max_wtf_raw for r in rows))
-            for term, grp in pdf.groupby("term")
-        }
-        lo, hi = np.searchsorted(dead, (base, base + seg_size))
-        seg_dead_arr = dead[lo:hi] - base
-        decoded: dict[tuple, tuple] = {}
-
-        def decode_block(t, bi, r):
-            got = decoded.get((t, bi))
-            if got is None:
-                dids = codec.decode_doc_ids(r.doc_ids)
-                tf = codec.decode_freqs(r.freqs)
-                dl = codec.decode_freqs(r.dls)
-                got = (dids - base,
-                       tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl)))
-                decoded[(t, bi)] = got
-            return got
+    def score_segment(tbl: pa.Table, allow_arr: np.ndarray | None) -> pa.Table:
+        base = tbl.column("segment_id")[0].as_py() * seg_size
+        tbl = tbl.sort_by("term")  # each term's block rows contiguous
+        terms = tbl.column("term").to_numpy(zero_copy_only=False)
+        bmax = tbl.column("block_max_wtf_raw").to_numpy()
+        t_starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+        t_ends = np.r_[t_starts[1:], len(terms)]
+        term_rows = {terms[r0]: (r0, r1, bmax[r0:r1].max())
+                     for r0, r1 in zip(t_starts.tolist(), t_ends.tolist())}
+        # every block of the query terms decoded up front, once per
+        # segment: one pass per column costs less than decoding only
+        # the blocks pruning keeps, one block at a time
+        dids, offs = codec.varint_decode(tbl.column("doc_ids"), "row")
+        tf, _ = codec.varint_decode(tbl.column("freqs"))
+        dl, _ = codec.varint_decode(tbl.column("dls"))
+        w = tf / (tf + k1 * (1.0 - b_ + b_ * dl / avgdl))
+        lo_dead, hi_dead = np.searchsorted(dead, (base, base + seg_size))
+        drop = np.isin(dids, dead[lo_dead:hi_dead])
+        if allow_arr is not None:
+            drop |= ~np.isin(dids, allow_arr)
+        w[drop] = 0.0
+        blocks = (
+            np.maximum(tbl.column("min_doc").to_numpy() - base, 0),
+            np.minimum(tbl.column("max_doc").to_numpy() - base + 1, seg_size),
+            bmax, offs, dids - base, w,
+        )
 
         scores = np.zeros(seg_size, dtype=np.float64)
         out_q, out_d, out_s = [], [], []
         for qid, idf_map in enumerate(idf_maps):
-            _maxscore_query(scores, blocks_by_term, idf_map, k, base,
-                            seg_size, allow_arr, seg_dead_arr, decode_block)
+            _maxscore_query(scores, idf_map, k, term_rows, blocks)
             sel = _topk_select(scores, k)
             if sel.size:
                 out_q.append(np.full(sel.size, qid, dtype=np.int32))
@@ -291,32 +281,30 @@ def _segment_topk(corpus, idf_maps: list[dict], k: int,
             if nz.size:
                 scores[nz] = 0.0
         if not out_q:
-            return _EMPTY_SEG
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q),
-             "doc_id": np.concatenate(out_d),
-             "score": np.concatenate(out_s)}
+            return _SEG_ARROW.empty_table()
+        return pa.Table.from_arrays(
+            [np.concatenate(out_q), np.concatenate(out_d), np.concatenate(out_s)],
+            schema=_SEG_ARROW,
         )
 
     posts = _seg_partitioned(corpus, posts, len(idf_maps))
     if allowed_df is None:
         # single-arg lambda: a two-arg function would be called with
-        # (key, pdf)
-        return posts.groupBy("segment_id").applyInPandas(
-            lambda pdf: score_segment(pdf, None), schema=_SEG_SCHEMA
+        # (key, table)
+        return posts.groupBy("segment_id").applyInArrow(
+            lambda tbl: score_segment(tbl, None), schema=_SEG_SCHEMA
         )
 
-    def score_with_docs(posts_pdf: pd.DataFrame,
-                        docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(posts_pdf) == 0 or len(docs_pdf) == 0:
-            return _EMPTY_SEG
-        return score_segment(posts_pdf, docs_pdf["doc_id"].to_numpy(np.int64))
+    def score_with_docs(posts_tbl: pa.Table, docs_tbl: pa.Table) -> pa.Table:
+        if posts_tbl.num_rows == 0 or docs_tbl.num_rows == 0:
+            return _SEG_ARROW.empty_table()
+        return score_segment(posts_tbl, docs_tbl.column("doc_id").to_numpy())
 
     return (
         posts.groupBy("segment_id")
         .cogroup(_seg_partitioned(corpus, allowed_df, len(idf_maps))
                  .groupBy("segment_id"))
-        .applyInPandas(score_with_docs, schema=_SEG_SCHEMA)
+        .applyInArrow(score_with_docs, schema=_SEG_SCHEMA)
     )
 
 

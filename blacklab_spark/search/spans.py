@@ -154,37 +154,32 @@ def token_positions(
 
 
 def _decode_posting_positions(corpus, posts: DataFrame) -> DataFrame:
-    """Posting blocks -> (doc_id, start, end) rows. Vectorized numpy
-    decode per Arrow batch; tombstoned docs anti-joined out."""
-    import pandas as pd
+    """Posting blocks -> (doc_id, start, end) rows: one codec pass per
+    column of each Arrow batch. The generation's tombstones (sorted,
+    collected once per generation) ride in the closure and are dropped
+    in the kernel, so a tombstoned index runs the plain plan."""
+    import pyarrow as pa
 
-    def decode(it):
-        for pdf in it:
-            outs_d, outs_p = [], []
-            for r in pdf.itertuples(index=False):
-                dids = codec.decode_doc_ids(r.doc_ids)
-                tf = codec.decode_freqs(r.freqs)
-                pos = codec.decode_positions(r.positions, tf)
-                outs_d.append(np.repeat(dids, tf))
-                outs_p.append(pos)
-            if outs_d:
-                d = np.concatenate(outs_d)
-                p = np.concatenate(outs_p)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": d.astype(np.int64),
-                        "start": p.astype(np.int32),
-                        "end": (p + 1).astype(np.int32),
-                    }
+    dead = corpus.state.dead
+
+    def decode(batches):
+        for batch in batches:
+            dids, _ = codec.varint_decode(batch.column("doc_ids"), "row")
+            tf, _ = codec.varint_decode(batch.column("freqs"))
+            pos, _ = codec.varint_decode(batch.column("positions"), tf)
+            d = np.repeat(dids, tf)
+            if dead.size:
+                live = ~np.isin(d, dead)
+                d, pos = d[live], pos[live]
+            if d.size:
+                start = pos.astype(np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    [d, start, start + 1], names=["doc_id", "start", "end"]
                 )
 
-    out = posts.select("doc_ids", "freqs", "positions").mapInPandas(
+    return posts.select("doc_ids", "freqs", "positions").mapInArrow(
         decode, schema="doc_id long, start int, end int"
     )
-    dels = corpus.deletes
-    if dels is not None:
-        out = out.join(dels, "doc_id", "leftanti")
-    return out
 
 
 def postings_hits(corpus, terms: list[str], field: str = "word@i") -> DataFrame:

@@ -76,7 +76,7 @@ def _spark_jobs(sc, fn):
 
 def _scoring_tasks(sc, jobs) -> list[int]:
     """Task counts of the stages of ``jobs`` that ran the scoring UDF:
-    those whose plan nodes include a FlatMap(Co)GroupsInPandas.
+    those whose plan nodes include a FlatMap(Co)GroupsInArrow.
 
     Reads Spark internals over py4j: the listener bus's waitUntilEmpty
     (in _spark_jobs), the status store's operationGraphForStage, and
@@ -99,7 +99,7 @@ def _scoring_tasks(sc, jobs) -> list[int]:
             if stage.status().toString() == "SKIPPED":
                 continue
             graph = store.operationGraphForStage(sid)
-            if any("InPandas" in n for n in names(graph.rootCluster())):
+            if any("GroupsInArrow" in n for n in names(graph.rootCluster())):
                 tasks.append(stage.numTasks())
     return tasks
 
@@ -363,10 +363,11 @@ TOPK_JOB_BUDGET = {
 }
 
 # Spark jobs per warm find(...).count() on the same corpus: the span
-# query anti-joins the generation's tombstones as a local relation.
+# leaf decoder drops the generation's tombstones in its kernel, so a
+# tombstoned index runs the plain plan.
 FIND_COUNT_JOB_BUDGET = {
     "plain": 2,
-    "tombstoned": 3,
+    "tombstoned": 2,
 }
 
 

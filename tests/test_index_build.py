@@ -1,4 +1,5 @@
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from blacklab_spark.index import codec
@@ -63,16 +64,19 @@ def test_postings_decode_matches_oracle(small_corpus):
             .orderBy("segment_id", "block_id")
             .collect()
         )
+        dids, offs = codec.varint_decode(
+            pa.array([bytes(b["doc_ids"]) for b in blocks], pa.binary()), "row")
+        tf, _ = codec.varint_decode(
+            pa.array([bytes(b["freqs"]) for b in blocks], pa.binary()))
+        pos, _ = codec.varint_decode(
+            pa.array([bytes(b["positions"]) for b in blocks], pa.binary()), tf)
         got: dict[int, list[int]] = {}
-        for blk in blocks:
-            dids = codec.decode_doc_ids(bytes(blk["doc_ids"]))
-            tf = codec.decode_freqs(bytes(blk["freqs"]))
-            pos = codec.decode_positions(bytes(blk["positions"]), tf)
-            off = 0
-            for d, f_ in zip(dids, tf):
-                got[int(d)] = [int(p) for p in pos[off : off + f_]]
-                off += f_
-            assert blk["min_doc"] == dids[0] and blk["max_doc"] == dids[-1]
+        pos_offs = np.cumsum(tf) - tf
+        for d, p0, f_ in zip(dids, pos_offs, tf):
+            got[int(d)] = [int(p) for p in pos[p0: p0 + f_]]
+        for blk, lo, hi in zip(blocks, offs[:-1], offs[1:]):
+            assert hi > lo
+            assert blk["min_doc"] == dids[lo] and blk["max_doc"] == dids[hi - 1]
         assert got == oracle.postings[term], term
 
 
@@ -81,11 +85,11 @@ def test_dls_match_doc_lengths(small_corpus):
     lens = {
         r["doc_id"]: r["num_tokens"] for r in corpus.doc_stats.collect()
     }
-    blk = corpus.postings.limit(20).collect()
-    for b in blk:
-        dids = codec.decode_doc_ids(bytes(b["doc_ids"]))
-        dls = codec.decode_freqs(bytes(b["dls"]))
-        assert [lens[int(d)] for d in dids] == [int(x) for x in dls]
+    blk = corpus.postings.select("doc_ids", "dls").limit(20).toArrow()
+    dids, offs = codec.varint_decode(blk.column("doc_ids"), "row")
+    dls, dl_offs = codec.varint_decode(blk.column("dls"))
+    assert np.array_equal(offs, dl_offs) and offs[-1] > 0
+    assert [lens[int(d)] for d in dids] == [int(x) for x in dls]
 
 
 def test_resume_skips_done_stages(small_corpus, spark, small_cfg, tmp_path):
@@ -162,8 +166,6 @@ def test_encoder_nonmonotonic_doc_order():
     keys on the actual doc id, not the row index): block-max pruning
     computes candidate ranges from min/max, and negative deltas would
     wrap to 10-byte varints."""
-    import pyarrow as pa
-
     from blacklab_spark.config import EngineConfig
     from blacklab_spark.index.build import make_encoder
 
@@ -178,5 +180,5 @@ def test_encoder_nonmonotonic_doc_order():
     rows = {r["term"]: r for r in enc(table).to_pylist()}
     a = rows["a"]
     assert (a["min_doc"], a["max_doc"]) == (3, 5)
-    assert list(codec.decode_doc_ids(a["doc_ids"])) == [3, 5]
+    assert list(codec.varint_decode(pa.array([a["doc_ids"]]), "row")[0]) == [3, 5]
     assert rows["b"]["min_doc"] == 5 and rows["c"]["min_doc"] == 3

@@ -1,11 +1,8 @@
 """Regression tests for review findings: fimatch gating on annotation
-clauses, empty facets, gap-filler escaping, grouped-varint zero groups,
-bare-literal constraints."""
+clauses, empty facets, gap-filler escaping, bare-literal constraints
+(grouped-varint zero groups: tests/test_codec.py)."""
 
-import numpy as np
 import pytest
-
-from blacklab_spark.index import codec
 
 from micro_corpus import transcripts_pdf
 
@@ -20,33 +17,6 @@ def micro(spark, tmp_path_factory):
         spark, spark.createDataFrame(transcripts_pdf()), d,
         EngineConfig(segment_size=2, block_size=4),
     )
-
-
-def _slow_varints(vals, lens):
-    out, i = [], 0
-    for g in lens:
-        chunk, i = vals[i:i + g], i + g
-        bs = bytearray()
-        for v in chunk:
-            v = int(v)
-            while True:
-                b = v & 0x7F
-                v >>= 7
-                bs.append(b | (0x80 if v else 0))
-                if not v:
-                    break
-        out.append(bytes(bs))
-    return out
-
-
-def test_grouped_varint_zero_groups():
-    # consecutive leading/inner/trailing empty groups must not corrupt
-    # group boundaries (both the bytes-list and Arrow-buffer paths)
-    vals = (np.arange(13, dtype=np.uint64) + 200)
-    lens = np.array([0, 0, 0, 2, 2, 1, 4, 0, 4])
-    exp = _slow_varints(vals, lens)
-    assert codec.varint_encode_grouped(vals, lens) == exp
-    assert codec.varint_encode_grouped_arrow(vals, lens).to_pylist() == exp
 
 
 def test_fimatch_zero_disables_annotation_probe(micro):

@@ -139,7 +139,8 @@ def reconstruct_term_vector(
     looking for the doc). Here: block-pruned postings scan -> vectorized
     decode keeping (term, position) for the one doc -> order by position.
     Prints `pos: term`, '[' for positions the window misses."""
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
 
     from blacklab_spark.index import codec
 
@@ -150,26 +151,21 @@ def reconstruct_term_vector(
     )
 
     def decode(batches):
-        for pdf in batches:
-            terms, poss = [], []
-            for r in pdf.itertuples():
-                dids = codec.decode_doc_ids(r.doc_ids)
-                hit = dids == doc
-                if not hit.any():
-                    continue
-                tf = codec.decode_freqs(r.freqs)
-                pos = codec.decode_positions(r.positions, tf)
-                starts = tf.cumsum() - tf
-                (i,) = hit.nonzero()
-                i = int(i[0])
-                for p in pos[starts[i]: starts[i] + tf[i]]:
-                    terms.append(r.term)
-                    poss.append(int(p))
-            yield pd.DataFrame({"term": terms, "pos": poss})
+        for batch in batches:
+            dids, offs = codec.varint_decode(batch.column("doc_ids"), "row")
+            tf, _ = codec.varint_decode(batch.column("freqs"))
+            pos, _ = codec.varint_decode(batch.column("positions"), tf)
+            block_row = np.repeat(np.arange(batch.num_rows), np.diff(offs))
+            hit = np.repeat(dids == doc, tf)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("term").take(np.repeat(block_row, tf)[hit]),
+                 pos[hit].astype(np.int32)],
+                names=["term", "pos"],
+            )
 
     rows = (
         posts.select("term", "doc_ids", "freqs", "positions")
-        .mapInPandas(decode, "term string, pos int")
+        .mapInArrow(decode, "term string, pos int")
         .filter((F.col("pos") >= lo) & (F.col("pos") < lo + num))
         .orderBy("pos")
         .collect()
