@@ -127,7 +127,7 @@ def main() -> None:
 
     timed("termfreq", lambda: term_frequencies(corpus).limit(100).collect())
     timed("hits_grouped",
-          lambda: corpus.find('"word00002"').group_by_metadata("role").collect())
+          lambda: corpus.find('"word00002"').group_by(["field:role"]).collect())
     timed("kwic",
           lambda: corpus.find('"word00003"').kwic(5).limit(100).collect())
 
@@ -237,7 +237,7 @@ def main() -> None:
         timed_big("termfreq",
                   lambda: term_frequencies(big).limit(100).collect())
         timed_big("hits_grouped",
-                  lambda: big.find('"word00002"').group_by_metadata("role").collect())
+                  lambda: big.find('"word00002"').group_by(["field:role"]).collect())
         timed_big("kwic",
                   lambda: big.find('"word00003"').kwic(5).limit(100).collect())
         # dedup family at 64x: the transcript texts AS the documents

@@ -267,8 +267,11 @@ GROUP BY q.t
 
 def q_docs_grouped_by_lang(spark, sf_dir):
     c = _corpus(spark, sf_dir)
-    g = c.find('"spark"').group_by_metadata("role")
-    return g.select(F.col("role").alias("lang"), "n_hits", "n_docs")
+    g = c.find('"spark"').group_by(["field:role"])
+    return g.select(
+        F.col("field_role").alias("lang"), F.col("size").alias("n_hits"),
+        "n_docs",
+    )
 
 
 O_DOCS_GROUPED = f"""

@@ -16,13 +16,20 @@ Returns a DataFrame shaped by the terminal operation, exactly like the
 BLS response kinds: hits (KWIC rows), hits-grouped, docs, docs-grouped,
 or collocations (`calc="colloc"`). No HTTP layer — the parameter
 algebra IS the capability being grafted.
+
+``sort``, ``group`` and ``viewgroup`` name hit properties — one
+criterion or a comma-separated compound — and all go through the one
+property path in search.results (`Hits.sort_by`, `Hits.group_by`,
+`Hits.filter_by_property`). Hits-grouped results have one schema: a
+key column per criterion (`group_key_name`), then ``size`` (hits) and
+``n_docs`` (documents).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from blacklab_spark.search.results import Hits
+from blacklab_spark.search.results import Hits, parse_criteria
 
 
 def resolve_pid(corpus, pid: str) -> int | None:
@@ -98,28 +105,26 @@ def annotation_values(corpus, annotation: str, limit: int = 200) -> dict:
     }
 
 
-def _sort_groups(g: DataFrame, sort: str | None) -> DataFrame:
-    """Group-level sort on a grouped result (reference
-    HitGroupProperty/DocGroupProperty deserialization: ``size`` —
-    descending by default, HitGroupPropertySize.sortDescendingByDefault
-    — and ``identity`` (the group key) ascending; a ``-`` prefix
-    reverses). Hit-level sort criteria don't apply to grouped output
-    and leave the default size-desc order."""
+def _sort_groups(g: DataFrame, sort: str | None, keys: list[str],
+                 size: str) -> DataFrame:
+    """Group-level sort on a grouped result with key columns ``keys``
+    and count column ``size`` (reference HitGroupProperty/
+    DocGroupProperty deserialization: ``size`` — descending by default,
+    HitGroupPropertySize.sortDescendingByDefault — and ``identity``
+    (the group key) ascending; a ``-`` prefix reverses). Hit-level sort
+    criteria don't apply to grouped output and leave the default
+    size-desc order."""
     from pyspark.sql import functions as F
 
     if not sort:
         return g
     rev = sort.startswith("-")
     crit = sort[1:] if rev else sort
-    counts = {"size", "n_hits", "n_docs", "sample_hits"}
     if crit in ("size", "numhits"):
-        col = "size" if "size" in g.columns else "n_hits"
-        keys = [c for c in g.columns if c not in counts]
         return g.orderBy(
-            F.col(col).asc() if rev else F.col(col).desc(), *keys
+            F.col(size).asc() if rev else F.col(size).desc(), *keys
         )
     if crit == "identity":
-        keys = [c for c in g.columns if c not in counts]
         return g.orderBy(
             *[F.col(k).desc() if rev else F.col(k).asc() for k in keys]
         )
@@ -296,7 +301,7 @@ def search(
                 .agg(F.count(F.lit(1)).alias("n_docs"))
                 .orderBy(F.desc("n_docs"), group)
             )
-            return _out(_sort_groups(g, sort))
+            return _out(_sort_groups(g, sort, [group], "n_docs"))
         return _out(docs)
 
     # "corpusql" is the reference's name for BCQL and its pattlang
@@ -406,80 +411,28 @@ def search(
         rc = hits.count_running()
         _state["total"] = rc.total() if waitfortotal else rc
 
-    # ---- grouping requests -----------------------------------------
+    # ---- hit properties: group / viewgroup / sort ------------------
+    # one criterion or a comma-separated compound (HitPropertyMultiple);
+    # every key derives in Hits._with_keys
     if group and viewgroup is None:
-        if "," in group:
-            # compound criteria (reference HitPropertyMultiple)
-            g = hits.group_by([c.strip() for c in group.split(",")])
-        elif group == "decade":
-            g = hits.group_by_decade()
-        elif group.startswith("field:"):
-            g = hits.group_by_metadata(group.split(":", 1)[1])
-        elif group.startswith("hit:") or group == "hit":
-            ann = group.split(":", 1)[1] if ":" in group else "word"
-            g = hits.group_by_hit_text(ann or "word")
-        elif group.startswith("capture:"):
-            g = hits.group_by_capture(group.split(":", 1)[1])
-        else:
-            # any other single criterion _with_keys understands
-            # (context DSL, doc/docid, fieldlen, numhits, ...) —
-            # unknown names raise there
-            g = hits.group_by([group])
-        return _out(_sort_groups(g, sort))
+        crits = parse_criteria(group)
+        g = hits.group_by(crits)
+        return _out(_sort_groups(g, sort, g.columns[:len(crits)], "size"))
 
     if viewgroup is not None:
         # hits of one group (reference RequestHandler viewgroup param)
         if not group:
             raise ValueError("viewgroup requires group")
-        if group == "decade":
-            decade = (F.year("ts") - F.year("ts") % 10)
-            docs = corpus.doc_stats.filter(decade == int(viewgroup)).select("doc_id")
-            hits = Hits(corpus, hits.df.join(docs, "doc_id", "leftsemi"))
-        elif group.startswith("field:"):
-            col = group.split(":", 1)[1]
-            # XML-format meta_<field> columns live on the tokenized
-            # table, not the doc_stats projection
-            docs = corpus.doc_stats if col in corpus.doc_stats.columns \
-                else corpus.tokenized
-            docs = docs.filter(F.col(col) == viewgroup).select("doc_id")
-            hits = Hits(corpus, hits.df.join(docs, "doc_id", "leftsemi"))
-        elif group == "hit" or group.startswith("hit:"):
-            ann = group.split(":", 1)[1] if ":" in group else "word"
-            ctx = hits.with_context(0, ann or "word")
-            h = ctx.withColumn("_grp", F.array_join("match", " ")).filter(
-                F.col("_grp") == viewgroup
+        crits = parse_criteria(group)
+        if len(crits) != 1:
+            raise ValueError(
+                f"viewgroup needs a single group criterion; {group!r} "
+                f"has {len(crits)}"
             )
-            hits = Hits(corpus, h.select(*[c for c in hits.df.columns]))
-        elif group == "context" or group.startswith("context:"):
-            hits = hits.filter_by_property(group, viewgroup)
-        else:
-            raise ValueError(f"unsupported viewgroup criterion: {group!r}")
+        hits = hits.filter_by_property(crits[0], viewgroup)
 
-    # ---- sort -------------------------------------------------------
     if sort:
-        if "," in sort:
-            hits = hits.sort_by([c.strip() for c in sort.split(",")])
-        elif sort.startswith("field:"):
-            col = sort.split(":", 1)[1]
-            src = corpus.doc_stats if col in corpus.doc_stats.columns \
-                else corpus.tokenized
-            j = hits.df.join(
-                src.select("doc_id", col), "doc_id"
-            ).orderBy(col, "doc_id", "start", "end").drop(col)
-            hits = Hits(corpus, j)
-        elif sort in ("left", "right"):
-            hits = hits.sort_by_context(sort)
-        elif sort == "hitposition":
-            hits = hits.sort_by_hit_position()
-        elif sort.startswith("hit"):
-            hits = hits.sort_by_hit_text(
-                sort.split(":", 1)[1] if ":" in sort else "word"
-            )
-        else:
-            # any other single criterion _with_keys understands
-            # (context DSL, doc/docid, fieldlen, numhits, wordleft,
-            # capture, decade, ...) — unknown names raise there
-            hits = hits.sort_by([sort])
+        hits = hits.sort_by(parse_criteria(sort))
 
     # ---- collocations ----------------------------------------------
     if calc == "colloc":
@@ -501,14 +454,11 @@ def search(
                 # snippets drops the hidden sort keys; join them back
                 # from the (already windowed, small) hit set and
                 # re-assert the sorted order
-                snip = (
-                    snip.join(
-                        hits.df.select("doc_id", "start", "end", *ord_cols),
-                        ["doc_id", "start", "end"],
-                    )
-                    .orderBy(*ord_cols, "doc_id", "start", "end")
-                    .drop(*ord_cols)
+                j = snip.join(
+                    hits.df.select("doc_id", "start", "end", *ord_cols),
+                    ["doc_id", "start", "end"],
                 )
+                snip = j.orderBy(*Hits(corpus, j)._hit_order()).drop(*ord_cols)
             return _out(snip)
         anns = [a.strip() for a in listvalues.split(",") if a.strip()] \
             if listvalues else None

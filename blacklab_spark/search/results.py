@@ -5,16 +5,38 @@ DocResults.java:40, Facets.java:9, Kwics.java, Contexts.java:49-108).
 
 A hits DataFrame is (doc_id, start, end [, cap_* ...]). Every operator
 here is a pure DataFrame transform: sort = orderBy, group = groupBy/agg,
-window = row_number filter, sample = seeded orderBy(rand), KWIC/context
-= slice() into the tokenized table's token arrays (the forward index).
-All stay JVM-side (no Python UDFs).
+window = ordered offset/limit, sample = seeded orderBy(rand),
+KWIC/context = slice() into the tokenized table's token arrays (the
+forward index).
+
+Hit properties have one path: `Hits.sort_by`, `Hits.group_by` and
+`Hits.filter_by_property` take a criterion list (one criterion or a
+compound, HitPropertyMultiple) and derive every key in
+`Hits._with_keys`. Everything stays JVM-side except the collator sort
+key of text sorts (search/collation.py, an Arrow UDF).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from blacklab_spark.search.collation import collation_keys
+
 HIT_COLS = ("doc_id", "start", "end")
+
+
+def parse_criteria(spec: str) -> list[str]:
+    """A BLS sort/group parameter as a criterion list: comma-separated
+    parts (reference HitPropertyMultiple serialization), blanks
+    dropped."""
+    return [c.strip() for c in spec.split(",") if c.strip()]
+
+
+def group_key_name(criterion: str) -> str:
+    """Column name of a criterion's key in a hit grouping: the
+    criterion with every character outside [A-Za-z0-9_] replaced by
+    ``_`` (``field:role`` -> ``field_role``, ``hit`` -> ``hit``)."""
+    return "".join(c if c.isalnum() or c == "_" else "_" for c in criterion)
 
 
 def _ctx_slices(toks: str, size: int):
@@ -241,7 +263,7 @@ class Hits:
     # A Spark orderBy is destroyed by the next join/shuffle, but the
     # reference's Hits KEEP their sort through windowing and KWIC
     # rendering (HitsAbstract.java:154-196 window over sorted hits).
-    # Sorts therefore materialize their keys as hidden ``_ordN``
+    # sort_by therefore materializes its keys as hidden ``_ordN``
     # columns that ride along the hits DataFrame; window() and kwic()
     # re-assert the order from them. They are name-detected so every
     # `Hits(corpus, out)` construction propagates them for free.
@@ -260,25 +282,6 @@ class Hits:
             F.col(c).desc() if c.startswith("_ordD") else F.col(c)
             for c in self._order_cols
         ] + ["doc_id", "start", "end"]
-
-    def _sorted(self, keys: list, base_df: DataFrame | None = None,
-                descs: list[bool] | None = None) -> "Hits":
-        """New Hits sorted by ``keys`` (Column expressions over
-        ``base_df``, default self.df), keys kept as ``_ord[D]N``."""
-        df = base_df if base_df is not None else self.df
-        stale = [c for c in df.columns if c.startswith("_ord")]
-        if stale:  # a re-sort replaces the previous order
-            df = df.drop(*stale)
-        descs = descs or [False] * len(keys)
-        ords = []
-        for i, (k, d) in enumerate(zip(keys, descs)):
-            name = f"_ordD{i}" if d else f"_ord{i}"
-            df = df.withColumn(name, k)
-            ords.append(name)
-        keep = [c for c in self.df.columns if not c.startswith("_ord")]
-        out = df.select(*keep, *ords)
-        out = Hits(self.corpus, out)
-        return Hits(self.corpus, out.df.orderBy(*out._hit_order()))
 
     # -- basic ------------------------------------------------------------
     def count(self) -> int:
@@ -453,289 +456,198 @@ class Hits:
             j = j.orderBy(*self._hit_order()).drop(*self._order_cols)
         return j
 
-    # -- sort ---------------------------------------------------------------
-    def sort_by_hit_text(self, annotation: str = "word") -> "Hits":
-        """Collator-correct sort by matched text, then (doc,start,end)
-        tie-break (reference HitsAbstract.java:279-297). Primary key =
-        the desensitized (case+accent-folded) text, secondary = the raw
-        sensitive text — the two-strength ordering of the reference's
-        insensitive/sensitive collator pair (Collators.java:14-82,
-        forwardindex/Terms.java:69-95): 'Apple apple applesauce Banana'
-        sorts as one apple-group before banana, NOT ASCIIbetically with
-        all capitals first. Key chain = search.collation.collation_keys:
-        the session JVM's java.text.Collator order at TERTIARY strength,
-        then the raw text as a deterministic tie-break."""
-        from blacklab_spark.search.collation import collation_keys
-
-        ctx = self.with_context(0, annotation, sensitive=True)
-        raw = F.array_join("match", " ")
-        return self._sorted(collation_keys(raw), base_df=ctx)
-
-    def sort_by_context(self, side: str = "left", size: int | None = None) -> "Hits":
-        """Sort on left/right context words (reference HitProperty
-        `left`/`right`, resultproperty/HitProperty.java:41-110); left
-        context compares right-to-left like the reference. Same
-        collation key chain as sort_by_hit_text
-        (search.collation.collation_keys)."""
-        from blacklab_spark.search.collation import collation_keys
-
-        ctx = self.with_context(size, sensitive=True)
-        raw = (
-            F.array_join(F.reverse("left"), " ")
-            if side == "left"
-            else F.array_join("right", " ")
-        )
-        return self._sorted(collation_keys(raw), base_df=ctx)
-
-    # -- group ----------------------------------------------------------------
-    def group_by_hit_text(self, annotation: str = "word", max_stored: int = 10) -> DataFrame:
-        """HitGroups (reference HitGroups.java:54): group size + a stored
-        sample of hits per group."""
-        ctx = self.with_context(0, annotation)
-        return (
-            ctx.withColumn("grp", F.array_join("match", " "))
-            .groupBy("grp")
-            .agg(
-                F.count(F.lit(1)).alias("size"),
-                F.slice(
-                    F.sort_array(F.collect_list(F.struct("doc_id", "start", "end"))),
-                    1,
-                    max_stored,
-                ).alias("sample_hits"),
-            )
-            .orderBy(F.desc("size"), "grp")
-        )
-
-    def sort_by_hit_position(self) -> "Hits":
-        """HitProperty `hitposition` — corpus order (doc, start, end)
-        (reference resultproperty/HitPropertyHitPosition)."""
-        df = self.df.drop(*self._order_cols)  # replaces any prior sort
-        return Hits(self.corpus, df.orderBy("doc_id", "start", "end"))
-
-    # -- multi-criteria properties (HitPropertyMultiple) ---------------------
-    def _with_keys(self, criteria: list[str], size: int | None = None):
-        """Attach one key column per criterion (reference
-        resultproperty/HitPropertyMultiple.java — a compound property is
-        the tuple of its parts). All keys derive via codegen expressions
-        after at most one tokenized join per needed annotation plus one
-        doc_stats join — no shuffle beyond the hash joins.
+    # -- hit properties: sort, group, filter (HitProperty family) -------------
+    def _with_keys(self, criteria: list[str], sort: bool = False):
+        """Attach one key column ``_k<n>`` per criterion: the single
+        derivation of every HitProperty (reference resultproperty/
+        HitProperty*.java), whether it sorts, groups or filters hits,
+        alone or as part of a compound (HitPropertyMultiple.java — the
+        tuple of its parts).
 
         Criteria: ``hit[:ann]``, ``left[:ann]``, ``right[:ann]``,
         ``wordleft[:ann]``, ``wordright[:ann]``, ``capture:name``,
-        ``field:col``, ``decade``, ``hitposition``, and the reference's
-        context-words DSL ``context[:ann[:sens[:spec]]]`` (reference
-        HitPropertyContextWords serialization ``context:word:s:L1-1``).
-        Text keys use the desensitized annotation (primary collation
-        strength); ``context`` honors its sensitivity part."""
-        if size is None:
-            size = self.corpus.cfg.context_size
-        df = self.df
+        ``field:col``, ``decade``, ``doc``/``docid``, ``fieldlen``,
+        ``numhits``, ``hitposition``, and the reference's context-words
+        DSL ``context[:ann[:sens[:spec]]]`` (HitPropertyContextWords
+        serialization ``context:word:s:L1-1``).
 
-        def ann_of(crit: str) -> str:
-            parts = crit.split(":")
-            return parts[1] if len(parts) > 1 and parts[1] else "word"
+        Text keys group and filter on the desensitized annotation (the
+        identity text, primary collation strength). With ``sort`` the
+        ``hit``/``left``/``right`` keys instead order the case-preserved
+        tokens by the JDK collator (search.collation.collation_keys;
+        reference Collators.java, HitsAbstract.java:279-297): a struct of
+        the collation key and the raw text, so one key column still
+        serves one criterion. Left context compares right-to-left like
+        the reference. ``context`` honors its own sensitivity part.
+        Context keys read the configured context size.
 
-        def ctx_of(crit: str) -> tuple[str, str, str]:
-            # context:<ann>:<sens>:<spec>, every part optional
-            parts = crit.split(":")
-            ann = parts[1] if len(parts) > 1 and parts[1] else "word"
-            sens = parts[2] if len(parts) > 2 and parts[2] else "s"
-            spec = parts[3] if len(parts) > 3 and parts[3] else "H"
-            return ann, "i" if sens in ("i", "di") else "s", spec
+        Inputs come from at most one context_store join (every token
+        array the criteria need, in one projection) and one metadata
+        join (doc_stats, or the tokenized table when a column such as an
+        XML ``meta_*`` field is not in doc_stats). Keys are codegen
+        expressions over them, except the collator key (an
+        Arrow-batched pandas UDF)."""
+        from blacklab_spark.analysis import desensitize_col
 
-        anns: set[str] = set()
-        ctx_srcs: set[tuple[str, str]] = set()
-        meta_cols: set[str] = set()
+        size = self.corpus.cfg.context_size
+        arrays: dict[str, "F.Column"] = {}  # alias -> token-array expr
+        meta: set[str] = set()
+
+        def toks(ann: str, folded: bool, desensitize: bool = False) -> str:
+            # alias of one token array in the context_store join: word
+            # reads tokens (case-preserved) or its stored fold tokens_i,
+            # another annotation its one stored form ann_<a>;
+            # ``desensitize`` folds on the fly (context keys with an 'i'
+            # sensitivity part)
+            if ann in ("word", ""):
+                src = "tokens_i" if folded else "tokens"
+            else:
+                src = f"ann_{ann}"
+            name = f"_a_{src}_d" if desensitize else f"_a_{src}"
+            if name not in arrays:
+                arrays[name] = (
+                    F.transform(F.col(src), lambda t: desensitize_col(t, "i"))
+                    if desensitize else F.col(src)
+                )
+            return name
+
+        s, e = F.col("start"), F.col("end")
+        cols = []
         for crit in criteria:
-            base = crit.split(":")[0]
-            if base in ("hit", "left", "right", "wordleft", "wordright"):
-                anns.add(ann_of(crit))
-            elif base == "context":
-                ann, sens, _ = ctx_of(crit)
-                ctx_srcs.add((ann, sens))
+            parts = crit.split(":")
+            base = parts[0]
+            ann = parts[1] if len(parts) > 1 and parts[1] else "word"
+            if base in ("hit", "left", "right"):
+                t = toks(ann, folded=not sort)
+                left, match, right = _ctx_slices(t, size)
+                text = F.array_join(
+                    {"hit": match, "left": F.reverse(left), "right": right}[base],
+                    " ",
+                )
+                col = F.struct(*collation_keys(text)) if sort else text
+            elif base == "wordleft":
+                col = F.when(
+                    s > 0, F.element_at(F.col(toks(ann, folded=True)), s)
+                ).otherwise(F.lit(""))
+            elif base == "wordright":
+                t = F.col(toks(ann, folded=True))
+                col = F.coalesce(
+                    F.when(e < F.size(t), F.element_at(t, e + 1)), F.lit("")
+                )
             elif base == "capture":
-                anns.add("word")
+                cs = F.col(f"cap_{parts[1]}_start")
+                ce = F.col(f"cap_{parts[1]}_end")
+                col = F.array_join(
+                    F.slice(toks("word", folded=True), cs + 1, ce - cs), " "
+                )
+            elif base == "context":
+                # context:<ann>:<sens>:<spec>, every part optional
+                sens = parts[2] if len(parts) > 2 and parts[2] else "s"
+                spec = parts[3] if len(parts) > 3 and parts[3] else "H"
+                t = toks(ann, folded=False, desensitize=sens in ("i", "di"))
+                col = _context_words_key(
+                    F.col(t), size, parse_context_spec(spec, size)
+                )
             elif base == "field":
-                meta_cols.add(crit.split(":", 1)[1])
+                name = crit.split(":", 1)[1]
+                meta.add(name)
+                col = F.col(name)
             elif crit == "decade":
-                meta_cols.add("ts")
-            elif crit == "fieldlen":
-                meta_cols.add("num_tokens")
-        for a in sorted(anns):
-            src = "tokens_i" if a in ("word", "") else f"ann_{a}"
-            tk = self.corpus.context_store.select(
-                "doc_id", F.col(src).alias(f"_toks_{a}")
-            )
-            df = df.join(tk, "doc_id")
-        for a, sens in sorted(ctx_srcs):
-            src = F.col("tokens" if a in ("word", "") else f"ann_{a}")
-            if sens == "i":
-                from blacklab_spark.analysis import desensitize_col
-
-                src = F.transform(src, lambda t: desensitize_col(t, "i"))
-            tk = self.corpus.context_store.select(
-                "doc_id", src.alias(f"_ctxtoks_{a}_{sens}")
-            )
-            df = df.join(tk, "doc_id")
-        if meta_cols:
-            df = df.join(
-                self.corpus.doc_stats.select("doc_id", *sorted(meta_cols)), "doc_id"
-            )
-
-        keys: list[str] = []
-        for n, crit in enumerate(criteria):
-            kc = f"_k{n}"
-            base = crit.split(":")[0]
-            if base in ("hit", "left", "right", "wordleft", "wordright"):
-                toks = F.col(f"_toks_{ann_of(crit)}")
-            if crit == "decade":
+                meta.add("ts")
                 col = F.year("ts") - F.year("ts") % 10
+            elif crit == "fieldlen":
+                # HitPropertyDocumentLength analogue (annotated field
+                # length in tokens)
+                meta.add("num_tokens")
+                col = F.col("num_tokens")
             elif crit in ("doc", "docid"):
                 # HitPropertyDoc / HitPropertyDocumentId (the pid IS
                 # derived from doc_id in this engine)
                 col = F.col("doc_id")
-            elif crit == "fieldlen":
-                # HitPropertyDocumentLength analogue (fieldlen:
-                # annotated field length in tokens)
-                col = F.col("num_tokens")
             elif crit == "numhits":
                 # hits in the same document (DocPropertyNumberOfHits
-                # surfaced as a hit sort criterion)
-                col = F.count(F.lit(1)).over(
-                    Window.partitionBy("doc_id")
-                )
-            elif base == "context":
-                ann, sens, spec = ctx_of(crit)
-                col = _context_words_key(
-                    F.col(f"_ctxtoks_{ann}_{sens}"),
-                    size,
-                    parse_context_spec(spec, size),
-                )
+                # surfaced as a hit criterion)
+                col = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
             elif crit == "hitposition":
                 col = F.struct("doc_id", "start", "end")
-            elif base == "field":
-                col = F.col(crit.split(":", 1)[1])
-            elif base == "hit":
-                col = F.array_join(
-                    F.slice(toks, F.col("start") + 1, F.col("end") - F.col("start")),
-                    " ",
-                )
-            elif base == "left":
-                lstart = F.greatest(F.lit(0), F.col("start") - size) + 1
-                col = F.array_join(
-                    F.reverse(F.slice(toks, lstart, F.col("start") - lstart + 1)),
-                    " ",
-                )
-            elif base == "right":
-                col = F.array_join(
-                    F.slice(
-                        toks,
-                        F.col("end") + 1,
-                        F.greatest(
-                            F.lit(0), F.least(F.size(toks) - F.col("end"), F.lit(size))
-                        ),
-                    ),
-                    " ",
-                )
-            elif base == "wordleft":
-                col = F.when(
-                    F.col("start") > 0, F.element_at(toks, F.col("start"))
-                ).otherwise(F.lit(""))
-            elif base == "wordright":
-                col = F.coalesce(
-                    F.when(
-                        F.col("end") < F.size(toks),
-                        F.element_at(toks, F.col("end") + 1),
-                    ),
-                    F.lit(""),
-                )
-            elif base == "capture":
-                name = crit.split(":")[1]
-                s, e = F.col(f"cap_{name}_start"), F.col(f"cap_{name}_end")
-                col = F.array_join(F.slice(F.col("_toks_word"), s + 1, e - s), " ")
             else:
                 raise ValueError(f"unknown hit property: {crit!r}")
-            df = df.withColumn(kc, col)
-            keys.append(kc)
-        return df, keys
+            cols.append(col)
+
+        df = self.df
+        if arrays:
+            df = df.join(
+                self.corpus.context_store.select(
+                    "doc_id", *[c.alias(n) for n, c in arrays.items()]
+                ),
+                "doc_id",
+            )
+        if meta:
+            stats = self.corpus.doc_stats
+            src = stats if meta <= set(stats.columns) else self.corpus.tokenized
+            df = df.join(src.select("doc_id", *sorted(meta)), "doc_id")
+        keys = [f"_k{n}" for n in range(len(cols))]
+        return df.withColumns(dict(zip(keys, cols))), keys
 
     def sort_by(self, criteria: list[str]) -> "Hits":
-        """Compound sort over any criterion list (HitPropertyMultiple),
-        (doc,start,end) tie-break; a ``-`` prefix on a criterion
-        reverses that part (reference PropertySerializeUtil
-        serializeReverse)."""
+        """Sort over a criterion list (one criterion or several:
+        HitPropertyMultiple), (doc,start,end) tie-break; a ``-`` prefix
+        on a criterion reverses that part (reference
+        PropertySerializeUtil serializeReverse). The keys ride along as
+        hidden ``_ord[D]<n>`` columns (see the sort-order plumbing
+        above); a re-sort replaces the previous order."""
         descs = [c.startswith("-") for c in criteria]
-        stripped = [c.lstrip("-") for c in criteria]
-        df, keys = self._with_keys(stripped)
-        return self._sorted([F.col(k) for k in keys], base_df=df,
-                            descs=descs)
+        df, keys = self._with_keys([c.lstrip("-") for c in criteria], sort=True)
+        ords = [f"_ordD{n}" if d else f"_ord{n}" for n, d in enumerate(descs)]
+        keep = [c for c in self.df.columns if not c.startswith("_ord")]
+        out = Hits(self.corpus, df.select(
+            *keep, *[F.col(k).alias(o) for k, o in zip(keys, ords)]
+        ))
+        return Hits(self.corpus, out.df.orderBy(*out._hit_order()))
 
     def group_by(self, criteria: list[str]) -> DataFrame:
-        """Compound grouping over any criterion list: one groupBy over
-        all keys (reference HitGroups.java + HitPropertyMultiple)."""
+        """HitGroups over a criterion list (reference HitGroups.java:54,
+        HitPropertyMultiple): one key column per criterion, named by
+        group_key_name, then ``size`` (hits) and ``n_docs`` (distinct
+        documents), largest group first. One groupBy: ``n_docs`` is the
+        size of each group's doc-id set, a plain aggregate with partial
+        aggregation, so it adds no shuffle (a countDistinct would)."""
         df, keys = self._with_keys(criteria)
-        out = df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("size"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-        names = []
-        for k, crit in zip(keys, criteria):
-            name = "".join(
-                c if c.isalnum() or c == "_" else "_" for c in crit
-            )
-            out = out.withColumnRenamed(k, name)
-            names.append(name)
-        return out.orderBy(F.desc("size"), *names)
-
-    def group_by_capture(self, name: str, annotation: str = "word") -> DataFrame:
-        """Group hits by a named capture group's (desensitized) text
-        (reference resultproperty/HitPropertyCaptureGroup): slice the
-        doc's token array at the capture bounds — one doc_id equi-join,
-        all codegen."""
-        col = "tokens_i" if annotation in ("word", "") else f"ann_{annotation}"
-        tk = self.corpus.context_store.select("doc_id", F.col(col).alias("_toks"))
-        s, e = F.col(f"cap_{name}_start"), F.col(f"cap_{name}_end")
-        j = self.df.join(tk, "doc_id").withColumn(
-            "grp", F.array_join(F.slice("_toks", s + 1, e - s), " ")
-        )
+        names = [group_key_name(c) for c in criteria]
         return (
-            j.groupBy("grp")
-            .agg(F.count(F.lit(1)).alias("size"))
-            .orderBy(F.desc("size"), "grp")
-        )
-
-    def group_by_metadata(self, *cols: str) -> DataFrame:
-        """DocProperty grouping (reference DocGroups.java). Metadata
-        columns beyond the canonical projection (XML-format meta_*
-        fields) resolve from the tokenized table."""
-        stats = self.corpus.doc_stats
-        src = stats if all(c in stats.columns for c in cols) \
-            else self.corpus.tokenized
-        ds = src.select("doc_id", *cols)
-        return (
-            self.df.join(ds, "doc_id")
-            .groupBy(*cols)
+            df.groupBy(*[F.col(k).alias(n) for k, n in zip(keys, names)])
             .agg(
-                F.count(F.lit(1)).alias("n_hits"),
-                F.countDistinct("doc_id").alias("n_docs"),
+                F.count(F.lit(1)).alias("size"),
+                F.size(F.collect_set("doc_id")).cast("long").alias("n_docs"),
             )
-            .orderBy(F.desc("n_hits"), *cols)
+            .orderBy(F.desc("size"), *names)
         )
 
-    def group_by_decade(self) -> DataFrame:
-        """Group matched docs by decade of their timestamp (reference
-        resultproperty/DocPropertyDecade.java — date metadata bucketed
-        into decades)."""
-        docs = self.df.select("doc_id").distinct().join(
-            self.corpus.doc_stats.select("doc_id", "ts"), "doc_id"
+    def group_summary(self, criteria: list[str]) -> dict:
+        """Totals of ``group_by(criteria)`` — numbers of groups, hits and
+        distinct documents and the largest group size (the BLS grouped
+        summary, reference DStream.summaryNumHits / numberOfGroups) —
+        from one rollup over the same keys: the grand-total row counts
+        each document once however many groups it falls in. One
+        aggregation job; every total reads 0 when there are no hits."""
+        df, keys = self._with_keys(criteria)
+        rolled = df.withColumn("_g", F.struct(*keys)).rollup("_g").agg(
+            F.grouping("_g").alias("_all"),
+            F.count(F.lit(1)).alias("n"),
+            F.size(F.collect_set("doc_id")).alias("d"),
         )
-        decade = (F.year("ts") - F.year("ts") % 10).alias("decade")
-        return (
-            docs.select(decade)
-            .groupBy("decade")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .orderBy("decade")
-        )
+        grp = F.col("_all") == 0
+
+        def pick(cond, col):
+            return F.coalesce(F.max(F.when(cond, F.col(col))), F.lit(0))
+
+        row = rolled.agg(
+            F.count(F.when(grp, 1)).alias("groups"),
+            pick(grp, "n").alias("largest"),
+            pick(~grp, "n").alias("hits"),
+            pick(~grp, "d").alias("docs"),
+        ).collect()[0]
+        return row.asDict()
 
     # -- doc view ---------------------------------------------------------------
     def per_doc(self) -> DataFrame:

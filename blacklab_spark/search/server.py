@@ -189,57 +189,9 @@ def hits_response(
 
     # ---- grouped envelope (RequestHandlerHitsGrouped.java:40-104) ---
     if group is not None and viewgroup is None:
-        if includegroupcontents:
-            return _hits_grouped_with_contents(
-                corpus, patt, group, echo, first, number,
-                wordsaroundhit, t0, params,
-            )
-        gdf = corpus.search(patt=patt, group=group, **params)
-        cols = gdf.columns
-        size_col = next(
-            c for c in ("size", "n_hits", "n_docs") if c in cols
-        )
-        key_cols = [c for c in cols
-                    if c not in ("size", "n_hits", "n_docs", "sample_hits")]
-        page = gdf.offset(first).limit(number).collect() \
-            if first else gdf.limit(number).collect()
-        # one job for every summary number: group count, hit total,
-        # doc total, largest group
-        totals = gdf.agg(
-            F.count(F.lit(1)).alias("g"),
-            _sum0(size_col).alias("h"),
-            F.max(size_col).alias("mx"),
-            # without an n_docs column the doc total is unknown, except
-            # that zero groups hold zero docs
-            (_sum0("n_docs") if "n_docs" in cols
-             else F.when(F.count(F.lit(1)) == 0, 0)).alias("d"),
-        ).collect()[0]
-        groups = []
-        for r in page:
-            props = [{"name": k, "value": str(r[k])} for k in key_cols]
-            ident = ";".join(f"{p['name']}={p['value']}" for p in props)
-            g = {
-                "identity": ident,
-                "identityDisplay": ", ".join(str(r[k]) for k in key_cols),
-                "size": r[size_col],
-                "properties": props,
-            }
-            if "n_docs" in cols and size_col != "n_docs":
-                g["numberOfDocs"] = r["n_docs"]
-            groups.append(g)
-        summary = _summary_common(echo, first, number, len(groups),
-                                  totals["g"], time.time() - t0)
-        summary.update({
-            "numberOfGroups": totals["g"],
-            "largestGroupSize": totals["mx"] or 0,
-            "numberOfHits": totals["h"],
-            "numberOfHitsRetrieved": totals["h"],
-            "stoppedCountingHits": False,
-            "stoppedRetrievingHits": False,
-            "numberOfDocs": totals["d"],
-            "numberOfDocsRetrieved": totals["d"],
-        })
-        return {"summary": summary, "hitGroups": groups}
+        return _hits_grouped(corpus, patt, group, echo, first, number,
+                             wordsaroundhit, t0, params,
+                             includegroupcontents)
 
     # ---- plain hits page ---------------------------------------------
     from blacklab_spark.search.results import Hits
@@ -340,92 +292,98 @@ def hits_response(
     return resp
 
 
-def _hits_grouped_with_contents(corpus, patt, group, echo, first, number,
-                                wordsaroundhit, t0, params,
-                                max_stored: int = 10) -> dict:
-    """hitGroups with per-group hits (BLS includegroupcontents;
-    RequestHandlerHitsGrouped.java:60-66 attaches each group's stored
-    hits). One distributed plan: `_with_keys` attaches the grouping
-    keys, the group table aggregates over them, and a row_number cap
-    bounds stored hits per group BEFORE the context join — never
-    O(hits) on the driver (the reference likewise stores at most
-    maxHitsToStorePerGroup per group)."""
+def _hits_grouped(corpus, patt, group, echo, first, number,
+                  wordsaroundhit, t0, params, contents: bool,
+                  max_stored: int = 10) -> dict:
+    """hitGroups envelope, optionally with per-group hits (BLS
+    includegroupcontents; RequestHandlerHitsGrouped.java:60-66 attaches
+    each group's stored hits). The groups are the facade's grouped
+    result (Hits.group_by: key columns, ``size``, ``n_docs``); only the
+    requested page is collected. The summary totals come from one
+    aggregation over the same keys (Hits.group_summary), so a document
+    counts once in numberOfDocs however many groups hold it.
+
+    Stored hits: restricted to the PAGE's groups first (a corpus can
+    have millions of groups; only ≤`number` are in the response), then
+    a row_number cap per group BEFORE the context join, then ONE kwic
+    pass over the capped set — never O(hits) on the driver (the
+    reference likewise stores at most maxHitsToStorePerGroup per
+    group)."""
     from pyspark.sql.window import Window
 
-    from blacklab_spark.search.results import Hits
+    from blacklab_spark.search.results import Hits, parse_criteria
 
-    crits = [c.strip() for c in group.split(",") if c.strip()]
-    full = corpus.search(patt=patt, **params)
-    hk, keys = Hits(corpus, full)._with_keys(crits)
-    gdf = (
-        hk.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("size"),
-             F.countDistinct("doc_id").alias("n_docs"))
-        .orderBy(F.desc("size"), *keys)
-    )
+    crits = parse_criteria(group)
+    gdf = corpus.search(patt=patt, group=group, **params)
+    names = gdf.columns[:len(crits)]
     page = gdf.offset(first).limit(number).collect() \
         if first else gdf.limit(number).collect()
-    totals = gdf.agg(
-        F.count(F.lit(1)).alias("g"), _sum0("size").alias("h"),
-        F.max("size").alias("mx"), _sum0("n_docs").alias("d"),
-    ).collect()[0]
+    # the hit set itself: a group-level sort does not apply to hits
+    hits = Hits(corpus, corpus.search(
+        patt=patt, **{k: v for k, v in params.items() if k != "sort"}
+    ))
+    totals = hits.group_summary(crits)
 
-    # stored hits: restrict to the PAGE's groups first (a corpus can
-    # have millions of groups; only ≤`number` are in the response),
-    # then cap per group, then ONE kwic pass over the capped set
-    def ident(row):
-        return tuple(str(row[k]) for k in keys)
-
-    page_gids = {ident(r) for r in page}
-    gid = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
-    w = Window.partitionBy(*keys).orderBy("doc_id", "start", "end")
-    capped = (
-        hk.filter(gid.isin(["\x1f".join(g) for g in page_gids]))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_stored)
-    )
-    cap_rows = capped.collect()
-    kw = Hits(corpus, capped.select(*full.columns)) \
-        .kwic(wordsaroundhit or corpus.cfg.context_size).collect()
-    ctx = {(r["doc_id"], r["start"], r["end"]): r for r in kw}
+    def ident(row, cols):
+        return tuple(str(row[c]) for c in cols)
 
     by_group: dict[tuple, list] = {}
     doc_ids: set[int] = set()
-    for r in cap_rows:
-        c = ctx.get((r["doc_id"], r["start"], r["end"]))
-        if c is None:
-            continue
-        by_group.setdefault(ident(r), []).append({
-            "docPid": _pid(c), "start": r["start"], "end": r["end"],
-            "left": {"word": _split(c["left"])},
-            "match": {"word": _split(c["match"])},
-            "right": {"word": _split(c["right"])},
-        })
-        doc_ids.add(r["doc_id"])
+    if contents and page:
+        hk, keys = hits._with_keys(crits)
+        gid = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
+        w = Window.partitionBy(*keys).orderBy("doc_id", "start", "end")
+        capped = (
+            hk.filter(gid.isin(["\x1f".join(ident(r, names)) for r in page]))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= max_stored)
+        )
+        cap_rows = capped.collect()
+        kw = Hits(corpus, capped.select(*hits.df.columns)) \
+            .kwic(wordsaroundhit or corpus.cfg.context_size).collect()
+        ctx = {(r["doc_id"], r["start"], r["end"]): r for r in kw}
+        for r in cap_rows:
+            c = ctx.get((r["doc_id"], r["start"], r["end"]))
+            if c is None:
+                continue
+            by_group.setdefault(ident(r, keys), []).append({
+                "docPid": _pid(c), "start": r["start"], "end": r["end"],
+                "left": {"word": _split(c["left"])},
+                "match": {"word": _split(c["match"])},
+                "right": {"word": _split(c["right"])},
+            })
+            doc_ids.add(r["doc_id"])
 
     groups = []
     for r in page:
-        vals = ident(r)
-        props = [{"name": c, "value": v} for c, v in zip(crits, vals)]
-        groups.append({
+        vals = ident(r, names)
+        g = {
             "identity": ";".join(f"{c}={v}" for c, v in zip(crits, vals)),
             "identityDisplay": ", ".join(vals),
             "size": r["size"],
-            "properties": props,
+            "properties": [{"name": c, "value": v}
+                           for c, v in zip(crits, vals)],
             "numberOfDocs": r["n_docs"],
-            "hits": by_group.get(vals, []),
-        })
+        }
+        if contents:
+            g["hits"] = by_group.get(vals, [])
+        groups.append(g)
     summary = _summary_common(echo, first, number, len(groups),
-                              totals["g"], time.time() - t0)
+                              totals["groups"], time.time() - t0)
     summary.update({
-        "numberOfGroups": totals["g"],
-        "largestGroupSize": totals["mx"] or 0,
-        "numberOfHits": totals["h"], "numberOfHitsRetrieved": totals["h"],
-        "stoppedCountingHits": False, "stoppedRetrievingHits": False,
-        "numberOfDocs": totals["d"], "numberOfDocsRetrieved": totals["d"],
+        "numberOfGroups": totals["groups"],
+        "largestGroupSize": totals["largest"],
+        "numberOfHits": totals["hits"],
+        "numberOfHitsRetrieved": totals["hits"],
+        "stoppedCountingHits": False,
+        "stoppedRetrievingHits": False,
+        "numberOfDocs": totals["docs"],
+        "numberOfDocsRetrieved": totals["docs"],
     })
-    return {"summary": summary, "hitGroups": groups,
-            "docInfos": _doc_infos(corpus, sorted(doc_ids))}
+    resp = {"summary": summary, "hitGroups": groups}
+    if contents:
+        resp["docInfos"] = _doc_infos(corpus, sorted(doc_ids))
+    return resp
 
 
 def _doc_fields(corpus) -> dict:

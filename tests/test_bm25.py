@@ -371,6 +371,20 @@ FIND_COUNT_JOB_BUDGET = {
 }
 
 
+# Spark jobs per warm grouped or sorted request for '"word00003" []'
+# on the same corpus: every hit property derives its key in
+# Hits._with_keys, and a group's n_docs adds no shuffle.
+GROUP_SORT_JOB_BUDGET = {
+    "group hit:word": 6,
+    "group field:role": 6,
+    "group field:role,hit": 7,
+    "kwic sort=hit": 6,
+    "kwic sort=left": 6,
+    "hits_response group=field:role": 9,
+    "hits_response group=hit:word": 9,
+}
+
+
 def test_topk_job_count_floor(small_corpus, tombstoned):
     """Job budget per top-k path, call and collect together: a
     regression guard for a plan re-growing extra jobs (a tombstone
@@ -417,6 +431,43 @@ def test_find_count_job_budget(small_corpus, tombstoned):
         used[path] = len(jobs)
     over = {p: n for p, n in used.items() if n > FIND_COUNT_JOB_BUDGET[p]}
     assert not over, f"Spark jobs {used} over budget {FIND_COUNT_JOB_BUDGET}"
+
+
+def test_group_sort_job_budget(small_corpus):
+    """Job budget of grouped and sorted requests (search and the BLS
+    grouped envelope): a regression guard for a property plan that
+    grows a join or a shuffle."""
+    from blacklab_spark.search.server import hits_response
+
+    corpus, _ = small_corpus
+    sc = corpus.spark.sparkContext
+    patt = '"word00003" []'
+
+    def grouped(g):
+        return lambda: corpus.search(patt=patt, group=g).collect()
+
+    def page(s):
+        return lambda: corpus.search(patt=patt, sort=s, number=20,
+                                     wordsaroundhit=5).collect()
+
+    requests = {
+        "group hit:word": grouped("hit:word"),
+        "group field:role": grouped("field:role"),
+        "group field:role,hit": grouped("field:role,hit"),
+        "kwic sort=hit": page("hit"),
+        "kwic sort=left": page("left"),
+        "hits_response group=field:role":
+            lambda: hits_response(corpus, patt, group="field:role"),
+        "hits_response group=hit:word":
+            lambda: hits_response(corpus, patt, group="hit:word"),
+    }
+    used = {}
+    for name, run in requests.items():
+        run()  # warm
+        _, jobs = _spark_jobs(sc, run)
+        used[name] = len(jobs)
+    over = {n: k for n, k in used.items() if k > GROUP_SORT_JOB_BUDGET[n]}
+    assert not over, f"Spark jobs {used} over budget {GROUP_SORT_JOB_BUDGET}"
 
 
 def test_scoring_runs_one_task_per_core(small_corpus, fine_corpus,

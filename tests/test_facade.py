@@ -73,7 +73,7 @@ def test_search_kwic_window(micro):
 
 def test_search_grouped_by_field(micro):
     out = micro.search(patt='"the"', group="field:conv_id")
-    m = {r["conv_id"]: r["n_hits"] for r in out.collect()}
+    m = {r["field_conv_id"]: r["size"] for r in out.collect()}
     assert m == {"doc0": 2, "doc2": 1, "doc3": 1}
 
 
@@ -384,17 +384,67 @@ def test_sort_survives_window_and_kwic(micro):
     assert texts == sorted(texts, key=str.lower)
 
 
+def test_field_sort_survives_window_and_kwic(small_corpus):
+    # a field sort keeps its key (_ord0) through window() and kwic(),
+    # like every other sort (reference windows over the sorted Hits);
+    # the page at 430 crosses the assistant -> tool boundary
+    corpus, _ = small_corpus
+    role = {r["doc_id"]: r["role"]
+            for r in corpus.doc_stats.select("doc_id", "role").collect()}
+    patt = '"word00003" []'
+    for sort in ("field:role", "-field:role"):
+        full = [(r["doc_id"], r["start"])
+                for r in corpus.search(patt=patt, sort=sort).collect()]
+        roles = [role[d] for d, _ in full]
+        assert roles == sorted(roles, reverse=sort.startswith("-"))
+        for first in (0, 430):
+            for extra in ({}, {"wordsaroundhit": 1}):
+                out = corpus.search(patt=patt, sort=sort, first=first,
+                                    number=10, **extra)
+                got = [(r["doc_id"], r["start"]) for r in out.collect()]
+                assert got == full[first:first + 10], (sort, first, extra)
+
+
+def test_group_size_sort_docs_only_and_decade(micro):
+    # sort=size/-size on a docs-only grouped request (count column
+    # n_docs) and on a decade grouping
+    for group, patt, size in (("role", None, "n_docs"),
+                              ("decade", '"the"', "size")):
+        for sort in ("size", "-size"):
+            out = micro.search(patt=patt, group=group, sort=sort).collect()
+            sizes = [r[size] for r in out]
+            assert sizes and sizes == sorted(sizes,
+                                             reverse=sort == "size")
+
+
+def test_viewgroup_every_single_criterion(micro):
+    # viewgroup drills into one group of any single criterion that
+    # group accepts: filter_by_property(group, viewgroup)
+    out = micro.search(patt='x:[pos="adj"] "fox"', group="capture:x",
+                       viewgroup="brown")
+    assert [(r["doc_id"], r["start"]) for r in out.collect()] == [(0, 2)]
+    out = micro.search(patt='"the"', group="wordright", viewgroup="lazy")
+    assert [(r["doc_id"], r["start"]) for r in out.collect()] == [(0, 6)]
+
+
+def test_viewgroup_compound_is_rejected(micro):
+    with pytest.raises(ValueError, match="single group criterion"):
+        micro.search(patt='"the"', group="field:role,hit",
+                     viewgroup="user, the")
+
+
 def test_group_level_sort(micro):
     # sort=identity / -size on grouped requests (reference
     # HitGroupProperty.deserialize: size desc-by-default, identity asc,
     # '-' reverses)
     out = micro.search(patt='"the"', group="hit", sort="identity")
-    assert [r["grp"] for r in out.collect()] == ["the"]
+    assert [r["hit"] for r in out.collect()] == ["the"]
     out = micro.search(patt="[]", group="field:role", sort="identity")
-    keys = [r["role"] for r in out.collect()]
+    keys = [r["field_role"] for r in out.collect()]
     assert keys == sorted(keys)
     out = micro.search(patt="[]", group="field:role", sort="-identity")
-    assert [r["role"] for r in out.collect()] == sorted(keys, reverse=True)
+    assert [r["field_role"] for r in out.collect()] \
+        == sorted(keys, reverse=True)
     by_size = micro.search(patt="[]", group="hit:lemma", sort="size")
     sizes = [r["size"] for r in by_size.collect()]
     assert sizes == sorted(sizes, reverse=True)

@@ -72,11 +72,11 @@ def test_bucketed_results_identical(corpora):
     assert rb == rn and len(rb) > 0
     sb = sorted(
         tuple(r)
-        for r in cb.find('"word00003"').sort_by_context("right").df.collect()
+        for r in cb.find('"word00003"').sort_by(["right"]).df.collect()
     )
     sn = sorted(
         tuple(r)
-        for r in cn.find('"word00003"').sort_by_context("right").df.collect()
+        for r in cn.find('"word00003"').sort_by(["right"]).df.collect()
     )
     assert sb == sn
 

@@ -166,7 +166,7 @@ def test_collated_sort_diverges_from_codepoint(spark, tmp_path_factory):
     ).withColumn("ts", F.lit("2025-01-01").cast("timestamp"))
     c = Corpus.build(spark, df, d, EngineConfig(segment_size=4, block_size=4))
     toks = "Zebra ápple apple Apple zebra Ärger anger".split()
-    rows = c.find('".*"').sort_by_hit_text().df.collect()
+    rows = c.find('".*"').sort_by(["hit"]).df.collect()
     texts = [toks[r["start"]] for r in rows]
     # JDK en_US tertiary order (reference Collators.java sensitive
     # collator): letter groups first (anger < apple* < arger < zebra*),

@@ -61,21 +61,22 @@ def test_kwic_clipped_at_doc_edges(micro):
 
 def test_sort_by_hit_text(micro):
     h = micro.find('[pos="adj"]')  # quick, brown, lazy
-    rows = h.sort_by_hit_text().df.collect()
+    rows = h.sort_by(["hit"]).df.collect()
     # sorted hit text: brown < lazy < quick
     assert [r["start"] for r in rows] == [2, 7, 1]
 
 
 def test_group_by_hit_text(micro):
     h = micro.find('"aap" | "noot"')
-    g = {r["grp"]: r["size"] for r in h.group_by_hit_text().collect()}
+    g = {r["hit"]: r["size"] for r in h.group_by(["hit"]).collect()}
     assert g == {"aap": 5, "noot": 3}
 
 
 def test_group_by_metadata(micro):
     h = micro.find('"the"')
-    g = {r["conv_id"]: r["n_hits"] for r in h.group_by_metadata("conv_id").collect()}
-    assert g == {"doc0": 2, "doc2": 1, "doc3": 1}
+    g = {r["field_conv_id"]: (r["size"], r["n_docs"])
+         for r in h.group_by(["field:conv_id"]).collect()}
+    assert g == {"doc0": (2, 1), "doc2": (1, 1), "doc3": (1, 1)}
 
 
 def test_per_doc_and_facets(micro):
@@ -123,33 +124,56 @@ def test_filter_docs(micro):
 def test_collator_sort_case_mixed(spark, tmp_path):
     """Collator order groups case/accent variants (reference
     Collators.java:14-82) — lexicographic byte order would put all
-    capitals first."""
+    capitals first. A text criterion orders the same alone and as the
+    first part of a compound (HitPropertyMultiple), not by a folded
+    binary key with a doc-order tie-break, and ``-c`` reverses it."""
     import pandas as pd
 
     from blacklab_spark.config import EngineConfig
     from blacklab_spark.corpus import Corpus
 
+    # c0: one mixed doc; w0..w5: "a <word> b", so the second word
+    # decides the hit, left and right keys of the patterns below
+    words = ["Apple", "apple", "\u00e9clair", "\u00c9clair", "eclair", "apple"]
+    texts = ["zebra Apple apple Banana caf\u00e8 banana"] + [
+        f"a {w} b" for w in words]
+    n = len(texts)
     pdf = pd.DataFrame(
         {
-            "conv_id": ["c0"],
-            "turn_idx": [0],
-            "role": ["user"],
-            "text": ["zebra Apple apple Banana caf\u00e8 banana"],
-            "tool": [""],
-            "ts": pd.to_datetime(["2024-01-01"]),
+            "conv_id": ["c0"] + [f"w{i}" for i in range(len(words))],
+            "turn_idx": [0] * n,
+            "role": ["user"] * n,
+            "text": texts,
+            "tool": [""] * n,
+            "ts": pd.to_datetime(["2024-01-01"] * n),
         }
     )
     c = Corpus.build(
         spark, spark.createDataFrame(pdf), str(tmp_path / "coll"),
         EngineConfig(segment_size=4, block_size=4),
     )
-    toks = "zebra Apple apple Banana caf\u00e8 banana".split()
-    rows = c.find("[]").sort_by_hit_text().df.collect()
-    texts = [toks[r["start"]] for r in rows]
+    toks = texts[0].split()
+    rows = c.find("[]").filter_docs("conv_id = 'c0'").sort_by(["hit"]) \
+        .df.collect()
+    got = [toks[r["start"]] for r in rows]
     # collator: apple-group, banana-group, caf\u00e8, zebra \u2014 NOT
     # Apple/Banana first as byte order would give; lowercase before
     # uppercase within a group (JDK collator tertiary order)
-    assert texts == ["apple", "Apple", "banana", "Banana", "caf\u00e8", "zebra"]
+    assert got == ["apple", "Apple", "banana", "Banana", "caf\u00e8", "zebra"]
+
+    word = {r["doc_id"]: words[int(r["conv_id"][1:])]
+            for r in c.doc_stats.filter("conv_id != 'c0'")
+            .select("doc_id", "conv_id").collect()}
+    want = ["apple", "apple", "Apple",
+            "eclair", "\u00e9clair", "\u00c9clair"]
+    for crit, patt in (("hit", '"a" []'), ("left", '"b"'), ("right", '"a"')):
+        def order(sort):
+            rows = c.search(patt=patt, sort=sort, filter="conv_id:w*")
+            return [word[r["doc_id"]] for r in rows.collect()]
+
+        assert order(crit) == want, crit
+        assert order(f"{crit},hitposition") == want, crit
+        assert order(f"-{crit}") == want[::-1], crit
 
 
 def test_count_stats_capped(micro):
@@ -182,12 +206,12 @@ def test_csv_export(micro):
 
 def test_group_by_capture_and_hitposition(micro):
     h = micro.find('x:[pos="adj"] "fox"')
-    g = {r["grp"]: r["size"] for r in h.group_by_capture("x").collect()}
+    g = {r["capture_x"]: r["size"] for r in h.group_by(["capture:x"]).collect()}
     assert g == {"brown": 1}
-    hp = micro.find('[pos="adj"]').sort_by_hit_position().df.collect()
+    hp = micro.find('[pos="adj"]').sort_by(["hitposition"]).df.collect()
     assert [(r["doc_id"], r["start"]) for r in hp] == [(0, 1), (0, 2), (0, 7)]
     out = micro.search(patt='x:[pos="adj"] "fox"', group="capture:x")
-    assert out.collect()[0]["grp"] == "brown"
+    assert out.collect()[0]["capture_x"] == "brown"
 
 
 def test_frequency_lists_tool(small_corpus):

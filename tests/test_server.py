@@ -115,11 +115,28 @@ def test_hits_grouped_envelope(small_corpus):
     assert resp["summary"]["numberOfGroups"] == len(resp["hitGroups"])
     g = resp["hitGroups"][0]
     assert set(g) >= {"identity", "identityDisplay", "size", "properties"}
-    assert g["properties"][0]["name"] == "role"
+    assert g["properties"][0]["name"] == "field:role"
     # groups ordered by size descending (reference default)
     sizes = [x["size"] for x in resp["hitGroups"]]
     assert sizes == sorted(sizes, reverse=True)
     assert resp["summary"]["largestGroupSize"] == sizes[0]
+
+
+def test_grouped_summary_totals_every_criterion(small_corpus):
+    """numberOfHits counts hits and numberOfDocs counts each matching
+    document once, whatever the grouping: a doc-level criterion
+    (decade), a compound whose groups share documents
+    (field:role,hit), and hit-level criteria (hit:word, capture:x)."""
+    corpus, _ = small_corpus
+    patt = '"word00003" []'
+    hits = corpus.find(patt)
+    want = (hits.count(), hits.doc_count())
+    assert want[0] > want[1] > 0
+    for group in ("field:role", "decade", "field:role,hit", "hit:word",
+                  "capture:x"):
+        p = 'x:"word00003" []' if group == "capture:x" else patt
+        s = hits_response(corpus, p, group=group)["summary"]
+        assert (s["numberOfHits"], s["numberOfDocs"]) == want, group
 
 
 def test_grouped_envelopes_without_hits(small_corpus):

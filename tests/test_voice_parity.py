@@ -209,8 +209,8 @@ def test_hits_grouped_by_title_matches_reference(voice):
 
     ref = _saved("hits-grouped", "a grouped by title")
     expected = {g["identityDisplay"]: g["size"] for g in ref["hitGroups"]}
-    gg = Hits(voice, voice.find('"a"').df).group_by_metadata("meta_title")
-    got = {r["meta_title"]: r["n_hits"] for r in gg.collect()}
+    gg = Hits(voice, voice.find('"a"').df).group_by(["field:meta_title"])
+    got = {r["field_meta_title"]: r["size"] for r in gg.collect()}
     assert got == expected
 
 
@@ -223,8 +223,8 @@ def test_grouped_with_filter_and_negation_matches_reference(voice):
     expected = {g["identityDisplay"]: g["size"] for g in ref["hitGroups"]}
     for patt in ('[word != "abcdefg"]', "[]"):
         hits = voice.find(patt).filter_docs("meta_pid = 'PBsve430'")
-        got = {r["grp"]: r["size"]
-               for r in hits.group_by_hit_text("word").collect()}
+        got = {r["hit_word"]: r["size"]
+               for r in hits.group_by(["hit:word"]).collect()}
         for name, size in expected.items():
             assert got.get(name) == size, (patt, name)
         assert sum(got.values()) == ref["summary"]["numberOfHits"], patt
@@ -237,8 +237,8 @@ def test_group_by_capture_matches_reference(voice):
     ref = _saved("hits-grouped", "group by capture")
     expected = {g["identityDisplay"]: g["size"] for g in ref["hitGroups"]}
     hits = voice.find('"a|the" X:[]').filter_docs("meta_pid = 'PBsve430'")
-    got = {r["grp"]: r["size"]
-           for r in hits.group_by_capture("X").collect()}
+    got = {r["capture_X"]: r["size"]
+           for r in hits.group_by(["capture:X"]).collect()}
     assert got == expected
 
 
@@ -258,8 +258,8 @@ def test_grouped_by_hit_text_matches_reference(voice):
     every group size identical."""
     ref = _saved("hits-grouped", "any token grouped by word")
     expected = {g["identityDisplay"]: g["size"] for g in ref["hitGroups"]}
-    gg = voice.find("[]").group_by_hit_text("word")
-    got = {r["grp"]: r["size"] for r in gg.collect()}
+    gg = voice.find("[]").group_by(["hit:word"])
+    got = {r["hit_word"]: r["size"] for r in gg.collect()}
     # the saved response stores one page of groups; every saved group's
     # size must match, and the group total must match the summary
     for name, size in expected.items():

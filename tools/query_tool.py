@@ -13,7 +13,7 @@ Commands:
   context <n>             KWIC context size in words (reference `context`)
   snippetsize <n>         snippet context chars (reference `snippetsize`)
   sort hit|left|right|<crit>   re-sort current hits (HitProperty DSL)
-  group hit|<meta col>    group current hits
+  group hit|<meta col>|<crit:...>  group current hits (HitProperty DSL)
   filter [<LuceneQL>]     set/clear a metadata filter for NEW queries
   sensitive on|off        default match sensitivity for bare terms
   doc <doc_id>            show document contents (content store)
@@ -47,7 +47,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from blacklab_spark.corpus import Corpus
 from blacklab_spark.cql.luceneql import parse_luceneql
-from blacklab_spark.search.results import autocomplete, term_frequencies
+from blacklab_spark.search.results import (
+    autocomplete, parse_criteria, term_frequencies,
+)
 from blacklab_spark.session import get_spark
 
 # insert a (?-i) sensitivity flag after the opening quote of every
@@ -238,22 +240,16 @@ def main() -> None:
                 show()
         elif cmd == "sort":
             if hits:
-                if rest in ("", "hit"):
-                    hits = hits.sort_by_hit_text()
-                elif rest in ("left", "right"):
-                    hits = hits.sort_by_context(rest, size=ctx)
-                else:
-                    hits = hits.sort_by([rest])
+                hits = hits.sort_by(parse_criteria(rest or "hit"))
                 first = 0
                 show()
         elif cmd == "group":
             if hits:
-                df = (
-                    hits.group_by_hit_text()
-                    if rest in ("", "hit")
-                    else hits.group_by_metadata(rest)
-                )
-                df.show(page, truncate=False)
+                # a bare metadata column name groups by that field
+                crit = rest or "hit"
+                if crit != "hit" and ":" not in crit:
+                    crit = f"field:{crit}"
+                hits.group_by(parse_criteria(crit)).show(page, truncate=False)
         elif cmd == "explain":
             print(corpus.explain(rest))
         elif cmd == "freq":
