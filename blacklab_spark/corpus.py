@@ -151,13 +151,23 @@ class Corpus:
         generation. doc_stats and the implicit per-turn spans are
         DERIVED (column-pruned projections of the tokenized table —
         Catalyst pruning makes a stored copy pointless) unless a stored
-        directory exists (legacy indexes, incremental appends)."""
+        directory exists (legacy indexes, incremental appends). A stored
+        doc_stats gets the tokenized table's ``meta_*`` columns it lacks
+        by a doc_id join, so both forms have the same columns."""
         cache = self.state.tables
         if name in cache:
             return cache[name]
         path = os.path.join(self.index_dir, name)
-        if name == "doc_stats" and not os.path.exists(path):
-            df = self._raw("tokenized").select(*self._DOC_STATS_COLS)
+        if name == "doc_stats":
+            tok = self._raw("tokenized")
+            meta = [c for c in tok.columns if c.startswith("meta_")]
+            if os.path.exists(path):
+                df = self.spark.read.parquet(path)
+                extra = [c for c in meta if c not in df.columns]
+                if extra:
+                    df = df.join(tok.select("doc_id", *extra), "doc_id")
+            else:
+                df = tok.select(*self._DOC_STATS_COLS, *meta)
         elif name == "spans" and not os.path.exists(path):
             from blacklab_spark.index.build import turn_spans
 
@@ -348,6 +358,12 @@ class Corpus:
 
     @property
     def doc_stats(self) -> DataFrame:
+        """The one projection of document metadata, one row per live
+        doc: the transcript columns (doc_id, segment_id, conv_id,
+        turn_idx, role, tool, ts, num_tokens) plus every ``meta_*``
+        column of the tokenized table (XML-format metadata fields).
+        Readers select the columns they need; the rest are pruned from
+        the scan."""
         return self._t("doc_stats")
 
     @property

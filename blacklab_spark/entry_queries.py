@@ -605,7 +605,9 @@ def q_facet_role(spark, sf_dir):
     """Facets: independent 1-D doc counts (reference Facets.java:9).
     `role` carries the documents.lang metadata in this corpus."""
     c = _corpus(spark, sf_dir)
-    return c.find('"spark"').facets("role")["role"]
+    return c.find('"spark"').facets(["role"]).select(
+        F.col("value").alias("role"), "n_docs"
+    )
 
 
 O_FACET_ROLE = f"""

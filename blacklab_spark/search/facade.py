@@ -22,14 +22,18 @@ criterion or a comma-separated compound — and all go through the one
 property path in search.results (`Hits.sort_by`, `Hits.group_by`,
 `Hits.filter_by_property`). Hits-grouped results have one schema: a
 key column per criterion (`group_key_name`), then ``size`` (hits) and
-``n_docs`` (documents).
+``n_docs`` (documents). A docs-only grouping (no ``patt``) has one key
+column named the same way, then ``n_docs``; its criterion, like a
+facet's, is a document criterion resolved by `results.doc_key`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from blacklab_spark.search.results import Hits, parse_criteria
+from blacklab_spark.search.results import (
+    Hits, doc_key, group_key_name, parse_criteria,
+)
 
 
 def resolve_pid(corpus, pid: str) -> int | None:
@@ -296,12 +300,16 @@ def search(
         if docpid_id is not None:
             docs = docs.filter(F.col("doc_id") == docpid_id)
         if group:
+            key = doc_key(group, docs.columns)
+            if key is None:
+                raise ValueError(f"unknown document property: {group!r}")
+            name = group_key_name(group)
             g = (
-                docs.groupBy(group)
+                docs.groupBy(key.alias(name))
                 .agg(F.count(F.lit(1)).alias("n_docs"))
-                .orderBy(F.desc("n_docs"), group)
+                .orderBy(F.desc("n_docs"), name)
             )
-            return _out(_sort_groups(g, sort, [group], "n_docs"))
+            return _out(_sort_groups(g, sort, [name], "n_docs"))
         return _out(docs)
 
     # "corpusql" is the reference's name for BCQL and its pattlang
@@ -337,39 +345,9 @@ def search(
         hits = hits.filter_by_property(hitfiltercrit, hitfilterval)
 
     # ---- facets (independent 1-D doc counts, Facets.java:9) --------
-    crits = (
-        [c.strip() for c in facets.split(",") if c.strip()]
-        if facets is not None
-        else []
-    )
+    crits = parse_criteria(facets) if facets is not None else []
     if crits:
-        # the hit plan runs once: one distinct doc-id set feeds every
-        # facet branch (criteria are independent 1-D counts). XML-format
-        # meta_* fields live on the tokenized table, not doc_stats
-        stats = corpus.doc_stats
-        extra = [
-            c.split(":", 1)[1] if c.startswith("field:") else c
-            for c in crits
-        ]
-        missing = [c for c in extra
-                   if c != "decade" and c not in stats.columns]
-        if missing:
-            stats = stats.join(
-                corpus.tokenized.select("doc_id", *missing), "doc_id"
-            )
-        docs = hits.df.select("doc_id").distinct().join(stats, "doc_id")
-        out = None
-        for crit in crits:
-            col = crit.split(":", 1)[1] if crit.startswith("field:") else crit
-            key = (
-                (F.year("ts") - F.year("ts") % 10) if col == "decade"
-                else F.col(col)
-            )
-            fc = docs.groupBy(key.cast("string").alias("value")).agg(
-                F.count(F.lit(1)).alias("n_docs")
-            ).select(F.lit(crit).alias("facet"), "value", "n_docs")
-            out = fc if out is None else out.unionByName(fc)
-        return _out(out.orderBy("facet", F.desc("n_docs"), "value"))
+        return _out(hits.facets(crits))
 
     # ---- result cap (maxHitsToProcess analogue) --------------------
     if maxretrieve is not None:

@@ -39,6 +39,22 @@ def group_key_name(criterion: str) -> str:
     return "".join(c if c.isalnum() or c == "_" else "_" for c in criterion)
 
 
+def doc_key(criterion: str, columns) -> "F.Column | None":
+    """Key of a document criterion (reference DocProperty) over a
+    table with ``columns``: ``decade`` (from ``ts``), ``field:<name>``
+    or a bare column name. A name that is not a column resolves to
+    ``meta_<name>`` when that is one (an XML metadata field). None when
+    the table has no such column."""
+    if criterion == "decade":
+        return F.year("ts") - F.year("ts") % 10 if "ts" in columns else None
+    name = criterion.split(":", 1)[1] if criterion.startswith("field:") \
+        else criterion
+    for c in (name, f"meta_{name}"):
+        if c in columns:
+            return F.col(c)
+    return None
+
+
 def _ctx_slices(toks: str, size: int):
     """(left, match, right) array slices of a hit's context over one
     token-array column — the single source of the KWIC slice
@@ -258,6 +274,7 @@ class Hits:
     def __init__(self, corpus, df: DataFrame):
         self.corpus = corpus
         self.df = df
+        self._page: int | None = None  # window() size: kwic keeps its order
 
     # -- sort-order plumbing ------------------------------------------------
     # A Spark orderBy is destroyed by the next join/shuffle, but the
@@ -341,8 +358,10 @@ class Hits:
         transforms keep a distributed plan. A prior sort's hidden
         ``_ordN`` keys lead the ordering, so pagination walks the
         SORTED hits like the reference."""
-        out = self.df.orderBy(*self._hit_order()).offset(first).limit(number)
-        return Hits(self.corpus, out)
+        out = Hits(self.corpus, self.df.orderBy(*self._hit_order())
+                   .offset(first).limit(number))
+        out._page = number
+        return out
 
     def sample(self, n: int | None = None, fraction: float | None = None,
                seed: int = 42) -> "Hits":
@@ -399,37 +418,44 @@ class Hits:
     def kwic(
         self, size: int | None = None, annotations: list[str] | None = None
     ) -> DataFrame:
-        """Keyword-in-context strings (reference Kwic.java:19-96).
+        """Keyword-in-context rows (reference Kwic.java:19-96): the hit's
+        own columns (capture groups, any key columns), every doc_stats
+        column of its document, and the context strings.
 
         ``annotations``: extra annotation views of the same context
         (reference Kwic carries EVERY annotation per context token —
         TestKwic.java:26-35 word/lemma/pos columns; BLS `listvalues`
         picks which appear in hit results). Each adds
         ``left_<a>/match_<a>/right_<a>`` columns, sliced from the same
-        joined row — one doc_id join total, all slices codegen."""
+        joined row — one doc_id join total, all slices codegen.
+
+        Rows come back in the hits' order when they have one: a window
+        (``window()``) in its own order, a sort in its key order. A kwic
+        over a whole unsorted hit set adds no sort."""
         if size is None:
             size = self.corpus.cfg.context_size
         # dedup user-supplied names (a repeated listvalues entry would
         # otherwise alias two identical columns and break resolution)
         anns = list(dict.fromkeys(annotations or []))
-        # ONE doc_id join carrying every needed token array; each view
-        # is three codegen slices over its array. KWIC displays the
-        # ORIGINAL word forms (the reference's forward index stores the
-        # case-preserved primary value and Kwic renders it,
-        # TestKwic.java "De"/"snelle"); the folded variants exist for
+        # ONE doc_id join carrying every needed token array and the
+        # document's metadata (the context store holds every doc_stats
+        # column); each view is three codegen slices over its array.
+        # KWIC displays the ORIGINAL word forms (the reference's forward
+        # index stores the case-preserved primary value and Kwic renders
+        # it, TestKwic.java "De"/"snelle"); the folded variants exist for
         # matching/grouping, not display.
         views = [("", "tokens")] + [
             (f"_{a}", f"ann_{a}" if a not in ("word", "") else "tokens")
             for a in anns
         ]
+        own = [c for c in self.df.columns if not c.startswith("_ord")]
+        meta = [c for c in self.corpus.doc_stats.columns if c not in own]
         tk = self.corpus.context_store.select(
-            "doc_id",
-            "conv_id",
-            "turn_idx",
+            "doc_id", *meta,
             *[F.col(src).alias(f"_toks{sfx}") for sfx, src in views],
         )
         j = self.df.join(tk, "doc_id")
-        cols = ["doc_id", "conv_id", "turn_idx", "start", "end"]
+        cols = [*own, *meta]
         for sfx, _src in views:
             left, match, right = _ctx_slices(f"_toks{sfx}", size)
             cols += [
@@ -437,11 +463,14 @@ class Hits:
                 F.array_join(match, " ").alias(f"match{sfx}"),
                 F.array_join(right, " ").alias(f"right{sfx}"),
             ]
-        # the join scrambles row order; re-assert a prior sort (the
-        # reference renders KWICs in the hits' own order, Kwics.java)
-        if self._order_cols:
-            j = j.orderBy(*self._hit_order())
-        return j.select(*cols)
+        # the join scrambles row order; re-assert the hits' own order
+        # (the reference renders KWICs in the hits' order, Kwics.java).
+        # On a window the limit plans the sort as one top-n
+        # (TakeOrderedAndProject), not a global sort.
+        if self._page is None and not self._order_cols:
+            return j.select(*cols)
+        out = j.orderBy(*self._hit_order()).select(*cols)
+        return out if self._page is None else out.limit(self._page)
 
     def concordance(self) -> DataFrame:
         """Original-content concordances (reference Concordances.java;
@@ -482,16 +511,16 @@ class Hits:
         Context keys read the configured context size.
 
         Inputs come from at most one context_store join (every token
-        array the criteria need, in one projection) and one metadata
-        join (doc_stats, or the tokenized table when a column such as an
-        XML ``meta_*`` field is not in doc_stats). Keys are codegen
+        array the criteria need, in one projection) and one doc_stats
+        join (``field:``, ``decade`` and ``fieldlen``; ``field:`` and
+        ``decade`` resolve through doc_key). Keys are codegen
         expressions over them, except the collator key (an
         Arrow-batched pandas UDF)."""
         from blacklab_spark.analysis import desensitize_col
 
         size = self.corpus.cfg.context_size
         arrays: dict[str, "F.Column"] = {}  # alias -> token-array expr
-        meta: set[str] = set()
+        stats = None  # doc_stats, joined when a criterion reads it
 
         def toks(ann: str, folded: bool, desensitize: bool = False) -> str:
             # alias of one token array in the context_store join: word
@@ -548,18 +577,14 @@ class Hits:
                 col = _context_words_key(
                     F.col(t), size, parse_context_spec(spec, size)
                 )
-            elif base == "field":
-                name = crit.split(":", 1)[1]
-                meta.add(name)
-                col = F.col(name)
-            elif crit == "decade":
-                meta.add("ts")
-                col = F.year("ts") - F.year("ts") % 10
-            elif crit == "fieldlen":
-                # HitPropertyDocumentLength analogue (annotated field
-                # length in tokens)
-                meta.add("num_tokens")
-                col = F.col("num_tokens")
+            elif base in ("field", "decade", "fieldlen"):
+                stats = self.corpus.doc_stats
+                # fieldlen: HitPropertyDocumentLength analogue (annotated
+                # field length in tokens)
+                col = F.col("num_tokens") if crit == "fieldlen" \
+                    else doc_key(crit, stats.columns)
+                if col is None:
+                    raise ValueError(f"unknown hit property: {crit!r}")
             elif crit in ("doc", "docid"):
                 # HitPropertyDoc / HitPropertyDocumentId (the pid IS
                 # derived from doc_id in this engine)
@@ -582,10 +607,11 @@ class Hits:
                 ),
                 "doc_id",
             )
-        if meta:
-            stats = self.corpus.doc_stats
-            src = stats if meta <= set(stats.columns) else self.corpus.tokenized
-            df = df.join(src.select("doc_id", *sorted(meta)), "doc_id")
+        if stats is not None:
+            # columns no key reads are pruned from the scan
+            df = df.join(stats.select(
+                "doc_id", *[c for c in stats.columns if c not in df.columns]
+            ), "doc_id")
         keys = [f"_k{n}" for n in range(len(cols))]
         return df.withColumns(dict(zip(keys, cols))), keys
 
@@ -659,16 +685,24 @@ class Hits:
             .orderBy(F.desc("n_hits"), "doc_id")
         )
 
-    def facets(self, *cols: str) -> dict[str, DataFrame]:
-        """Independent 1-D doc counts per criterion
-        (reference Facets.java:9)."""
-        docs = self.df.select("doc_id").distinct().join(self.corpus.doc_stats, "doc_id")
-        return {
-            c: docs.groupBy(c).agg(F.count(F.lit(1)).alias("n_docs")).orderBy(
-                F.desc("n_docs"), c
-            )
-            for c in cols
-        }
+    def facets(self, criteria: list[str]) -> DataFrame:
+        """Independent 1-D document counts, one per document criterion
+        (reference Facets.java:9): rows (facet, value, n_docs), value as
+        a string, by facet, then most documents first. The hit plan runs
+        once: one distinct doc-id set feeds every facet branch."""
+        docs = self.df.select("doc_id").distinct().join(
+            self.corpus.doc_stats, "doc_id"
+        )
+        out = None
+        for crit in criteria:
+            key = doc_key(crit, docs.columns)
+            if key is None:
+                raise ValueError(f"unknown document property: {crit!r}")
+            fc = docs.groupBy(key.cast("string").alias("value")).agg(
+                F.count(F.lit(1)).alias("n_docs")
+            ).select(F.lit(crit).alias("facet"), "value", "n_docs")
+            out = fc if out is None else out.unionByName(fc)
+        return out.orderBy("facet", F.desc("n_docs"), "value")
 
     # -- collocations -------------------------------------------------------------
     def collocations(

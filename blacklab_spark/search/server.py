@@ -8,8 +8,12 @@ endpoints). This module produces the same envelopes from the Spark
 engine: the parameter algebra and all heavy lifting stay in
 `search.facade` / `search.results` DataFrame plans — response assembly
 collects ONLY the requested page (≤ `number` rows, the BLS pageSize
-contract) plus its page-sized docInfos, so building a response is
-O(page), never O(corpus), regardless of result-set size.
+contract), so building a response is O(page), never O(corpus),
+regardless of result-set size. Each page is read once: its rows carry
+their documents' doc_stats columns (a hits page and a group's stored
+hits through `Hits.kwic`, a docs page through `Hits.per_doc` or
+`Corpus.doc_stats`), and `_doc_info` formats a docInfo from such a
+row, so no envelope looks its documents up again.
 
 Documented divergences from the reference:
 - totals are exact and `stillCounting` is false unless the caller asks
@@ -40,7 +44,10 @@ def _sort_docs(df, sort: str | None):
     DocProperty.deserialize: ``field:<name>``, ``decade``, ``id``,
     ``numhits`` — numhits descending by default like
     DocPropertyNumberOfHits.sortDescendingByDefault; ``-`` reverses).
-    Unknown criteria keep the default order."""
+    Document criteria resolve through results.doc_key. Unknown criteria
+    keep the default order."""
+    from blacklab_spark.search.results import doc_key
+
     if not sort:
         return df
     rev = sort.startswith("-")
@@ -51,19 +58,10 @@ def _sort_docs(df, sort: str | None):
     if crit in ("id", "docid"):
         c = F.col("doc_id")
         return df.orderBy(c.desc() if rev else c.asc())
-    if crit.startswith("field:"):
-        name = crit.split(":", 1)[1]
-        col = name if name in df.columns else (
-            f"meta_{name}" if f"meta_{name}" in df.columns else None
-        )
-        if col:
-            c = F.col(col)
-            return df.orderBy(c.desc() if rev else c.asc(), "doc_id")
+    key = doc_key(crit, df.columns)
+    if key is None:
         return df
-    if crit == "decade" and "ts" in df.columns:
-        d = F.year("ts") - F.year("ts") % 10
-        return df.orderBy(d.desc() if rev else d.asc(), "doc_id")
-    return df
+    return df.orderBy(key.desc() if rev else key.asc(), "doc_id")
 
 
 def _pid(row) -> str:
@@ -88,33 +86,23 @@ def _context_entry(row, side: str, annotations: list[str]) -> dict:
     return out
 
 
-def _doc_infos(corpus, doc_ids: list[int]) -> dict:
-    """Page-sized docInfos map (DStream.documentInfos, DStream.java:
-    101-136): every metadata field as a value list, plus lengthInTokens
-    and mayView. XML-format meta_* fields (tokenized-table columns)
-    are included alongside the canonical doc_stats projection."""
-    if not doc_ids:
-        return {}
-    stats = corpus.doc_stats
-    meta_cols = [c for c in corpus.tokenized.columns
-                 if c.startswith("meta_") and c not in stats.columns]
-    if meta_cols:
-        stats = stats.join(
-            corpus.tokenized.select("doc_id", *meta_cols), "doc_id"
-        )
-    rows = stats.filter(F.col("doc_id").isin(doc_ids)).collect()
-    infos = {}
-    for r in rows:
-        d = r.asDict()
-        meta = {
-            k: [str(v)]
-            for k, v in d.items()
-            if k not in ("doc_id", "segment_id", "num_tokens") and v is not None
-        }
-        meta["lengthInTokens"] = d["num_tokens"]
-        meta["mayView"] = True
-        infos[_pid(r)] = meta
-    return infos
+_NOT_METADATA = ("doc_id", "segment_id", "num_tokens")
+
+
+def _metadata_fields(corpus) -> list[str]:
+    """The doc_stats columns a docInfo lists as metadata fields."""
+    return [c for c in corpus.doc_stats.columns if c not in _NOT_METADATA]
+
+
+def _doc_info(row, fields: list[str]) -> dict:
+    """docInfo of one page row that carries its document's doc_stats
+    columns (DStream.documentInfo, DStream.java:101-136): every
+    metadata field in ``fields`` as a value list, plus lengthInTokens
+    and mayView."""
+    info = {k: [str(row[k])] for k in fields if row[k] is not None}
+    info["lengthInTokens"] = row["num_tokens"]
+    info["mayView"] = True
+    return info
 
 
 def _summary_common(search_param: dict, first: int, number: int,
@@ -171,8 +159,9 @@ def hits_response(
     tokenFrequencies envelope — the same dispatch the reference handler
     performs. ``explain=True`` adds the query-rewrite trace to the
     summary (RequestHandlerHits.java:84-100 explanation block). Extra
-    ``params`` pass through to the facade (filter, sort, sample,
-    hitfiltercrit, maxretrieve, usecontent, ...).
+    ``params`` pass through to the facade (filter, sample,
+    hitfiltercrit, maxretrieve, usecontent, ...); ``sort`` orders the
+    hit set here, before the page window.
     """
     t0 = time.time()
     echo = {"patt": patt, "first": first, "number": number,
@@ -194,14 +183,16 @@ def hits_response(
                              includegroupcontents)
 
     # ---- plain hits page ---------------------------------------------
-    from blacklab_spark.search.results import Hits
+    from blacklab_spark.search.results import Hits, parse_criteria
 
     anns = [a.strip() for a in listvalues.split(",") if a.strip()] \
         if listvalues else []
-    # full decorated hit set (sort/filter/sample applied), no window:
-    # the facade returns the bare hits DataFrame when no kwic/window
-    # params are passed
+    # full hit set (filter/sample/viewgroup applied), no window: the
+    # facade returns the bare hits DataFrame when no kwic/window params
+    # are passed. The sort is applied here, so its keys reach the
+    # window (the facade drops them from bare hits)
     maxcount = params.pop("maxcount", None)
+    sort = params.pop("sort", None)
     params.pop("omitemptycaptures", None)  # accepted; see divergences
     full = corpus.search(patt=patt, viewgroup=viewgroup, group=group,
                          **params)
@@ -219,25 +210,24 @@ def hits_response(
             _, n_docs = _num_hits(full)
     else:
         total, n_docs = _num_hits(full)
+    # ONE collect of the page: positions, capture groups, contexts and
+    # each hit's doc_stats columns, in the window's order (O(page))
     hits = Hits(corpus, full)
-    win = hits.window(first, number)
-    # page rows twice: once for positions + capture groups, once for
-    # per-annotation contexts — both jobs are O(page)
-    pos_rows = win.df.collect()
-    kwic_rows = win.kwic(wordsaroundhit, annotations=anns or None).collect()
-    ctx_by_key = {(r["doc_id"], r["start"], r["end"]): r for r in kwic_rows}
-
+    if sort:
+        hits = hits.sort_by(parse_criteria(sort))
+    rows = hits.window(first, number).kwic(
+        wordsaroundhit, annotations=anns or None
+    ).collect()
+    fields = _metadata_fields(corpus)
     cap_names = sorted(
         c[len("cap_"):-len("_start")]
-        for c in win.df.columns
+        for c in full.columns
         if c.startswith("cap_") and c.endswith("_start")
     )
-    out_hits = []
-    for r in pos_rows:
-        k = (r["doc_id"], r["start"], r["end"])
-        ctx = ctx_by_key.get(k)
-        h = {"docPid": _pid(ctx) if ctx else str(r["doc_id"]),
-             "start": r["start"], "end": r["end"]}
+    out_hits, infos = [], {}
+    for r in rows:
+        pid = _pid(r)
+        h = {"docPid": pid, "start": r["start"], "end": r["end"]}
         if cap_names:
             h["captureGroups"] = [
                 {"name": n, "start": r[f"cap_{n}_start"],
@@ -248,11 +238,12 @@ def hits_response(
                 # always-on here: empty captures are NULL (see module
                 # divergences) and already skipped by this check
             ]
-        if ctx is not None:
-            h["left"] = _context_entry(ctx, "left", anns)
-            h["match"] = _context_entry(ctx, "match", anns)
-            h["right"] = _context_entry(ctx, "right", anns)
+        h["left"] = _context_entry(r, "left", anns)
+        h["match"] = _context_entry(r, "match", anns)
+        h["right"] = _context_entry(r, "right", anns)
         out_hits.append(h)
+        if pid not in infos:
+            infos[pid] = _doc_info(r, fields)
 
     summary = _summary_common(echo, first, number, len(out_hits), total,
                               time.time() - t0)
@@ -263,7 +254,7 @@ def hits_response(
         "stoppedRetrievingHits": stopped_counting,
         "numberOfDocs": n_docs,
         "numberOfDocsRetrieved": n_docs,
-        **_doc_fields(corpus),
+        **_doc_fields(fields),
     })
     if explain:
         # {originalQuery, rewrittenQuery} (RequestHandlerHits explain
@@ -275,7 +266,7 @@ def hits_response(
     resp = {
         "summary": summary,
         "hits": out_hits,
-        "docInfos": _doc_infos(corpus, sorted({r["doc_id"] for r in pos_rows})),
+        "docInfos": infos,
     }
 
     # ---- facets entry (RequestHandlerHits facets block) --------------
@@ -301,14 +292,16 @@ def _hits_grouped(corpus, patt, group, echo, first, number,
     result (Hits.group_by: key columns, ``size``, ``n_docs``); only the
     requested page is collected. The summary totals come from one
     aggregation over the same keys (Hits.group_summary), so a document
-    counts once in numberOfDocs however many groups hold it.
+    counts once in numberOfDocs however many groups hold it; the
+    result rides on the group table, so a cached table computes it
+    once.
 
     Stored hits: restricted to the PAGE's groups first (a corpus can
     have millions of groups; only ≤`number` are in the response), then
     a row_number cap per group BEFORE the context join, then ONE kwic
-    pass over the capped set — never O(hits) on the driver (the
-    reference likewise stores at most maxHitsToStorePerGroup per
-    group)."""
+    collect over the capped set, which carries the group keys and the
+    docInfo columns too — never O(hits) on the driver (the reference
+    likewise stores at most maxHitsToStorePerGroup per group)."""
     from pyspark.sql.window import Window
 
     from blacklab_spark.search.results import Hits, parse_criteria
@@ -322,13 +315,17 @@ def _hits_grouped(corpus, patt, group, echo, first, number,
     hits = Hits(corpus, corpus.search(
         patt=patt, **{k: v for k, v in params.items() if k != "sort"}
     ))
-    totals = hits.group_summary(crits)
+    # the summary is computed once per group table: a cached table
+    # (usecache) keeps it, so a repeated request runs no rollup
+    totals = getattr(gdf, "_blspark_summary", None)
+    if totals is None:
+        totals = gdf._blspark_summary = hits.group_summary(crits)
 
     def ident(row, cols):
         return tuple(str(row[c]) for c in cols)
 
     by_group: dict[tuple, list] = {}
-    doc_ids: set[int] = set()
+    infos: dict[str, dict] = {}
     if contents and page:
         hk, keys = hits._with_keys(crits)
         gid = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
@@ -337,22 +334,25 @@ def _hits_grouped(corpus, patt, group, echo, first, number,
             hk.filter(gid.isin(["\x1f".join(ident(r, names)) for r in page]))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= max_stored)
+            .select(*hits.df.columns, *keys)
         )
-        cap_rows = capped.collect()
-        kw = Hits(corpus, capped.select(*hits.df.columns)) \
-            .kwic(wordsaroundhit or corpus.cfg.context_size).collect()
-        ctx = {(r["doc_id"], r["start"], r["end"]): r for r in kw}
-        for r in cap_rows:
-            c = ctx.get((r["doc_id"], r["start"], r["end"]))
-            if c is None:
-                continue
+        # one collect: each stored hit with its keys, context and doc
+        # metadata; a group lists its hits in (doc, start, end) order
+        rows = Hits(corpus, capped).kwic(
+            wordsaroundhit or corpus.cfg.context_size
+        ).collect()
+        fields = _metadata_fields(corpus)
+        rows.sort(key=lambda r: (r["doc_id"], r["start"], r["end"]))
+        for r in rows:
+            pid = _pid(r)
             by_group.setdefault(ident(r, keys), []).append({
-                "docPid": _pid(c), "start": r["start"], "end": r["end"],
-                "left": {"word": _split(c["left"])},
-                "match": {"word": _split(c["match"])},
-                "right": {"word": _split(c["right"])},
+                "docPid": pid, "start": r["start"], "end": r["end"],
+                "left": {"word": _split(r["left"])},
+                "match": {"word": _split(r["match"])},
+                "right": {"word": _split(r["right"])},
             })
-            doc_ids.add(r["doc_id"])
+            if pid not in infos:
+                infos[pid] = _doc_info(r, fields)
 
     groups = []
     for r in page:
@@ -382,17 +382,14 @@ def _hits_grouped(corpus, patt, group, echo, first, number,
     })
     resp = {"summary": summary, "hitGroups": groups}
     if contents:
-        resp["docInfos"] = _doc_infos(corpus, sorted(doc_ids))
+        resp["docInfos"] = infos
     return resp
 
 
-def _doc_fields(corpus) -> dict:
+def _doc_fields(fields: list[str]) -> dict:
     return {
         "docFields": {"pidField": "pid", "titleField": "conv_id"},
-        "metadataFieldDisplayNames": {
-            c: c for c in corpus.doc_stats.columns
-            if c not in ("doc_id", "segment_id", "num_tokens")
-        },
+        "metadataFieldDisplayNames": {c: c for c in fields},
     }
 
 
@@ -430,14 +427,14 @@ def docs_response(
         docs = _sort_docs(docs, sort) if sort else docs.orderBy("doc_id")
         page = docs.offset(first).limit(number).collect() \
             if first else docs.limit(number).collect()
-        infos = _doc_infos(corpus, [r["doc_id"] for r in page])
-        out = [{"docPid": _pid(r), "docInfo": infos.get(_pid(r), {})}
+        fields = _metadata_fields(corpus)
+        out = [{"docPid": _pid(r), "docInfo": _doc_info(r, fields)}
                for r in page]
         summary = _summary_common(echo, first, number, len(out), total,
                                   time.time() - t0)
         summary.update({"numberOfDocs": total,
                         "numberOfDocsRetrieved": total,
-                        **_doc_fields(corpus)})
+                        **_doc_fields(fields)})
         if include_tokens:
             # RequestHandlerDocs.java:57 tokensInMatchingDocuments
             summary["tokensInMatchingDocuments"] = (
@@ -453,7 +450,6 @@ def docs_response(
     page = per_doc.offset(first).limit(number).collect() \
         if first else per_doc.limit(number).collect()
     page_ids = [r["doc_id"] for r in page]
-    infos = _doc_infos(corpus, page_ids)
 
     # per-doc snippets (saved-responses/docs/*.json carry up to N KWIC
     # snippets per doc): one distributed job over the page's docs —
@@ -476,11 +472,11 @@ def docs_response(
                 "right": {"word": _split(r["right"])},
             })
 
+    fields = _metadata_fields(corpus)
     out = []
     for r in page:
-        pid = _pid(r)
-        entry = {"docPid": pid, "numberOfHits": r["n_hits"],
-                 "docInfo": infos.get(pid, {})}
+        entry = {"docPid": _pid(r), "numberOfHits": r["n_hits"],
+                 "docInfo": _doc_info(r, fields)}
         if wordsaroundhit is not None:
             entry["snippets"] = snips.get(r["doc_id"], [])
         out.append(entry)
@@ -499,7 +495,7 @@ def docs_response(
         "numberOfDocs": n_docs,
         "numberOfDocsRetrieved": n_docs,
         "stillCounting": False,
-        **_doc_fields(corpus),
+        **_doc_fields(fields),
     })
     return {"summary": summary, "docs": out}
 
@@ -510,19 +506,14 @@ def _docs_grouped(corpus, patt, group, echo, first, number, t0,
     saved-responses/docs-grouped/*.json): groups of documents by a
     metadata criterion, each with size, token count, and the group's
     share of the whole corpus (subcorpusSize, DStream.java:286-292)."""
-    col = group.split(":", 1)[1] if group.startswith("field:") else group
-    sort = params.pop("sort", None)  # DocGroupProperty: size/identity
-    key = (F.year("ts") - F.year("ts") % 10).alias("_grp") \
-        if col == "decade" else F.col(col).alias("_grp")
+    from blacklab_spark.search.results import doc_key
 
-    # metadata columns beyond the canonical transcript set (XML-format
-    # meta_<field> columns) live on the tokenized table, not the
-    # doc_stats projection
+    sort = params.pop("sort", None)  # DocGroupProperty: size/identity
     stats = corpus.doc_stats
-    if col != "decade" and col not in stats.columns:
-        stats = stats.join(
-            corpus.tokenized.select("doc_id", col), "doc_id"
-        )
+    key = doc_key(group, stats.columns)
+    if key is None:
+        raise ValueError(f"unknown document property: {group!r}")
+    key = key.alias("_grp")
 
     # matched docs (with hit counts when a pattern is given)
     if patt is not None:
@@ -534,8 +525,6 @@ def _docs_grouped(corpus, patt, group, echo, first, number, t0,
         )
     else:
         docs = corpus.search(**params).withColumn("n_hits", F.lit(0))
-        if col != "decade" and col not in docs.columns:
-            docs = docs.join(corpus.tokenized.select("doc_id", col), "doc_id")
     gdf = docs.groupBy(key).agg(
         F.count(F.lit(1)).alias("size"),
         F.sum("num_tokens").alias("tokens"),

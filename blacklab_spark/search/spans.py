@@ -622,17 +622,6 @@ def probe_steps(
     )
 
 
-def probe_neighbor(
-    corpus,
-    hits: DataFrame,
-    term: str,
-    direction: str = "right",
-    annotation: str = "word",
-) -> DataFrame:
-    """Single-step plain-term probe (the common case of probe_steps)."""
-    return probe_steps(corpus, hits, [(annotation, ("term", term))], direction)
-
-
 def sequence_with_gap(
     a: DataFrame, b: DataFrame, gmin: int, gmax: int | None
 ) -> DataFrame:
@@ -935,36 +924,8 @@ def capture(hits: DataFrame, name: str) -> DataFrame:
     )
 
 
-def filter_by_docs(hits: DataFrame, doc_ids: DataFrame) -> DataFrame:
-    """Restrict to docs matching a metadata query
-    (reference SpanQueryFiltered.java:23)."""
-    return hits.join(doc_ids.select("doc_id"), "doc_id", "leftsemi")
-
-
 def unique(hits: DataFrame) -> DataFrame:
     return hits.dropDuplicates([*HIT_COLS])
-
-
-def constrained(
-    hits: DataFrame,
-    corpus,
-    predicate,  # Callable[[dict[str, Column]], Column]
-    cap_names: list[str],
-    annotation: str = "word",
-) -> DataFrame:
-    """Global constraints `:: a.word = b.word` — evaluate an expression
-    over captured-group tokens via the forward index
-    (reference SpanQueryConstrained.java:174, MatchFilter.java:41).
-    Implemented as element_at() lookups into the doc's token array —
-    one broadcast-friendly equi-join on doc_id, no per-row Python."""
-    col = "tokens_i" if annotation in ("word", "word_i") else annotation
-    tk = corpus.context_store.select("doc_id", F.col(col).alias("_toks"))
-    joined = hits.join(tk, "doc_id")
-    env = {
-        name: F.element_at(F.col("_toks"), F.col(f"cap_{name}_start") + 1)
-        for name in cap_names
-    }
-    return joined.filter(predicate(env)).drop("_toks")
 
 
 def fuzzy_hits(corpus, term: str, max_edits: int = 2,
@@ -1008,17 +969,3 @@ def fuzzy_hits(corpus, term: str, max_edits: int = 2,
         "doc_id", F.col("pos").alias("start"), (F.col("pos") + 1).alias("end")
     )
     return _uniq_positions(corpus, annotation, out)
-
-
-def filter_ngrams(
-    corpus,
-    source: DataFrame,
-    op: str = "within",
-    min_len: int = 1,
-    max_len: int = 3,
-) -> DataFrame:
-    """N-grams of length [min,max] standing in relation ``op`` to a
-    source hit (reference SpanQueryFilterNGrams.java:205) — n-gram
-    windows from doc lengths, then the positional predicate."""
-    grams = any_token(corpus, min_len, max_len)
-    return position_filter(grams, source, op)

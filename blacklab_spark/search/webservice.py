@@ -348,13 +348,12 @@ class _Router:
             if len(rest) <= 2 and ann != "word":
                 from pyspark.sql import functions as F
 
+                from blacklab_spark.search.results import doc_key
+
                 stats = corpus.doc_stats
-                if ann in stats.columns:
-                    meta_src = stats.select(F.col(ann).cast("string"))
-                elif f"meta_{ann}" in corpus.tokenized.columns:
-                    meta_src = corpus.tokenized.select(
-                        F.col(f"meta_{ann}").cast("string").alias(ann)
-                    )
+                key = doc_key(ann, stats.columns)
+                if key is not None:
+                    meta_src = stats.select(key.cast("string").alias(ann))
             if meta_src is not None:
                 pref = q.get("term", "").lower()
                 vals = (

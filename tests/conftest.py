@@ -18,6 +18,24 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), ids of the Spark jobs it ran). The
+    listener bus is drained on both sides, so no job is missed or
+    counted late."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(fn):
+        bus.waitUntilEmpty(30_000)
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        out = fn()
+        bus.waitUntilEmpty(30_000)
+        return out, sorted(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def small_cfg():
     # small segments/blocks so multi-segment and multi-block paths are
     # actually exercised at test scale

@@ -62,24 +62,12 @@ def fine_tombstoned(small_corpus, fine_corpus, oracle, tmp_path_factory):
                       tmp_path_factory.mktemp("fine_tomb"))
 
 
-def _spark_jobs(sc, fn):
-    """(fn(), ids of the Spark jobs it ran). The listener bus is drained
-    on both sides, so no job is missed or counted late."""
-    bus = sc._jsc.sc().listenerBus()
-    tracker = sc.statusTracker()
-    bus.waitUntilEmpty(30_000)
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    out = fn()
-    bus.waitUntilEmpty(30_000)
-    return out, sorted(set(tracker.getJobIdsForGroup(None) or []) - before)
-
-
 def _scoring_tasks(sc, jobs) -> list[int]:
     """Task counts of the stages of ``jobs`` that ran the scoring UDF:
     those whose plan nodes include a FlatMap(Co)GroupsInArrow.
 
     Reads Spark internals over py4j: the listener bus's waitUntilEmpty
-    (in _spark_jobs), the status store's operationGraphForStage, and
+    (in the spark_jobs fixture), the status store's operationGraphForStage, and
     the plan node names in its RDD-scope clusters. The store keeps
     these with spark.ui.enabled=false. A Spark upgrade that renames the
     node or changes these private APIs makes this return [], which the
@@ -385,14 +373,27 @@ GROUP_SORT_JOB_BUDGET = {
 }
 
 
-def test_topk_job_count_floor(small_corpus, tombstoned):
+# Spark jobs per warm BLS envelope for '"word00003" []' (20-hit pages)
+# on the same corpus: each envelope collects its page once, and its
+# docInfos come from the page rows; a cached group table keeps its
+# summary.
+ENVELOPE_JOB_BUDGET = {
+    "hits page": 7,
+    "hits page on cached hits": 5,
+    "docs page": 6,
+    "docs listing": 3,
+    "grouped page with contents": 11,
+    "repeated cached grouped page": 1,
+}
+
+
+def test_topk_job_count_floor(small_corpus, tombstoned, spark_jobs):
     """Job budget per top-k path, call and collect together: a
     regression guard for a plan re-growing extra jobs (a tombstone
     read, a hydration join). Collecting the DataFrame an
     eager topk returns must run no job at all."""
     corpus, _ = small_corpus
     dead_corpus, _ = tombstoned
-    sc = corpus.spark.sparkContext
     role = "role = 'assistant'"
     paths = {
         "plain": lambda q: corpus.topk(q, k=5),
@@ -407,8 +408,8 @@ def test_topk_job_count_floor(small_corpus, tombstoned):
     used, collect_jobs = {}, {}
     for path, run in paths.items():
         run("word00001 word00002").collect()  # warm
-        df, call = _spark_jobs(sc, lambda: run("word00003 word00007"))
-        _, coll = _spark_jobs(sc, df.collect)
+        df, call = spark_jobs(lambda: run("word00003 word00007"))
+        _, coll = spark_jobs(df.collect)
         used[path] = len(call) + len(coll)
         collect_jobs[path] = len(coll)
     over = {p: n for p, n in used.items() if n > TOPK_JOB_BUDGET[p]}
@@ -417,30 +418,28 @@ def test_topk_job_count_floor(small_corpus, tombstoned):
     assert not eager, f"collecting an eager topk result ran jobs: {eager}"
 
 
-def test_find_count_job_budget(small_corpus, tombstoned):
+def test_find_count_job_budget(small_corpus, tombstoned, spark_jobs):
     """Job budget of a warm single-term count, with and without
     tombstones: a regression guard for the tombstones being read again
     per query (6 jobs against 2 when every access re-read them)."""
     corpus, _ = small_corpus
     dead_corpus, _ = tombstoned
-    sc = corpus.spark.sparkContext
     used = {}
     for path, c in (("plain", corpus), ("tombstoned", dead_corpus)):
         c.find('"word00001"').count()  # warm
-        _, jobs = _spark_jobs(sc, lambda: c.find('"word00003"').count())
+        _, jobs = spark_jobs(lambda: c.find('"word00003"').count())
         used[path] = len(jobs)
     over = {p: n for p, n in used.items() if n > FIND_COUNT_JOB_BUDGET[p]}
     assert not over, f"Spark jobs {used} over budget {FIND_COUNT_JOB_BUDGET}"
 
 
-def test_group_sort_job_budget(small_corpus):
+def test_group_sort_job_budget(small_corpus, spark_jobs):
     """Job budget of grouped and sorted requests (search and the BLS
     grouped envelope): a regression guard for a property plan that
     grows a join or a shuffle."""
     from blacklab_spark.search.server import hits_response
 
     corpus, _ = small_corpus
-    sc = corpus.spark.sparkContext
     patt = '"word00003" []'
 
     def grouped(g):
@@ -464,14 +463,42 @@ def test_group_sort_job_budget(small_corpus):
     used = {}
     for name, run in requests.items():
         run()  # warm
-        _, jobs = _spark_jobs(sc, run)
+        _, jobs = spark_jobs(run)
         used[name] = len(jobs)
     over = {n: k for n, k in used.items() if k > GROUP_SORT_JOB_BUDGET[n]}
     assert not over, f"Spark jobs {used} over budget {GROUP_SORT_JOB_BUDGET}"
 
 
+def test_envelope_job_budget(small_corpus, spark_jobs):
+    """Job budget of the BLS envelopes (hits, docs, grouped hits): a
+    regression guard for an envelope that reads its page twice or
+    looks its documents up again."""
+    from blacklab_spark.search.server import docs_response, hits_response
+
+    corpus, _ = small_corpus
+    patt = '"word00003" []'
+    requests = {
+        "hits page": lambda: hits_response(corpus, patt, number=20),
+        "hits page on cached hits": lambda: hits_response(
+            corpus, patt, first=20, number=20, usecache=True),
+        "docs page": lambda: docs_response(corpus, patt, number=20),
+        "docs listing": lambda: docs_response(corpus, number=20),
+        "grouped page with contents": lambda: hits_response(
+            corpus, patt, group="field:role", includegroupcontents=True),
+        "repeated cached grouped page": lambda: hits_response(
+            corpus, patt, group="field:role", usecache=True),
+    }
+    used = {}
+    for name, run in requests.items():
+        run()  # warm
+        _, jobs = spark_jobs(run)
+        used[name] = len(jobs)
+    over = {n: k for n, k in used.items() if k > ENVELOPE_JOB_BUDGET[n]}
+    assert not over, f"Spark jobs {used} over budget {ENVELOPE_JOB_BUDGET}"
+
+
 def test_scoring_runs_one_task_per_core(small_corpus, fine_corpus,
-                                        fine_tombstoned, oracle):
+                                        fine_tombstoned, oracle, spark_jobs):
     """With more segments (32) than cores (8), every top-k plan scores
     in one wave: its scoring stage runs at most defaultParallelism
     Python tasks, each scoring several segments, and the ranking is
@@ -487,8 +514,8 @@ def test_scoring_runs_one_task_per_core(small_corpus, fine_corpus,
         "tombstoned": (dead_corpus, None, live),
     }
     for path, (corpus, filter_expr, allowed) in paths.items():
-        rows, jobs = _spark_jobs(
-            sc, lambda: corpus.topk(q, k=10, filter_expr=filter_expr).collect())
+        rows, jobs = spark_jobs(
+            lambda: corpus.topk(q, k=10, filter_expr=filter_expr).collect())
         tasks = _scoring_tasks(sc, jobs)
         assert tasks, (f"{path}: no scoring stage found in jobs {jobs} "
                        "(see _scoring_tasks for the Spark internals it reads)")

@@ -52,8 +52,7 @@ def test_fuzzy_hits(micro):
 
 
 def test_filter_ngrams(micro):
-    ent = S.tag_spans(micro, "entity")
-    grams = S.filter_ngrams(micro, ent, "within", 2, 2)
+    grams = micro.find("[]{2} within <entity/>").df
     got = sorted((r["doc_id"], r["start"], r["end"]) for r in grams.collect())
     # bigrams within entity [0,4) of doc0: (0,2),(1,3),(2,4); entity [6,9): (6,8),(7,9); doc2 entity [1,3): (1,3)
     assert (0, 0, 2) in got and (0, 7, 9) in got and (2, 1, 3) in got

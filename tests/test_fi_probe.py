@@ -57,10 +57,11 @@ def test_probe_left_equals_join(small_corpus, probing_corpus):
 def test_probe_neighbor_unit(small_corpus):
     corpus, _ = small_corpus
     anchor = S.term_hits(corpus, "word00050")
-    probed = S.probe_neighbor(corpus, anchor, "word00001", "right")
+    step = [("word", ("term", "word00001"))]
+    probed = S.probe_steps(corpus, anchor, step, "right")
     joined = S.sequence(anchor, S.term_hits(corpus, "word00001"))
     assert hits(probed) == hits(joined)
-    probed_l = S.probe_neighbor(corpus, anchor, "word00001", "left")
+    probed_l = S.probe_steps(corpus, anchor, step, "left")
     joined_l = S.sequence(S.term_hits(corpus, "word00001"), anchor)
     assert hits(probed_l) == hits(joined_l)
 

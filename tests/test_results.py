@@ -83,8 +83,9 @@ def test_per_doc_and_facets(micro):
     h = micro.find('"the"')
     pd_ = {r["doc_id"]: r["n_hits"] for r in h.per_doc().collect()}
     assert pd_ == {0: 2, 2: 1, 3: 1}
-    f = h.facets("role")["role"].collect()
-    assert f[0]["role"] == "user" and f[0]["n_docs"] == 3
+    f = h.facets(["role"]).collect()
+    assert f[0]["facet"] == "role"
+    assert f[0]["value"] == "user" and f[0]["n_docs"] == 3
 
 
 def test_collocations(micro):

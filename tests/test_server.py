@@ -371,6 +371,22 @@ def test_hits_envelope_filter_and_sort_passthrough(small_corpus):
         assert info["role"] == ["user"]
 
 
+def test_hits_envelope_page_keeps_sort_order(small_corpus):
+    # a sorted hits page is the same window of the same sorted hits as
+    # the facade's, in the same order
+    corpus, _ = small_corpus
+    pid = {r["doc_id"]: f"{r['conv_id']}/{r['turn_idx']}"
+           for r in corpus.doc_stats.select(
+               "doc_id", "conv_id", "turn_idx").collect()}
+    patt = '"word00003" []'
+    for sort in ("hit", "-field:role"):
+        want = [(pid[r["doc_id"]], r["start"])
+                for r in corpus.search(patt=patt, sort=sort, first=20,
+                                       number=10).collect()]
+        resp = hits_response(corpus, patt, sort=sort, first=20, number=10)
+        assert [(h["docPid"], h["start"]) for h in resp["hits"]] == want
+
+
 def test_docs_sort_properties(small_corpus):
     # DocProperty sort on /docs (reference DocProperty.deserialize):
     # numhits desc-by-default, -numhits asc, id, field:<name>
@@ -448,3 +464,111 @@ def test_docs_includetokencount(small_corpus):
     resp = docs_response(corpus, filter="role:user", number=2,
                          includetokencount=True)
     assert resp["summary"]["tokensInMatchingDocuments"] > 0
+
+
+@pytest.fixture(scope="module")
+def meta_corpus(spark, tmp_path_factory):
+    """200 synth turns with two XML-style metadata columns on the
+    tokenized table: a string ``meta_title`` and a map ``meta_fields``.
+    Returns (corpus, {docPid: (title, fields)})."""
+    from pyspark.sql import functions as F
+
+    from blacklab_spark.synth import generate_pandas
+
+    pdf = generate_pandas(200, seed=7)
+    titles = ("alpha", "beta", "gamma")
+    pdf["meta_title"] = [titles[i % 3] for i in range(len(pdf))]
+    sdf = spark.createDataFrame(pdf).withColumn(
+        "meta_fields",
+        F.create_map(F.lit("genre"), F.when(F.col("turn_idx") % 2 == 0,
+                                            "chat").otherwise("news")),
+    )
+    d = str(tmp_path_factory.mktemp("metasrv") / "idx")
+    corpus = Corpus.build(spark, sdf, d,
+                          EngineConfig(segment_size=64, block_size=16))
+    meta = {
+        f"{c}/{t}": (title, {"genre": "chat" if t % 2 == 0 else "news"})
+        for c, t, title in zip(pdf["conv_id"], pdf["turn_idx"],
+                               pdf["meta_title"])
+    }
+    return corpus, meta
+
+
+def test_meta_fields_in_every_envelope(meta_corpus):
+    """XML-style meta_* columns read like the transcript columns: in
+    docInfos, filters, hit/doc/docs-only groupings, facets, doc sorts
+    and metadata autocomplete."""
+    import urllib.request
+    from collections import Counter
+
+    from blacklab_spark.search.webservice import serve
+
+    corpus, meta = meta_corpus
+    patt = '"word00003"'
+    pids = {r["doc_id"]: f"{r['conv_id']}/{r['turn_idx']}"
+            for r in corpus.doc_stats.select(
+                "doc_id", "conv_id", "turn_idx").collect()}
+    hit_pids = [pids[r["doc_id"]]
+                for r in corpus.find(patt).df.select("doc_id").collect()]
+    assert len(set(hit_pids)) > 3
+    hits_by_title = Counter(meta[p][0] for p in hit_pids)
+    docs_by_title = Counter(meta[p][0] for p in set(hit_pids))
+
+    def check_info(pid, info):
+        title, fields = meta[pid]
+        assert info["meta_title"] == [title]
+        assert info["meta_fields"] == [str(fields)]
+        assert info["lengthInTokens"] > 0 and info["mayView"] is True
+
+    resp = hits_response(corpus, patt, number=len(hit_pids))
+    assert len(resp["hits"]) == len(hit_pids)
+    assert set(resp["docInfos"]) == set(hit_pids)
+    for pid, info in resp["docInfos"].items():
+        check_info(pid, info)
+    resp = docs_response(corpus, patt, number=len(hit_pids))
+    for d in resp["docs"]:
+        check_info(d["docPid"], d["docInfo"])
+    resp = hits_response(corpus, patt, group="field:meta_title",
+                         includegroupcontents=True)
+    for pid, info in resp["docInfos"].items():
+        check_info(pid, info)
+
+    # filter on a meta_* field
+    resp = hits_response(corpus, patt, filter="meta_title:beta")
+    assert resp["summary"]["numberOfHits"] == hits_by_title["beta"]
+
+    # groupings: hits, docs with a pattern, docs without one
+    resp = hits_response(corpus, patt, group="field:meta_title")
+    assert {g["identityDisplay"]: g["size"] for g in resp["hitGroups"]} \
+        == dict(hits_by_title)
+    resp = docs_response(corpus, patt, group="field:meta_title")
+    assert {g["identityDisplay"]: g["size"] for g in resp["docGroups"]} \
+        == dict(docs_by_title)
+    all_docs = Counter(t for t, _ in meta.values())
+    resp = docs_response(corpus, group="field:meta_title")
+    assert {g["identityDisplay"]: g["size"] for g in resp["docGroups"]} \
+        == dict(all_docs)
+    for group in ("field:meta_title", "field:title", "meta_title"):
+        rows = corpus.search(group=group).collect()
+        assert {r[0]: r["n_docs"] for r in rows} == dict(all_docs), group
+
+    # facets
+    resp = hits_response(corpus, patt, number=1, facets="field:meta_title")
+    assert {v["value"]: v["size"]
+            for v in resp["facets"]["field:meta_title"]} \
+        == dict(docs_by_title)
+
+    # a doc sort by the field's short name
+    resp = docs_response(corpus, number=len(meta), sort="field:title")
+    titles = [d["docInfo"]["meta_title"][0] for d in resp["docs"]]
+    assert titles == sorted(t for t, _ in meta.values())
+
+    # metadata autocomplete by the field's short name
+    srv = serve({"m": corpus}, port=0)
+    try:
+        url = (f"http://127.0.0.1:{srv.server_address[1]}"
+               "/m/autocomplete/title?term=Al")
+        with urllib.request.urlopen(url, timeout=120) as r:
+            assert json.loads(r.read().decode()) == ["alpha"]
+    finally:
+        srv.shutdown()

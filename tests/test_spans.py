@@ -4,7 +4,6 @@ TestSpansAnd, TestSpansExpansion, TestSpansPositionFilter,
 TestSpansRepetition … in core/src/test/.../search/lucene/)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from blacklab_spark.config import EngineConfig
 from blacklab_spark.corpus import Corpus
@@ -165,13 +164,7 @@ def test_edge_and_capture(micro):
 
 def test_constrained(micro):
     # a:[] b:[] :: a.word = b.word  adjacent equal words: doc1 'mier mier' x2, 'noot noot', 'aap aap' x3
-    any1 = S.any_token(micro, 1, 1)
-    a = S.capture(any1, "a")
-    b = S.capture(any1, "b")
-    seq = S.sequence(a, b)
-    got = S.constrained(
-        seq, micro, lambda env: env["a"] == env["b"], ["a", "b"]
-    )
+    got = micro.find("a:[] b:[] :: a.word = b.word").df
     assert hits(got) == [
         (1, 3, 5),
         (1, 4, 6),
@@ -183,9 +176,8 @@ def test_constrained(micro):
 
 
 def test_filter_by_docs(micro):
-    the = S.term_hits(micro, "the")
-    docs = micro.doc_stats.filter(F.col("conv_id") == "doc0").select("doc_id")
-    assert hits(S.filter_by_docs(the, docs)) == [(0, 0, 1), (0, 6, 7)]
+    the = micro.find('"the"').filter_docs("conv_id = 'doc0'")
+    assert hits(the.df) == [(0, 0, 1), (0, 6, 7)]
 
 
 def test_repetition_long_run_no_planning_jobs(spark, tmp_path):

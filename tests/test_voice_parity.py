@@ -142,9 +142,8 @@ def test_metadata_parity(voice):
     """pid + title metadata extracted through the blf.yaml match the
     reference's docInfos."""
     ref = _saved("docs", "any token")["docs"]
-    # meta_* columns live on the tokenized table (doc_stats is the
-    # fixed canonical projection)
-    rows = voice.tokenized.select("conv_id", "meta_pid", "meta_title").collect()
+    # meta_* columns are document metadata: doc_stats carries them
+    rows = voice.doc_stats.select("conv_id", "meta_pid", "meta_title").collect()
     ours = {r["meta_pid"]: r["meta_title"] for r in rows}
     assert len(ref) == 3
     for d in ref:
