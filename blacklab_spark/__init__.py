@@ -21,9 +21,20 @@ Python kernels are vectorized numpy inside Arrow `applyInArrow` /
 `mapInArrow` (posting codec, WAND scoring).
 """
 
-from blacklab_spark.config import EngineConfig
-from blacklab_spark.corpus import Corpus
-
 __version__ = "0.1.0"
 
 __all__ = ["EngineConfig", "Corpus", "__version__"]
+
+
+def __getattr__(name: str):
+    # lazy (PEP 562): ``python -m blacklab_spark.worker_daemon`` runs
+    # this file before it chooses where pyspark is imported from
+    if name == "EngineConfig":
+        from blacklab_spark.config import EngineConfig
+
+        return EngineConfig
+    if name == "Corpus":
+        from blacklab_spark.corpus import Corpus
+
+        return Corpus
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -155,11 +155,12 @@ def _seg_partitioned(corpus, df: DataFrame, n_queries: int) -> DataFrame:
     """Hash-repartition ``df`` on segment_id for the scoring kernel.
 
     A single query spends 1-20 ms per segment in the kernel, while every
-    wave of Python tasks costs a fixed 0.1-0.2 s (on local[4], a no-op
-    applyInPandas over 13 groups took 0.55-0.83 s in 13 tasks, 0.27-0.42
-    s in 4), so it scores in one task per core: min(n_segments,
-    defaultParallelism) partitions, each task scoring its segments one
-    after another. A batch multiplies the kernel time per segment by its
+    wave of Python tasks costs a fixed ~0.07 s, even with the workers'
+    0.2 s per-task archive re-read gone (worker_daemon.py; on local[4],
+    a no-op applyInPandas over 13 groups took 0.26-0.58 s in 13 tasks,
+    0.12-0.27 s in 4), so it scores in one task per core:
+    min(n_segments, defaultParallelism) partitions, each task scoring
+    its segments one after another. A batch multiplies the kernel time per segment by its
     query count, and then the hash's uneven share of segments per task
     costs more than the extra waves (256 queries over 13 segments of 32k
     docs on local[4]: 28.5 q/s in 4 tasks, 34.9 q/s in 13), so a batch

@@ -408,6 +408,9 @@ def make_handler(corpora: dict, manager=None):
     router = _Router(corpora, manager=manager)
 
     class Handler(BaseHTTPRequestHandler):
+        # set by serve(); see its docstring
+        trust_user_header = False
+
         def do_GET(self):  # noqa: N802 - stdlib API
             self._respond({})
 
@@ -442,9 +445,13 @@ def make_handler(corpora: dict, manager=None):
                 q.update(extra_params)
                 # stand-in for the reference's pluggable auth
                 # (AuthDebugFixed / AuthRequestAttribute read a userid
-                # from the request the same way); a fronting proxy that
-                # authenticates sets this header
-                user = self.headers.get("X-BlackLab-User") or None
+                # from the request the same way): only a server behind
+                # an authenticating proxy that sets this header trusts
+                # it; anywhere else any client could claim any user
+                user = (
+                    self.headers.get("X-BlackLab-User") or None
+                    if self.trust_user_header else None
+                )
                 status, body = router.handle(
                     u.path, _coerce(q), method=method, files=files,
                     user=user,
@@ -483,7 +490,8 @@ def make_handler(corpora: dict, manager=None):
 
 
 def serve(corpora: dict, port: int = 8080, host: str = "127.0.0.1",
-          user_dir: str | None = None, spark=None):
+          user_dir: str | None = None, spark=None,
+          trust_user_header: bool = False):
     """Start the adapter; returns the (already started) server object.
     Call ``.shutdown()`` to stop. ThreadingHTTPServer: Spark job
     submission is thread-safe, concurrent requests just become
@@ -492,7 +500,12 @@ def serve(corpora: dict, port: int = 8080, host: str = "127.0.0.1",
     ``user_dir`` enables the index-management surface (create / upload /
     delete user corpora, register input formats — the reference's
     user-area, RequestHandlerCreateIndex.java etc.); without it those
-    routes answer 403 like an unauthenticated reference server."""
+    routes answer 403 like an unauthenticated reference server.
+
+    ``trust_user_header`` takes the requesting user from the
+    ``X-BlackLab-User`` header. Set it only behind a proxy that
+    authenticates users and sets that header itself; otherwise every
+    request is unauthenticated."""
     manager = None
     if user_dir is not None:
         from blacklab_spark.search.manage import IndexManager
@@ -505,7 +518,9 @@ def serve(corpora: dict, port: int = 8080, host: str = "127.0.0.1",
                 )
             spark = next(iter(corpora.values())).spark
         manager = IndexManager(spark, user_dir, corpora)
-    srv = ThreadingHTTPServer((host, port), make_handler(corpora, manager))
+    handler = make_handler(corpora, manager)
+    handler.trust_user_header = trust_user_header
+    srv = ThreadingHTTPServer((host, port), handler)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     return srv

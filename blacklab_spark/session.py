@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Python workers import pyspark from the installed package, not from
+# Spark's zip archives, so no task pays CPython <= 3.11's re-read of
+# every archive in importlib.invalidate_caches() (worker_daemon.py)
+WORKER_CONF = {"spark.python.daemon.module": "blacklab_spark.worker_daemon"}
+_PACKAGE_HOME = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _default_mem() -> str:
     """Size the local-mode heap to the machine: many concurrent tasks
     over columnar data need real headroom or GC dominates wall-clock."""
@@ -86,6 +93,10 @@ def get_spark(
         # translates to a data-source In for pushdown purposes.
         .config("spark.sql.optimizer.inSetConversionThreshold", "10")
         .config("spark.ui.enabled", "false")
+        .config(map=WORKER_CONF)
+        # the daemon imports this package before any task ships files,
+        # so the workers see the driver's copy wherever they start
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_HOME)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -2,7 +2,8 @@
 protocol (reference server/ webapp, RequestHandler.java:54-73 routes):
 
     spark-submit --py-files dist/blacklab_spark.zip jobs/bls_server.py \
-        [--port 8080] [--host 0.0.0.0] [--cpus N] NAME=INDEX_DIR ...
+        [--port 8080] [--host 0.0.0.0] [--cpus N] [--user-dir DIR] \
+        [--trust-user-header] NAME=INDEX_DIR ...
 
 Each NAME=INDEX_DIR pair mounts one index at /NAME (so
 `GET /NAME/hits?patt="word"` etc.). Pure-stdlib HTTP in front of the
@@ -30,6 +31,10 @@ def main() -> None:
                     help="directory for user-created corpora; enables "
                          "POST / (create), POST /<corpus>/docs (upload), "
                          "DELETE /<corpus>, /input-formats management")
+    ap.add_argument("--trust-user-header", action="store_true",
+                    help="take the user id from the X-BlackLab-User "
+                         "header; only behind a proxy that "
+                         "authenticates users and sets it")
     ap.add_argument("mounts", nargs="*", metavar="NAME=INDEX_DIR")
     args = ap.parse_args()
 
@@ -49,7 +54,8 @@ def main() -> None:
     if not corpora and not args.user_dir:
         ap.error("mount at least one NAME=INDEX_DIR or pass --user-dir")
     srv = serve(corpora, port=args.port, host=args.host,
-                user_dir=args.user_dir, spark=spark)
+                user_dir=args.user_dir, spark=spark,
+                trust_user_header=args.trust_user_header)
     print(f"listening on http://{args.host}:{srv.server_address[1]}/")
     try:
         import threading

@@ -52,8 +52,12 @@ def main() -> None:
 
     from blacklab_spark.config import EngineConfig
     from blacklab_spark.corpus import Corpus
+    from blacklab_spark.session import WORKER_CONF
 
-    spark = SparkSession.builder.appName("blacklab-build-index").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("blacklab-build-index")
+        .config(map=WORKER_CONF).getOrCreate()
+    )
     src = args.input
     extra_spans = None
     if args.fmt:

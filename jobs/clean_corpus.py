@@ -32,8 +32,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from blacklab_spark.pipeline.clean import clean_corpus
+    from blacklab_spark.session import WORKER_CONF
 
-    spark = SparkSession.builder.appName("blacklab-clean").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("blacklab-clean")
+        .config(map=WORKER_CONF).getOrCreate()
+    )
     docs = spark.read.parquet(args.input)
 
     t0 = time.time()

@@ -42,15 +42,18 @@ def main() -> None:
     with open(args.config_file) as f:
         config = yaml.safe_load(f)
 
+    from blacklab_spark.session import WORKER_CONF, get_spark
+
     # under spark-submit an active/configured session exists; a bare
     # standalone run falls back to the project's local session (proper
     # driver memory — the default 1g heap OOMs on real corpora)
     active = SparkSession.getActiveSession()
     if active is not None or os.environ.get("SPARK_ENV_LOADED"):
-        spark = SparkSession.builder.appName("frequency-tool").getOrCreate()
+        spark = (
+            SparkSession.builder.appName("frequency-tool")
+            .config(map=WORKER_CONF).getOrCreate()
+        )
     else:
-        from blacklab_spark.session import get_spark
-
         spark = get_spark("frequency-tool")
     corpus = Corpus.open(spark, args.index_dir)
     for name, df in frequency_lists(corpus, config).items():

@@ -30,8 +30,12 @@ def main() -> None:
     args = ap.parse_args()
 
     from blacklab_spark.corpus import Corpus
+    from blacklab_spark.session import WORKER_CONF
 
-    spark = SparkSession.builder.appName("blacklab-query").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("blacklab-query")
+        .config(map=WORKER_CONF).getOrCreate()
+    )
     corpus = Corpus.open(spark, args.index)
 
     t0 = time.time()

@@ -42,7 +42,8 @@ def _multipart(files: list[tuple[str, str, bytes]],
 def mgd(small_corpus, tmp_path_factory):
     corpus, _ = small_corpus
     user_dir = str(tmp_path_factory.mktemp("userdir"))
-    srv = serve({"transcripts": corpus}, port=0, user_dir=user_dir)
+    srv = serve({"transcripts": corpus}, port=0, user_dir=user_dir,
+                trust_user_header=True)
     port = srv.server_address[1]
 
     def req(method: str, path: str, body: bytes | None = None,
@@ -227,6 +228,32 @@ def test_private_corpus_enforcement(mgd):
     assert status == 403 and body["error"]["code"] == "NOT_AUTHORIZED"
     status, body = mgd("DELETE", "/priv", user="alice")
     assert status == 200
+
+
+def test_user_header_ignored_unless_trusted(small_corpus, tmp_path):
+    """Without ``trust_user_header`` any client could claim any user by
+    sending X-BlackLab-User, so the server treats every request as
+    unauthenticated: a corpus created "as alice" gets no owner."""
+    corpus, _ = small_corpus
+    srv = serve({"transcripts": corpus}, port=0, user_dir=str(tmp_path))
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def req(method, path, body=None):
+        r = urllib.request.Request(base + path, data=body, method=method)
+        r.add_header("X-BlackLab-User", "alice")
+        r.add_header("Content-Type", "application/x-www-form-urlencoded")
+        with urllib.request.urlopen(r, timeout=300) as resp:
+            return json.loads(resp.read().decode())
+
+    try:
+        assert req("GET", "/")["user"]["loggedIn"] is False
+        req("POST", "/", b"name=claimed&format=txt")
+        with open(os.path.join(str(tmp_path), "claimed",
+                               "corpus.json")) as f:
+            assert "owner" not in json.load(f)
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 USER_BLF = """\
