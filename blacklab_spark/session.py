@@ -9,9 +9,16 @@ from pyspark.sql import SparkSession
 
 # Python workers import pyspark from the installed package, not from
 # Spark's zip archives, so no task pays CPython <= 3.11's re-read of
-# every archive in importlib.invalidate_caches() (worker_daemon.py)
-WORKER_CONF = {"spark.python.daemon.module": "blacklab_spark.worker_daemon"}
-_PACKAGE_HOME = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# every archive in importlib.invalidate_caches() (worker_daemon.py).
+# The daemon imports this package before any task ships files, so the
+# workers get the driver's copy of it on their path with it: only
+# workers on the driver's machine (a local master) can use this conf.
+WORKER_CONF = {
+    "spark.python.daemon.module": "blacklab_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
+}
 
 
 def _default_mem() -> str:
@@ -94,11 +101,32 @@ def get_spark(
         .config("spark.sql.optimizer.inSetConversionThreshold", "10")
         .config("spark.ui.enabled", "false")
         .config(map=WORKER_CONF)
-        # the daemon imports this package before any task ships files,
-        # so the workers see the driver's copy wherever they start
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_HOME)
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def submitted_spark(app_name: str) -> SparkSession:
+    """The session of a ``jobs/`` script, whose master and confs come
+    from ``spark-submit`` (``local[*]`` for a bare ``python`` run).
+
+    Adds WORKER_CONF only for a local master. A cluster's executors
+    start their Python workers before ``--py-files`` reaches them
+    (YARN aside), so they could not import the daemon and keep
+    Spark's stock ``pyspark.daemon``.
+    """
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    submitted = SparkConf()
+    builder = SparkSession.builder.appName(app_name)
+    master = submitted.get("spark.master", "local[*]")
+    if master == "local" or master.startswith("local["):
+        conf = dict(WORKER_CONF)
+        key = "spark.executorEnv.PYTHONPATH"
+        if submitted.contains(key):
+            conf[key] = os.pathsep.join([submitted.get(key), conf[key]])
+        builder = builder.config(map=conf)
     return builder.getOrCreate()

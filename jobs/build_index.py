@@ -32,7 +32,6 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
 
 # standalone runs (no --py-files): the repo root is the package home
 sys.path.insert(
@@ -52,12 +51,9 @@ def main() -> None:
 
     from blacklab_spark.config import EngineConfig
     from blacklab_spark.corpus import Corpus
-    from blacklab_spark.session import WORKER_CONF
+    from blacklab_spark.session import submitted_spark
 
-    spark = (
-        SparkSession.builder.appName("blacklab-build-index")
-        .config(map=WORKER_CONF).getOrCreate()
-    )
+    spark = submitted_spark("blacklab-build-index")
     src = args.input
     extra_spans = None
     if args.fmt:

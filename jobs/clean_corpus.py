@@ -28,16 +28,12 @@ def main() -> None:
     ap.add_argument("--jaccard", type=float, default=0.8)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from blacklab_spark.pipeline.clean import clean_corpus
-    from blacklab_spark.session import WORKER_CONF
+    from blacklab_spark.session import submitted_spark
 
-    spark = (
-        SparkSession.builder.appName("blacklab-clean")
-        .config(map=WORKER_CONF).getOrCreate()
-    )
+    spark = submitted_spark("blacklab-clean")
     docs = spark.read.parquet(args.input)
 
     t0 = time.time()

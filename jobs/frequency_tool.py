@@ -42,17 +42,14 @@ def main() -> None:
     with open(args.config_file) as f:
         config = yaml.safe_load(f)
 
-    from blacklab_spark.session import WORKER_CONF, get_spark
+    from blacklab_spark.session import get_spark, submitted_spark
 
     # under spark-submit an active/configured session exists; a bare
     # standalone run falls back to the project's local session (proper
     # driver memory — the default 1g heap OOMs on real corpora)
     active = SparkSession.getActiveSession()
     if active is not None or os.environ.get("SPARK_ENV_LOADED"):
-        spark = (
-            SparkSession.builder.appName("frequency-tool")
-            .config(map=WORKER_CONF).getOrCreate()
-        )
+        spark = submitted_spark("frequency-tool")
     else:
         spark = get_spark("frequency-tool")
     corpus = Corpus.open(spark, args.index_dir)

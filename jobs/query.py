@@ -17,8 +17,6 @@ import argparse
 import json
 import time
 
-from pyspark.sql import SparkSession
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -30,12 +28,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from blacklab_spark.corpus import Corpus
-    from blacklab_spark.session import WORKER_CONF
+    from blacklab_spark.session import submitted_spark
 
-    spark = (
-        SparkSession.builder.appName("blacklab-query")
-        .config(map=WORKER_CONF).getOrCreate()
-    )
+    spark = submitted_spark("blacklab-query")
     corpus = Corpus.open(spark, args.index)
 
     t0 = time.time()
