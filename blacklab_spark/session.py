@@ -11,8 +11,9 @@ from pyspark.sql import SparkSession
 # Spark's zip archives, so no task pays CPython <= 3.11's re-read of
 # every archive in importlib.invalidate_caches() (worker_daemon.py).
 # The daemon imports this package before any task ships files, so the
-# workers get the driver's copy of it on their path with it: only
-# workers on the driver's machine (a local master) can use this conf.
+# conf also puts the driver's copy of the package on the workers'
+# PYTHONPATH; only workers on the driver's machine (a local master)
+# can use it.
 WORKER_CONF = {
     "spark.python.daemon.module": "blacklab_spark.worker_daemon",
     "spark.executorEnv.PYTHONPATH": os.path.dirname(
@@ -113,9 +114,9 @@ def submitted_spark(app_name: str) -> SparkSession:
     from ``spark-submit`` (``local[*]`` for a bare ``python`` run).
 
     Adds WORKER_CONF only for a local master. A cluster's executors
-    start their Python workers before ``--py-files`` reaches them
-    (YARN aside), so they could not import the daemon and keep
-    Spark's stock ``pyspark.daemon``.
+    cannot use the driver's path and (YARN aside) start their Python
+    workers before ``--py-files`` reaches them, so they keep Spark's
+    stock ``pyspark.daemon``.
     """
     from pyspark import SparkConf, SparkContext
 
